@@ -65,6 +65,7 @@ def steal(spec: Spec, source, sink_dsn: str, *, concurrency: int | None = None,
     Tables without a spec entry copy verbatim (the reference's default for
     unconfigured tables, engine.go:95-98).
     """
+    from klepto_spark.sinks.sqltext import shared_output
     from klepto_spark.sinks.writers import write_table
 
     t0 = time.time()
@@ -123,7 +124,8 @@ def steal(spec: Spec, source, sink_dsn: str, *, concurrency: int | None = None,
     if only_tables is not None:
         wanted = set(only_tables)
         tables = [t for t in tables if t in wanted]
-    with ThreadPoolExecutor(max_workers=max(1, concurrency)) as pool:
+    with (shared_output(sink_dsn),
+          ThreadPoolExecutor(max_workers=max(1, concurrency)) as pool):
         futures = {pool.submit(run_one, t): t for t in tables}
         for fut in as_completed(futures):
             report.tables.append(fut.result())

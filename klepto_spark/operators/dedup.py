@@ -338,7 +338,7 @@ def _refuse_epoch_layout(spark, path: str, caller: str) -> None:
         raise ValueError(
             f"index at {path!r} is epoch-partitioned (ep= dirs, "
             "built by streaming.dedup); commit through "
-            "streaming.dedup.process_batch with the next epoch id, "
+            "streaming.dedup.process_epoch with the next epoch id, "
             f"or call {caller} with commit=False")
 
 
@@ -1214,20 +1214,7 @@ def semantic_append(spark, path, new_emb: DataFrame, threshold: float,
         if isinstance(path, (list, tuple)):
             raise ValueError("commit=True needs a single index root, "
                              "not a path list")
-        # same mixed-layout hazard as minhash_append: a streaming-built
-        # index is epoch-partitioned; flat appends would break partition
-        # discovery at the next read
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(path)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(root) and any(
-                st.getPath().getName().startswith("ep=")
-                for st in fs.listStatus(root)):
-            raise ValueError(
-                f"index at {path!r} is epoch-partitioned (ep= dirs, "
-                "built by streaming.dedup); commit through "
-                "streaming.dedup.process_semantic_batch with the next "
-                "epoch id, or call semantic_append with commit=False")
+        _refuse_epoch_layout(spark, path, "semantic_append")
         nb.write.mode("append").parquet(path)
     return out
 

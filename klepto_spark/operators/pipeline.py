@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from klepto_spark.config import Spec, TableSpec
 from klepto_spark.functions.anonymise import (
     DEFAULT_SEED, anonymise_spark_factored, anonymise_sql, keep_type_sql)
+from klepto_spark.sinks.ddl import quote_ident
 
 LoadFn = Callable[[str], DataFrame]
 
@@ -139,7 +140,8 @@ def build_table_df(table: TableSpec, load: LoadFn, *, spec: Spec | None = None,
         # Project the target table's own columns only (engine.go:88-94).
         # selectExpr: one py4j call instead of one F.col round-trip per
         # column (the k-family construction-chatter fix, VERDICT r14 #6)
-        df = df.selectExpr(*[f"`{table.name}`.`{c}`" for c in target_cols])
+        df = df.selectExpr(*[f"{quote_ident(table.name, 'mysql')}."
+                             f"{quote_ident(c, 'mysql')}" for c in target_cols])
 
     if table.filter.sorts:
         # one multi-key sort in declaration order (fixes the reference's
@@ -187,14 +189,14 @@ def build_table_df(table: TableSpec, load: LoadFn, *, spec: Spec | None = None,
             taken.update(helpers)
             final_sql[col] = sql
         if all_helpers:
-            df = df.selectExpr("*", *[f"{h} AS `{n}`"
+            df = df.selectExpr("*", *[f"{h} AS {quote_ident(n, 'mysql')}"
                                       for n, h in all_helpers.items()])
-        out = [f"{final_sql[c]} AS `{c}`" if c in final_sql else f"`{c}`"
-               for c in cols]
+        out = [f"{final_sql[c]} AS {quote_ident(c, 'mysql')}"
+               if c in final_sql else quote_ident(c, "mysql") for c in cols]
         # a faked column absent from the frame appends at the end — the
         # withColumn behaviour the sequential loop had
-        out += [f"{final_sql[c]} AS `{c}`" for c in final_sql
-                if c not in cols]
+        out += [f"{final_sql[c]} AS {quote_ident(c, 'mysql')}"
+                for c in final_sql if c not in cols]
         df = df.selectExpr(*out)
 
     if anonymise and table.pii_redact:
@@ -204,8 +206,8 @@ def build_table_df(table: TableSpec, load: LoadFn, *, spec: Spec | None = None,
         # one projection for all rules (same py4j-chatter rationale)
         from klepto_spark.operators.pii import redact
         masked = set(table.pii_redact)
-        df = df.select(*[redact(c).alias(c) if c in masked else F.col(f"`{c}`")
-                         for c in df.columns])
+        df = df.select(*[redact(c).alias(c) if c in masked
+                         else F.col(quote_ident(c, "mysql")) for c in df.columns])
     return df
 
 

@@ -23,10 +23,6 @@ import re
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def _vec_lit(vec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
-
-
 # ---------------------------------------------------------------------------
 # Spark-SQL text builders for the unrolled constant expressions
 # (optimization r14). Building a 64-term dot product Column-by-Column costs

@@ -11,16 +11,7 @@ whole-surface view.
 
 from __future__ import annotations
 
-import re
 import sys
-
-
-FEATURES = {
-    "broadcasts": r"BroadcastHashJoin|BroadcastNestedLoop",
-    "python_eval": r"ArrowEvalPython|BatchEvalPython|MapInPandas|"
-                   r"FlatMapGroupsInPandas",
-    "topk": r"TakeOrderedAndProject",
-}
 
 
 def _strip_cached_subtrees(plan: str) -> str:
@@ -68,28 +59,6 @@ def _strip_cached_subtrees(plan: str) -> str:
             imr_skip = indent
         out.append(line)
     return "\n".join(out)
-
-
-def audit_plan(plan: str) -> dict:
-    plan = _strip_cached_subtrees(plan)
-    out = {k: len(re.findall(rx, plan)) for k, rx in FEATURES.items()}
-    # physical shuffle exchanges of every partitioning (hash, range,
-    # round-robin rebalances, and single-partition collapses for global
-    # aggregates): node lines only, so a ReusedExchange's echo of its
-    # target ("ReusedExchange ..., Exchange hashpartitioning") is not
-    # double-counted
-    out["shuffles"] = len(re.findall(
-        r"^[+\-:* (\d)]*Exchange (?:(?:hash|range|RoundRobin)partitioning"
-        r"|SinglePartition)",
-        plan, re.MULTILINE))
-    # whole-stage-codegen spans print as "*(n)" node prefixes; count
-    # distinct span ids
-    out["codegen_spans"] = len(set(re.findall(r"\*\((\d+)\)", plan)))
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    out["pushed_filters"] = any(p.strip() for p in pushed)
-    part = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    out["partition_filters"] = any(p.strip() for p in part)
-    return out
 
 
 #: Arrow-vectorised Python eval operators (the repo bans row-at-a-time)

@@ -14,7 +14,9 @@ a text file on a single target is inherently a sequential sink.
 
 from __future__ import annotations
 
+import contextlib
 import sys
+import threading
 from collections.abc import Iterator
 from typing import IO
 
@@ -118,6 +120,38 @@ def open_output(dsn_str: str) -> IO[str]:
         return open("/" + dsn.data_source if dsn.data_source else dsn.address,
                     "w")
     raise DSNError(f"scheme {dsn.type!r} is not a text output")
+
+
+#: per DSN, a running steal's (lock, [its shared handle, once opened])
+_SHARED: dict[str, tuple[threading.Lock, list[IO[str]]]] = {}
+
+
+@contextlib.contextmanager
+def shared_output(dsn_str: str):
+    """Inside the block (one ``steal`` run), the tables written to
+    ``dsn_str`` share one handle, opened on first use, and take turns
+    under a lock, so they neither truncate nor interleave."""
+    _SHARED[dsn_str] = (threading.Lock(), opened := [])
+    try:
+        yield
+    finally:
+        del _SHARED[dsn_str]
+        for out in opened:
+            if out.name not in ("<stdout>", "<stderr>"):
+                out.close()
+
+
+@contextlib.contextmanager
+def table_output(dsn_str: str):
+    """The handle one table's whole DDL + INSERT block is written to."""
+    if dsn_str not in _SHARED:
+        with shared_output(dsn_str), table_output(dsn_str) as out:
+            yield out
+        return
+    lock, opened = _SHARED[dsn_str]
+    with lock:
+        opened[:] = opened or [open_output(dsn_str)]
+        yield opened[0]
 
 
 def dump_table_sql(df: DataFrame, table: str, out: IO[str],

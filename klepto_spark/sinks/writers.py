@@ -720,11 +720,7 @@ def write_table(df: DataFrame, dsn_str: str, table: str,
         write_jdbc(df, dsn, table, mode="append" if mode == "append" else "overwrite")
         return None
     if kind == "text":
-        from klepto_spark.sinks.sqltext import dump_table_sql, open_output
-        out = open_output(dsn_str)
-        try:
+        from klepto_spark.sinks.sqltext import dump_table_sql, table_output
+        with table_output(dsn_str) as out:
             return dump_table_sql(df, table, out, dialect)
-        finally:
-            if out.name not in ("<stdout>", "<stderr>"):
-                out.close()
     raise DSNError(f"unroutable sink dsn {dsn_str!r}")

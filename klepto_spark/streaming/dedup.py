@@ -24,13 +24,24 @@ whole-corpus offline dedup.
 Structured Streaming forbids an aggregation upstream of the stateful
 dedup, which is why the fingerprints are stateless projections (md5 /
 simhash_col), not the batch explode+groupBy shapes.
+
+The at-rest twins (:func:`process_epoch` and :func:`stream_writer` over
+:func:`minhash`, :func:`exact`, :func:`cdc`, :func:`semantic`, :func:`span`,
+:func:`hll`, :func:`bloom` or :func:`cms`) remember the whole stream instead.
 """
 
 from __future__ import annotations
 
+import os as _os
+import time as _time
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 
-from klepto_spark.operators.dedup import simhash_col
+from klepto_spark.operators import (bloom_portable as B, cms_portable as C,
+                                    dedup as D, hll_portable as H,
+                                    similarity as S, text as T)
 
 FP_COL = "_fp"
 
@@ -51,501 +62,220 @@ def dedup_simhash_stream(df: DataFrame, text_col: str = "text",
     """Keep the first arrival per SimHash within the watermark —
     hamming-0 near-duplicates (same fingerprint) collapse; the
     fingerprint rides along in ``simhash`` for downstream audit."""
-    return (df.withColumn("simhash", simhash_col(F.col(text_col), k, bits))
+    return (df.withColumn("simhash", D.simhash_col(F.col(text_col), k, bits))
             .withWatermark(ts_col, delay)
             .dropDuplicatesWithinWatermark(["simhash"]))
 
 
 # ---------------------------------------------------------------------------
-# Incremental-index twin: near-dup pairs vs (and into) the at-rest band
-# index (operators.dedup.minhash_append) via foreachBatch -- unlike the
-# watermarked first-arrival filters above, this remembers the WHOLE
-# accepted corpus at rest, not a time horizon, with per-batch cost that
-# follows the batch (broadcast band probe), never the corpus.
-# Exactly-once: both outputs are epoch-keyed (ep=<batch>) and replaced
-# on retry -- see process_batch.
+# Incremental-index twins: per micro-batch (foreachBatch), each at-rest
+# family probes -- and folds into -- its index. Unlike the watermarked
+# filters above this remembers the WHOLE accepted stream, not a time
+# horizon, with per-batch cost that follows the batch (broadcast probe),
+# never the index.
 # ---------------------------------------------------------------------------
 
-from klepto_spark.operators import dedup as D
+
+class Family(NamedTuple):
+    """One at-rest family's streaming twin: ``rows(batch)``, the index rows
+    a batch commits, and its output — ``bootstrap(batch, rows)`` with no
+    prior index, else ``append(batch, rows, prior)`` over the SORTED prior
+    index paths."""
+    rows: Callable[[DataFrame], DataFrame]
+    bootstrap: Callable[[DataFrame, DataFrame], DataFrame]
+    append: Callable[[DataFrame, DataFrame, list[str]], DataFrame]
 
 
-def dedup_stream_writer(docs: DataFrame, index_path: str, pairs_path: str,
-                        checkpoint: str, text_col: str = "text",
-                        key_col: str = "doc_id", k: int = 5,
-                        num_hashes: int = 16, bands: int = 4,
-                        max_bucket: int = 64,
-                        per_doc_cap: int | None = None):
-    """A configured ``DataStreamWriter``: call ``.start()`` (or add a
-    trigger first) to begin deduplicating the ``docs`` stream against —
-    and into — the at-rest band index at ``index_path``. New duplicate
-    pairs (>= one endpoint in the arriving batch) appear under
-    ``pairs_path`` partitioned by batch epoch."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_batch(batch_df, int(epoch_id), index_path, pairs_path,
-                      text_col, key_col, k, num_hashes, bands,
-                      max_bucket, per_doc_cap)
-
-    return (docs.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint))
-
-
-def process_batch(batch_df: DataFrame, epoch_id: int, index_path: str,
-                  pairs_path: str, text_col: str = "text",
-                  key_col: str = "doc_id", k: int = 5,
-                  num_hashes: int = 16, bands: int = 4,
-                  max_bucket: int = 64,
-                  per_doc_cap: int | None = None) -> None:
-    """One micro-batch of the streaming dedup, exposed so retry
+def process_epoch(family: Family, batch_df: DataFrame, epoch_id: int,
+                  index_path: str, out_path: str) -> None:
+    """One micro-batch of ``family``'s streaming twin, exposed so retry
     idempotence is directly testable: calling this twice with the same
     ``epoch_id`` (what a crash-recovered ``foreachBatch`` does) must
-    leave the index and pairs output exactly as a single call would."""
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(conf)
-    bands_df = D.minhash_band_rows(batch_df, text_col, key_col, k,
-                                   num_hashes, bands)
-    prior = _prior_index_paths(jvm, fs, p, epoch_id)
-    if not prior:
-        # first batch bootstraps the index; its intra-batch pairs come
-        # from the self-contained operator
-        pairs = D.minhash_lsh_pairs(batch_df, text_col, key_col, k,
-                                    num_hashes, bands, max_bucket,
-                                    per_doc_cap=per_doc_cap)
-    else:
-        pairs = D.minhash_append(
-            spark, sorted(prior), batch_df, text_col, key_col, k,
-            num_hashes, bands, max_bucket, commit=False,
-            per_doc_cap=per_doc_cap)
-    # dynamic overwrite scoped to THIS write (ADVICE r06: setting it on
-    # the shared session silently changed later partitioned overwrites)
-    (pairs.withColumn("ep", F.lit(epoch_id))
-     .write.mode("overwrite").partitionBy("ep")
-     .option("partitionOverwriteMode", "dynamic").parquet(pairs_path))
-    # idempotent index commit: the epoch's own dir, replaced on retry
-    bands_df.write.mode("overwrite").parquet(
-        f"{index_path}/ep={epoch_id}")
+    leave the index and output exactly as a single call would — the
+    same epoch probes the same index view (``_prior_index_paths`` pins
+    ep < epoch_id) and replaces its own ``ep=<epoch_id>`` dirs."""
+    if batch_df.isEmpty():
+        # foreachBatch delivers empty micro-batches; writing nothing keeps
+        # the replay contract (a retried empty epoch writes nothing too,
+        # and no empty ep= dir pollutes the index listing)
+        return
+    prior = _prior_index_paths(batch_df.sparkSession, index_path, epoch_id)
+    rows = family.rows(batch_df)
+    out = (family.append(batch_df, rows, prior) if prior
+           else family.bootstrap(batch_df, rows))
+    # each commit replaces the epoch's own dir on retry, the index last;
+    # a direct write (not partitionBy) leaves a schema-bearing file even
+    # for zero rows, so the output stays readable while every epoch is empty
+    out.write.mode("overwrite").parquet(f"{out_path}/ep={epoch_id}")
+    rows.write.mode("overwrite").parquet(f"{index_path}/ep={epoch_id}")
 
 
-# ---------------------------------------------------------------------------
-# EXACT twin (round 8): the same foreachBatch shape over the at-rest
-# fingerprint index (operators.dedup.exact_append) -- completes the
-# streaming symmetry with the minhash and semantic twins. Epoch-keyed
-# and replayable exactly like process_batch.
-# ---------------------------------------------------------------------------
-
-
-def exact_stream_writer(docs: DataFrame, index_path: str, pairs_path: str,
-                        checkpoint: str, text_col: str = "text",
-                        key_col: str = "doc_id",
-                        prefix_words: int | None = None):
-    """A configured ``DataStreamWriter`` for document streams: exact
-    duplicate pairs (>= one endpoint in the arriving batch) appear under
-    ``pairs_path`` partitioned by batch epoch; the batch's (key, fp)
-    rows commit to ``index_path/ep=<batch>``."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_exact_batch(batch_df, int(epoch_id), index_path,
-                            pairs_path, text_col, key_col, prefix_words)
-
-    return (docs.writeStream.foreachBatch(_batch)
+def stream_writer(stream: DataFrame, family: Family, index_path: str,
+                  out_path: str, checkpoint: str):
+    """A configured ``DataStreamWriter``: call ``.start()`` (or add a
+    trigger first) to run ``family`` over ``stream`` against — and into —
+    the at-rest index at ``index_path``. Each batch's output appears
+    under ``out_path`` partitioned by batch epoch."""
+    return (stream.writeStream.foreachBatch(
+        lambda batch_df, epoch_id: process_epoch(
+            family, batch_df, int(epoch_id), index_path, out_path))
             .option("checkpointLocation", checkpoint))
 
 
-def process_exact_batch(batch_df: DataFrame, epoch_id: int,
-                        index_path: str, pairs_path: str,
-                        text_col: str = "text", key_col: str = "doc_id",
-                        prefix_words: int | None = None) -> None:
-    """One micro-batch of the streaming exact dedup (retry-idempotent by
-    the same contract as :func:`process_batch`: same ``epoch_id`` =>
-    same index view probed, same outputs replaced)."""
-    if batch_df.isEmpty():
-        # same replay contract as the semantic twin: a retried empty
-        # epoch also writes nothing (and no empty ep= dir pollutes the
-        # index listing)
-        return
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(conf)
-    fp = batch_df.select(
-        F.col(key_col),
-        D.exact_fingerprint(text_col, prefix_words).alias("fp"))
-    prior = _prior_index_paths(jvm, fs, p, epoch_id)
-    if not prior:
-        # bootstrap epoch: intra-batch exact pairs (a < b) only
-        pairs = (fp.withColumnRenamed(key_col, "a")
-                 .join(fp.withColumnRenamed(key_col, "b"), "fp")
-                 .filter(F.col("a") < F.col("b"))
-                 .select("a", "b"))
-    else:
-        pairs = D.exact_append(spark, sorted(prior), batch_df, text_col,
-                               key_col, prefix_words, commit=False)
-    (pairs.withColumn("ep", F.lit(epoch_id))
-     .write.mode("overwrite").partitionBy("ep")
-     .option("partitionOverwriteMode", "dynamic").parquet(pairs_path))
-    fp.write.mode("overwrite").parquet(f"{index_path}/ep={epoch_id}")
+def minhash(text_col: str = "text", key_col: str = "doc_id", k: int = 5,
+            num_hashes: int = 16, bands: int = 4, max_bucket: int = 64,
+            per_doc_cap: int | None = None) -> Family:
+    """Near-dup pairs (>= one endpoint in the batch) against the band
+    index (:func:`operators.dedup.minhash_append`); the batch commits
+    its (key, band) rows."""
+    return Family(
+        rows=lambda batch: D.minhash_band_rows(
+            batch, text_col, key_col, k, num_hashes, bands),
+        bootstrap=lambda batch, _: D.minhash_lsh_pairs(
+            batch, text_col, key_col, k, num_hashes, bands, max_bucket,
+            per_doc_cap=per_doc_cap),
+        append=lambda batch, _, prior: D.minhash_append(
+            batch.sparkSession, prior, batch, text_col, key_col, k, num_hashes,
+            bands, max_bucket, commit=False, per_doc_cap=per_doc_cap))
 
 
-def cdc_stream_writer(docs: DataFrame, index_path: str, pairs_path: str,
-                      checkpoint: str, text_col: str = "text",
-                      key_col: str = "doc_id", divisor: int = 8,
-                      min_shared: int = 2, min_words: int = 3,
-                      max_bucket: int = 64):
-    """A configured ``DataStreamWriter`` for document streams:
-    shift-resistant CDC near-dup pairs (>= one endpoint in the arriving
-    batch, with shared-chunk agreement counts) appear under
-    ``pairs_path`` partitioned by batch epoch; the batch's (key, h)
-    chunk-hash rows commit to ``index_path/ep=<batch>`` — the fourth
-    dedup family's streaming twin (exact / minhash / semantic / cdc)."""
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_cdc_batch(batch_df, int(epoch_id), index_path,
-                          pairs_path, text_col, key_col, divisor,
-                          min_shared, min_words, max_bucket)
-
-    return (docs.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint))
+def exact(text_col: str = "text", key_col: str = "doc_id",
+          prefix_words: int | None = None) -> Family:
+    """Exact duplicate pairs (>= one endpoint in the batch) against the
+    fingerprint index (:func:`operators.dedup.exact_append`); the batch
+    commits its (key, fp) rows."""
+    return Family(
+        rows=lambda batch: batch.select(F.col(key_col), D.exact_fingerprint(
+            text_col, prefix_words).alias("fp")),
+        bootstrap=lambda _, fp: (
+            fp.withColumnRenamed(key_col, "a")
+            .join(fp.withColumnRenamed(key_col, "b"), "fp")
+            .filter(F.col("a") < F.col("b")).select("a", "b")),
+        append=lambda batch, _, prior: D.exact_append(
+            batch.sparkSession, prior, batch, text_col, key_col,
+            prefix_words, commit=False))
 
 
-def process_cdc_batch(batch_df: DataFrame, epoch_id: int,
-                      index_path: str, pairs_path: str,
-                      text_col: str = "text", key_col: str = "doc_id",
-                      divisor: int = 8, min_shared: int = 2,
-                      min_words: int = 3, max_bucket: int = 64) -> None:
-    """One micro-batch of the streaming CDC near-dup (retry-idempotent
-    by the same contract as :func:`process_batch`: same ``epoch_id`` =>
-    same index view probed, same outputs replaced)."""
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(conf)
-    from klepto_spark.operators.text import cdc_chunk_rows
-    chunks = cdc_chunk_rows(batch_df, text_col, key_col, divisor,
-                            min_words).distinct()
-    prior = _prior_index_paths(jvm, fs, p, epoch_id)
-    if not prior:
-        # bootstrap epoch: intra-batch pairs only
-        pairs = D.cdc_near_dup_pairs(batch_df, text_col, key_col,
-                                     divisor, min_shared, min_words,
-                                     max_bucket)
-    else:
-        pairs = D.cdc_append(spark, sorted(prior), batch_df, text_col,
-                             key_col, divisor, min_shared, min_words,
-                             max_bucket, commit=False)
-    (pairs.withColumn("ep", F.lit(epoch_id))
-     .write.mode("overwrite").partitionBy("ep")
-     .option("partitionOverwriteMode", "dynamic").parquet(pairs_path))
-    chunks.write.mode("overwrite").parquet(f"{index_path}/ep={epoch_id}")
+def cdc(text_col: str = "text", key_col: str = "doc_id", divisor: int = 8,
+        min_shared: int = 2, min_words: int = 3,
+        max_bucket: int = 64) -> Family:
+    """Shift-resistant CDC near-dup pairs (>= one endpoint in the batch,
+    with shared-chunk agreement counts) against the chunk index
+    (:func:`operators.dedup.cdc_append`); the batch commits its (key, h)
+    chunk-hash rows."""
+    return Family(
+        rows=lambda batch: T.cdc_chunk_rows(
+            batch, text_col, key_col, divisor, min_words).distinct(),
+        bootstrap=lambda batch, _: D.cdc_near_dup_pairs(
+            batch, text_col, key_col, divisor, min_shared, min_words,
+            max_bucket),
+        append=lambda batch, _, prior: D.cdc_append(
+            batch.sparkSession, prior, batch, text_col, key_col, divisor,
+            min_shared, min_words, max_bucket, commit=False))
 
 
-# ---------------------------------------------------------------------------
-# SEMANTIC twin (round 7): the same foreachBatch shape over the at-rest
-# signature index (operators.dedup.semantic_append) -- an embedding
-# stream deduplicates against, and folds into, the (key, signature,
-# vector) index with per-batch broadcast-probe cost. Epoch-keyed and
-# replayable exactly like process_batch.
-# ---------------------------------------------------------------------------
+def semantic(threshold: float, vec_col: str = "embedding",
+             key_col: str = "vec_id", bits: int = 16,
+             dim: int | None = None, max_bucket: int = 64) -> Family:
+    """Verified cosine pairs (>= one endpoint in the batch) of an
+    embedding stream against the signature index
+    (:func:`operators.dedup.semantic_append`); the batch commits its
+    (key, signature, vector) rows."""
+    return Family(
+        rows=lambda batch: D.semantic_index_rows(
+            batch, vec_col, key_col, bits, dim),
+        bootstrap=lambda batch, _: S.cosine_similar_pairs(
+            batch, threshold, vec_col, key_col, bits, dim, max_bucket),
+        append=lambda batch, _, prior: D.semantic_append(
+            batch.sparkSession, prior, batch, threshold, vec_col, key_col,
+            bits, dim, max_bucket, commit=False))
 
 
-def semantic_stream_writer(emb: DataFrame, index_path: str,
-                           pairs_path: str, checkpoint: str,
-                           threshold: float,
-                           vec_col: str = "embedding",
-                           key_col: str = "vec_id", bits: int = 16,
-                           dim: int | None = None,
-                           max_bucket: int = 64):
-    """A configured ``DataStreamWriter`` for embedding streams: verified
-    cosine pairs (>= one endpoint in the arriving batch) appear under
-    ``pairs_path`` partitioned by batch epoch; the batch's index rows
-    commit to ``index_path/ep=<batch>``."""
+def span(text_col: str = "text", key_col: str = "doc_id", k: int = 8,
+         min_count: int = 2) -> Family:
+    """Duplicated-span coverage (t18's signal) of each batch against
+    everything that arrived AT OR BEFORE it — earlier epochs' stats are
+    never restated when later copies arrive; the batch commits its
+    (h, cnt) window-count rows. The index stores COUNTS that sum on
+    read, so the ep= overwrite is load-bearing: it keeps a replayed
+    batch from double-counting its own windows."""
+    def rows(batch):
+        _, grams = T._window_grams(batch, text_col, key_col, k)
+        return grams.groupBy("h").agg(
+            F.count(F.lit(1)).cast("long").alias("cnt"))
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_semantic_batch(batch_df, int(epoch_id), index_path,
-                               pairs_path, threshold, vec_col, key_col,
-                               bits, dim, max_bucket)
-
-    return (emb.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint))
-
-
-def process_semantic_batch(batch_df: DataFrame, epoch_id: int,
-                           index_path: str, pairs_path: str,
-                           threshold: float,
-                           vec_col: str = "embedding",
-                           key_col: str = "vec_id", bits: int = 16,
-                           dim: int | None = None,
-                           max_bucket: int = 64) -> None:
-    """One micro-batch of the streaming semantic dedup (retry-idempotent
-    by the same contract as :func:`process_batch`: same ``epoch_id`` =>
-    same index view probed, same outputs replaced)."""
-    if batch_df.isEmpty():
-        # foreachBatch delivers empty micro-batches (ADVICE r07): the dim
-        # probe inside semantic_append would see no rows; nothing to
-        # probe, nothing to fold — and writing nothing keeps the replay
-        # contract (a retried empty epoch also writes nothing)
-        return
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(conf)
-    prior = _prior_index_paths(jvm, fs, p, epoch_id)
-    if not prior:
-        from klepto_spark.operators.similarity import cosine_similar_pairs
-        pairs = cosine_similar_pairs(batch_df, threshold, vec_col,
-                                     key_col, bits, dim, max_bucket)
-    else:
-        pairs = D.semantic_append(
-            spark, sorted(prior), batch_df, threshold, vec_col, key_col,
-            bits, dim, max_bucket, commit=False)
-    (pairs.withColumn("ep", F.lit(epoch_id))
-     .write.mode("overwrite").partitionBy("ep")
-     .option("partitionOverwriteMode", "dynamic").parquet(pairs_path))
-    D.semantic_index_rows(batch_df, vec_col, key_col, bits, dim) \
-        .write.mode("overwrite").parquet(f"{index_path}/ep={epoch_id}")
+    return Family(
+        rows,
+        bootstrap=lambda batch, _: T.dup_span_stats(
+            batch, text_col, key_col, k, min_count),
+        append=lambda batch, _, prior: T.span_append(
+            batch.sparkSession, prior, batch, text_col, key_col, k,
+            min_count, commit=False))
 
 
-def span_stream_writer(docs: DataFrame, index_path: str, stats_path: str,
-                       checkpoint: str, text_col: str = "text",
-                       key_col: str = "doc_id", k: int = 8,
-                       min_count: int = 2):
-    """A configured ``DataStreamWriter`` for document streams:
-    duplicated-span coverage (t18's signal, as-of-arrival) for each
-    arriving batch appears under ``stats_path`` partitioned by batch
-    epoch; the batch's (h, cnt) window-count rows commit to
-    ``index_path/ep=<batch>`` — the FIFTH family's streaming twin
-    (exact / minhash / semantic / cdc / span). A batch's coverage
-    counts duplication against everything that arrived AT OR BEFORE it
-    (the same one-directional contract as the pair families: earlier
-    epochs' stats are never restated when later copies arrive)."""
+def hll(value_col: str, group_cols: list[str]) -> Family:
+    """Running per-group distinct-count estimates (t06's portable HLL)
+    over everything that arrived AT OR BEFORE the batch, bit-identical
+    to :func:`hll_distinct_portable` over that union — register maxima
+    over disjoint row sets are lossless. The batch commits its (group,
+    bucket, rho) register rows. Register merge is MAX, which is
+    idempotent: a replayed epoch could not double-count even without the
+    epoch-pinned view."""
+    def estimates(batch, regs, prior=()):
+        if prior:
+            regs = regs.unionByName(batch.sparkSession.read.parquet(
+                *prior).select(*regs.columns))
+        return H._fold_estimate(regs, group_cols)
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_span_batch(batch_df, int(epoch_id), index_path,
-                           stats_path, text_col, key_col, k, min_count)
-
-    return (docs.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint))
+    return Family(lambda batch: H.hll_registers(batch, value_col, group_cols),
+                  estimates, estimates)
 
 
-def process_span_batch(batch_df: DataFrame, epoch_id: int,
-                       index_path: str, stats_path: str,
-                       text_col: str = "text", key_col: str = "doc_id",
-                       k: int = 8, min_count: int = 2) -> None:
-    """One micro-batch of the streaming span coverage (retry-idempotent
-    by the same contract as :func:`process_batch`: same ``epoch_id`` =>
-    same index view probed, same outputs replaced — critical HERE
-    because the index stores COUNTS that sum on read: the epoch-keyed
-    dynamic overwrite is what keeps a replayed batch from
-    double-counting its own windows)."""
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(conf)
-    from klepto_spark.operators.text import (_window_grams,
-                                             dup_span_stats, span_append)
-    prior = _prior_index_paths(jvm, fs, p, epoch_id)
-    if not prior:
-        # bootstrap epoch: intra-batch duplication only
-        stats = dup_span_stats(batch_df, text_col, key_col, k, min_count)
-    else:
-        stats = span_append(spark, sorted(prior), batch_df, text_col,
-                            key_col, k, min_count, commit=False)
-    (stats.withColumn("ep", F.lit(epoch_id))
-     .write.mode("overwrite").partitionBy("ep")
-     .option("partitionOverwriteMode", "dynamic").parquet(stats_path))
-    _, grams = _window_grams(batch_df, text_col, key_col, k)
-    (grams.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-     .write.mode("overwrite").parquet(f"{index_path}/ep={epoch_id}"))
+def bloom(value_col: str, group_cols: list[str], m: int | None = None,
+          k: int | None = None) -> Family:
+    """Membership verdicts (t23's portable bits) of each batch value
+    against everything that arrived STRICTLY BEFORE the batch, so first
+    occurrences report maybe_member=false — bit-identical to
+    ``bloom_probe`` over that prior union. The batch commits its
+    (group, bloom_bit) rows. The merge is set UNION (distinct-on-read),
+    which is idempotent: a replayed epoch cannot change the filter even
+    without the epoch-pinned view."""
+    m = m or B.M_BITS
+    k = k or B.K_HASHES
+
+    def verdicts(batch, bits, prior=()):
+        prior_bits = (batch.sparkSession.read.parquet(*prior)
+                      .select(*bits.columns).distinct() if prior
+                      else bits.limit(0))
+        return B.bloom_probe(prior_bits, batch, value_col, group_cols,
+                             m=m, k=k)
+
+    return Family(lambda batch: B.bloom_bits(
+        batch, value_col, group_cols, m, k), verdicts, verdicts)
 
 
-def hll_stream_writer(rows: DataFrame, index_path: str, est_path: str,
-                      checkpoint: str, value_col: str,
-                      group_cols: list[str]):
-    """A configured ``DataStreamWriter`` for value streams: running
-    per-group distinct-count estimates (t06's portable HLL,
-    stream-so-far as of each batch) appear under ``est_path``
-    partitioned by batch epoch; the batch's (group, bucket, rho)
-    register rows commit to ``index_path/ep=<batch>`` — the SIXTH
-    at-rest family's streaming twin (exact / minhash / semantic / cdc /
-    span / hll). Register merge is MAX, so unlike the span family's
-    summed counts a replayed epoch could not double-count even without
-    the epoch-pinned probe view — the ep= protocol is kept anyway so
-    the shared compaction (:func:`compact_index_epochs`) and the
-    deterministic-retry contract apply unchanged."""
+def cms(value_col: str, group_cols: list[str], w: int | None = None,
+        d: int | None = None) -> Family:
+    """Frequency estimates (t24's portable count-min counters) of each
+    batch value against everything that arrived AT OR BEFORE the batch
+    (own occurrences included), bit-identical to ``cms_probe`` over that
+    union because counter addition over disjoint row sets is exact. The
+    batch commits its (group, cm_row, cm_col, cnt) rows. Counter merge
+    is SUM — the span index's hazard — so the ep= overwrite is
+    load-bearing: a replayed epoch replaces its own counters instead of
+    re-adding them."""
+    w = w or C.W_COLS
+    d = d or C.D_ROWS
 
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_hll_batch(batch_df, int(epoch_id), index_path, est_path,
-                          value_col, group_cols)
+    def estimates(batch, counters, prior=()):
+        if prior:
+            counters = counters.unionByName(batch.sparkSession.read.parquet(
+                *prior).select(*counters.columns))
+        return C.cms_probe(C.fold_counters(counters, group_cols), batch,
+                           value_col, group_cols, w=w, d=d)
 
-    return (rows.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint))
-
-
-def process_hll_batch(batch_df: DataFrame, epoch_id: int,
-                      index_path: str, est_path: str, value_col: str,
-                      group_cols: list[str]) -> None:
-    """One micro-batch of the streaming distinct-count monitor
-    (retry-idempotent: same ``epoch_id`` => same prior register view =>
-    same estimates and the same ep= dir overwritten). The emitted
-    estimates cover everything that arrived AT OR BEFORE the batch and
-    are bit-identical to :func:`hll_distinct_portable` over that union —
-    register maxima over disjoint row sets are lossless, so each epoch's
-    row is exactly what a full recompute would print."""
-    if batch_df.isEmpty():
-        return
-    from klepto_spark.operators.hll_portable import (_fold_estimate,
-                                                     hll_registers)
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(conf)
-    regs = hll_registers(batch_df, value_col, group_cols)
-    prior = _prior_index_paths(jvm, fs, p, epoch_id)
-    cols = [*group_cols, "hll_bucket", "hll_r"]
-    merged = regs.select(*cols)
-    if prior:
-        merged = merged.unionByName(
-            spark.read.parquet(*prior).select(*cols))
-    (_fold_estimate(merged, group_cols)
-     .write.mode("overwrite").parquet(f"{est_path}/ep={epoch_id}"))
-    regs.select(*cols).write.mode("overwrite") \
-        .parquet(f"{index_path}/ep={epoch_id}")
-
-
-def bloom_stream_writer(rows: DataFrame, index_path: str,
-                        verdict_path: str, checkpoint: str,
-                        value_col: str, group_cols: list[str],
-                        m: int | None = None, k: int | None = None):
-    """A configured ``DataStreamWriter`` for value streams: per-batch
-    membership verdicts against the stream-so-far Bloom filter
-    (t23's portable bits) appear under ``verdict_path`` partitioned by
-    batch epoch; the batch's (group, bloom_bit) rows commit to
-    ``index_path/ep=<batch>`` — the SEVENTH at-rest family's streaming
-    twin (exact / minhash / semantic / cdc / span / hll / bloom). The
-    merge is set UNION (distinct-on-read), so like the HLL twin a
-    replayed epoch cannot change the filter even without the
-    epoch-pinned probe view — the ep= protocol is kept anyway so the
-    shared compaction and the deterministic-retry contract apply
-    unchanged. The per-batch verdict is the streaming decontamination
-    monitor: "has this value been seen in any earlier batch?" (a batch
-    value is probed against the PRIOR epochs' filter, so first
-    occurrences report maybe_member=false)."""
-    from klepto_spark.operators.bloom_portable import K_HASHES, M_BITS
-    m = m or M_BITS
-    k = k or K_HASHES
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_bloom_batch(batch_df, int(epoch_id), index_path,
-                            verdict_path, value_col, group_cols, m, k)
-
-    return (rows.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint))
-
-
-def process_bloom_batch(batch_df: DataFrame, epoch_id: int,
-                        index_path: str, verdict_path: str,
-                        value_col: str, group_cols: list[str],
-                        m: int, k: int) -> None:
-    """One micro-batch of the streaming membership monitor
-    (retry-idempotent: same ``epoch_id`` => same prior-filter view =>
-    same verdicts and the same ep= dir overwritten). Verdicts test each
-    batch value against everything that arrived STRICTLY BEFORE the
-    batch and are bit-identical to ``bloom_probe`` over that prior
-    union — set union over disjoint row sets is lossless."""
-    if batch_df.isEmpty():
-        return
-    from klepto_spark.operators.bloom_portable import (bloom_bits,
-                                                       bloom_probe)
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(conf)
-    bits = bloom_bits(batch_df, value_col, group_cols, m, k)
-    prior = _prior_index_paths(jvm, fs, p, epoch_id)
-    cols = [*group_cols, "bloom_bit"]
-    if prior:
-        prior_bits = spark.read.parquet(*prior).select(*cols).distinct()
-    else:
-        prior_bits = bits.select(*cols).limit(0)
-    (bloom_probe(prior_bits, batch_df, value_col, group_cols,
-                 m=m, k=k)
-     .write.mode("overwrite").parquet(f"{verdict_path}/ep={epoch_id}"))
-    bits.select(*cols).write.mode("overwrite") \
-        .parquet(f"{index_path}/ep={epoch_id}")
-
-
-def cms_stream_writer(rows: DataFrame, index_path: str, est_path: str,
-                      checkpoint: str, value_col: str,
-                      group_cols: list[str],
-                      w: int | None = None, d: int | None = None):
-    """A configured ``DataStreamWriter`` for value streams: per-batch
-    frequency estimates against the stream-so-far count-min sketch
-    (t24's portable counters) appear under ``est_path`` partitioned by
-    batch epoch; the batch's (group, cm_row, cm_col, cnt) rows commit
-    to ``index_path/ep=<batch>`` — the EIGHTH at-rest family's
-    streaming twin (exact / minhash / semantic / cdc / span / hll /
-    bloom / cms). Counter merge is SUM — NOT idempotent, exactly the
-    span count index's hazard — so the ep= protocol is load-bearing
-    here: a replayed epoch OVERWRITES its own counter dir instead of
-    re-adding rows, and the epoch-pinned probe view keeps its estimates
-    deterministic no matter what later epochs committed before a crash.
-    Estimates cover everything that arrived AT OR BEFORE the batch
-    (own batch included — a frequency monitor should count the
-    occurrences it is looking at), bit-identical to ``cms_probe`` over
-    that union because counter addition over disjoint row sets is
-    exact."""
-    from klepto_spark.operators.cms_portable import D_ROWS, W_COLS
-    w = w or W_COLS
-    d = d or D_ROWS
-
-    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
-        process_cms_batch(batch_df, int(epoch_id), index_path, est_path,
-                          value_col, group_cols, w, d)
-
-    return (rows.writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", checkpoint))
-
-
-def process_cms_batch(batch_df: DataFrame, epoch_id: int,
-                      index_path: str, est_path: str, value_col: str,
-                      group_cols: list[str], w: int, d: int) -> None:
-    """One micro-batch of the streaming frequency monitor
-    (retry-idempotent: same ``epoch_id`` => same prior-counter view =>
-    same estimates and the same ep= dir overwritten)."""
-    if batch_df.isEmpty():
-        return
-    from klepto_spark.operators.cms_portable import (cms_counters,
-                                                     cms_probe,
-                                                     fold_counters)
-    spark = batch_df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = p.getFileSystem(conf)
-    counters = cms_counters(batch_df, value_col, group_cols, w, d)
-    prior = _prior_index_paths(jvm, fs, p, epoch_id)
-    cols = [*group_cols, "cm_row", "cm_col", "cnt"]
-    merged = counters.select(*cols)
-    if prior:
-        merged = merged.unionByName(
-            spark.read.parquet(*prior).select(*cols))
-    (cms_probe(fold_counters(merged, group_cols), batch_df, value_col,
-               group_cols, w=w, d=d)
-     .write.mode("overwrite").parquet(f"{est_path}/ep={epoch_id}"))
-    counters.select(*cols).write.mode("overwrite") \
-        .parquet(f"{index_path}/ep={epoch_id}")
+    return Family(lambda batch: C.cms_counters(
+        batch, value_col, group_cols, w, d), estimates, estimates)
 
 
 # ---------------------------------------------------------------------------
@@ -559,9 +289,6 @@ def process_cms_batch(batch_df: DataFrame, epoch_id: int,
 # a journal that the next fold -- or the next probe, via the stale-
 # journal check in _prior_index_paths -- converges forward or back.
 # ---------------------------------------------------------------------------
-
-import os as _os  # noqa: E402
-import time as _time  # noqa: E402
 
 _FOLD_JOURNAL = "_epochfold.json"
 _FOLD_STAGE = "_epfoldstage"
@@ -589,35 +316,42 @@ def _recover_fold(jvm, fs, root) -> None:
             to_path=lambda s: P(root, s))
 
 
-def _prior_index_paths(jvm, fs, root, epoch_id: int) -> list[str]:
-    """The index view epoch ``epoch_id`` probes: every flat base entry
-    plus strictly EARLIER ep= dirs. Pinning ep < epoch_id makes a replay
-    read the same index no matter what later epochs committed before the
-    crash — deterministic retries, not just tolerated ones. A STALE fold
-    journal (crashed fold) is converged first so the listing never mixes
-    a partial fold's news with the olds they replace; a YOUNG journal is
-    a live concurrent fold and is left alone (its olds still serve)."""
+def _prior_index_paths(spark, index_path: str, epoch_id: int) -> list[str]:
+    """The sorted index view epoch ``epoch_id`` probes: every flat base
+    entry plus strictly EARLIER ep= dirs. Pinning ep < epoch_id makes a
+    replay read the same index no matter what later epochs committed
+    before the crash — deterministic retries, not just tolerated ones. A
+    STALE fold journal (crashed fold) is converged first so the listing
+    never mixes a partial fold's news with the olds they replace; a
+    YOUNG journal is a live concurrent fold, left alone (olds serve)."""
+    jvm = spark._jvm
+    P = jvm.org.apache.hadoop.fs.Path
+    root = P(index_path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(root):
         return []
-    P = jvm.org.apache.hadoop.fs.Path
     jp = P(root, _FOLD_JOURNAL)
     if fs.exists(jp):
         age = _time.time() - fs.getFileStatus(jp).getModificationTime() / 1e3
         if age >= _fold_lease():
             _recover_fold(jvm, fs, root)
-    prior: list[str] = []
+    return sorted(path for path, ep in _entries(fs, root).values()
+                  if ep is None or ep < epoch_id)
+
+
+def _entries(fs, root) -> dict[str, tuple[str, int | None]]:
+    """Index entries by name, ``_`` bookkeeping skipped: (path, epoch of
+    an ``ep=<n>`` dir, or None for a flat base entry)."""
+    out = {}
     for st in fs.listStatus(root):
         name = st.getPath().getName()
-        if name.startswith("_"):
-            continue
-        if name.startswith("ep="):
+        if not name.startswith("_"):
             try:
-                if int(name[3:]) >= epoch_id:
-                    continue
+                ep = int(name[3:]) if name.startswith("ep=") else None
             except ValueError:
-                pass
-        prior.append(str(st.getPath()))
-    return prior
+                ep = None
+            out[name] = (str(st.getPath()), ep)
+    return out
 
 
 def compact_index_epochs(spark, index_path: str,
@@ -666,17 +400,9 @@ def compact_index_epochs(spark, index_path: str,
                 "retry after the lease, or raise "
                 "KLEPTO_EPOCHFOLD_LEASE_SEC if this journal is yours")
         _recover_fold(jvm, fs, root)
-    folded: dict[int, str] = {}
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("ep="):
-            continue  # adopted flat base / _meta: not this fold's business
-        try:
-            ep = int(name[3:])
-        except ValueError:
-            continue
-        if ep < max_epoch_exclusive:
-            folded[ep] = name
+    # adopted flat base / _meta entries are not this fold's business
+    folded = {ep: name for name, (_, ep) in _entries(fs, root).items()
+              if ep is not None and ep < max_epoch_exclusive}
     if len(folded) < 2:
         return 0  # nothing to merge
     dest = folded[min(folded)]

@@ -78,18 +78,6 @@ def run_to_memory(stream_df: DataFrame, query_name: str,
     q.awaitTermination()
 
 
-def run_to_parquet(stream_df: DataFrame, path: str, checkpoint: str,
-                   output_mode: str = "append") -> None:
-    q = (stream_df.writeStream
-         .format("parquet")
-         .option("path", path)
-         .option("checkpointLocation", checkpoint)
-         .outputMode(output_mode)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
-
 EPOCH_TABLE_SUFFIX = "_klepto_epochs"
 
 

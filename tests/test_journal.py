@@ -153,14 +153,14 @@ def _setup_fold(spark, tmp_path):
     """Epoch-partitioned dedup index; recovery entry =
     compact_index_epochs at a horizon that folds nothing (lease 0 is
     set by the caller)."""
-    from klepto_spark.streaming.dedup import (compact_index_epochs,
-                                              process_batch)
+    from klepto_spark.streaming.dedup import (compact_index_epochs, minhash,
+                                              process_epoch)
     idx = tmp_path / "fidx"
     pairs = tmp_path / "fpairs"
     schema = "doc_id bigint, text string"
     rows = [(i, f"doc body number {i} with shared words") for i in range(20)]
-    process_batch(spark.createDataFrame(rows, schema), 0, str(idx),
-                  str(pairs))
+    process_epoch(minhash(), spark.createDataFrame(rows, schema), 0,
+                  str(idx), str(pairs))
 
     def view():
         return sorted(map(tuple, spark.read.parquet(str(idx)).collect()))

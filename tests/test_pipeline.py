@@ -155,3 +155,22 @@ def test_pii_redact_pipeline_stage_matches_sql_twin(spark, sf_dir):
                 f"read_parquet('{sf_dir}/customer.parquet')")
     oracle = {r[0]: r[1] for r in con.execute(sql).fetchall()}
     assert oracle == rows
+
+
+def test_backtick_column_name_copies_through(spark):
+    """A passthrough column whose name holds a backtick survives every
+    projection build_table_df compiles (target columns, fakers, PII
+    redaction): identifiers are quoted with doubled backticks."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    schema = StructType([StructField("id", LongType()),
+                         StructField("name", StringType()),
+                         StructField("a`b", StringType()),
+                         StructField("note", StringType())])
+    src = spark.createDataFrame([(1, "Ann Lee", "x`1", "call 555-1234"),
+                                 (2, "Bo Ray", None, "none")], schema)
+    t = TableSpec(name="people", anonymise={"name": "FullName"},
+                  pii_redact=["note"])
+    df = build_table_df(t, lambda name: src)
+    assert df.columns == ["id", "name", "a`b", "note"]
+    assert [(r["id"], r["a`b"]) for r in df.orderBy("id").collect()] == [
+        (1, "x`1"), (2, None)]

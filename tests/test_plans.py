@@ -137,28 +137,6 @@ def test_ivf_index_scan_prunes_partitions(spark, sf_dir, tmp_path):
     assert at_rest == in_flight
 
 
-def test_audit_plan_parsing():
-    """audit_plan counts node lines, not display echoes: ReusedExchange
-    echoes and cached-plan subtrees must not inflate shuffle counts."""
-    from klepto_spark.plans.audit import audit_plan
-    plan = """*(3) Project [a#1]
-+- Exchange hashpartitioning(a#1, 16), ENSURE_REQUIREMENTS
-   +- *(2) BroadcastHashJoin [a#1], [b#2], Inner
-      :- ReusedExchange [x#9], Exchange hashpartitioning(x#9, 16)
-      :- InMemoryTableScan [c#3]
-      :     +- InMemoryRelation [c#3]
-      :           +- Exchange hashpartitioning(c#3, 16)
-      :              +- *(9) FileScan parquet [c#3] PushedFilters: [IsNotNull(c)]
-      +- *(1) Scan parquet [b#2] PushedFilters: [], PartitionFilters: [cluster IN (0,1)]
-"""
-    got = audit_plan(plan)
-    assert got["shuffles"] == 1          # reused + cached not counted
-    assert got["broadcasts"] == 1
-    assert got["codegen_spans"] == 3     # spans 1,2,3 (cached 9 stripped)
-    assert got["partition_filters"] is True
-    assert got["pushed_filters"] is False  # cached subtree's filter stripped
-
-
 def test_arrow_udf_ann_paths_evaluate_encode_once(spark, sf_dir):
     """A filter (or guard) over an Arrow-UDF-derived column must not
     collapse into a second ArrowEvalPython node: the encode UDF is the

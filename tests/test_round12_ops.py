@@ -303,11 +303,11 @@ _HLL_SCHEMA = "event_id bigint, event_type string, user_id bigint"
 
 
 def test_streaming_hll_batches_equal_full_recompute(spark, tmp_path):
-    """Two micro-batches through hll_stream_writer: each epoch's
+    """Two micro-batches through stream_writer(hll()): each epoch's
     estimates are BIT-identical to hll_distinct_portable over everything
     arrived so far (register max-merge is lossless), and the committed
     register index carries the final state."""
-    from klepto_spark.streaming.dedup import hll_stream_writer
+    from klepto_spark.streaming.dedup import hll, stream_writer
 
     src = str(tmp_path / "src")
     idx = str(tmp_path / "idx")
@@ -318,8 +318,8 @@ def test_streaming_hll_batches_equal_full_recompute(spark, tmp_path):
             .parquet(src)
         stream = (spark.readStream.schema(_HLL_SCHEMA)
                   .option("maxFilesPerTrigger", "1000").parquet(src))
-        q = (hll_stream_writer(stream, idx, est, str(tmp_path / "ck"),
-                               "user_id", ["event_type"])
+        q = (stream_writer(stream, hll("user_id", ["event_type"]), idx,
+                           est, str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
 
@@ -348,18 +348,19 @@ def test_streaming_hll_replay_and_fold_probe_identical(spark, tmp_path):
     committed epochs (compact_index_epochs) changes nothing a later
     probe sees."""
     from klepto_spark.operators.hll_portable import _fold_estimate
-    from klepto_spark.streaming.dedup import (compact_index_epochs,
-                                              process_hll_batch)
+    from klepto_spark.streaming.dedup import (compact_index_epochs, hll,
+                                              process_epoch)
     idx = str(tmp_path / "idx")
     est = str(tmp_path / "est")
     df1 = spark.createDataFrame(_hll_rows(0, 60), _HLL_SCHEMA)
     df2 = spark.createDataFrame(_hll_rows(60, 140), _HLL_SCHEMA)
-    process_hll_batch(df1, 0, idx, est, "user_id", ["event_type"])
-    process_hll_batch(df2, 1, idx, est, "user_id", ["event_type"])
+    family = hll("user_id", ["event_type"])
+    process_epoch(family, df1, 0, idx, est)
+    process_epoch(family, df2, 1, idx, est)
     snap = sorted(map(tuple, spark.read.parquet(est).collect()))
     # replay both epochs out of order: nothing may move
-    process_hll_batch(df2, 1, idx, est, "user_id", ["event_type"])
-    process_hll_batch(df1, 0, idx, est, "user_id", ["event_type"])
+    process_epoch(family, df2, 1, idx, est)
+    process_epoch(family, df1, 0, idx, est)
     assert sorted(map(tuple, spark.read.parquet(est).collect())) == snap
     # fold epochs 0-1; a fresh epoch-2 probe sees the identical registers
     before = sorted(map(tuple, _fold_estimate(

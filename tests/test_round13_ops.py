@@ -133,21 +133,21 @@ def _bv_rows(lo, hi):
 
 
 def test_streaming_bloom_verdicts_and_replay(spark, tmp_path):
-    """Two micro-batches through process_bloom_batch: epoch verdicts
+    """Two micro-batches through process_epoch(bloom()): epoch verdicts
     test each batch against everything that arrived STRICTLY before it
     (epoch 0 all-new -> maybe_member false everywhere modulo FPs; an
     epoch-1 value repeated from epoch 0 flags true — no false
     negatives), the committed bit index equals a full recompute after
     distinct-on-read, and out-of-order replay moves nothing."""
-    from klepto_spark.streaming.dedup import process_bloom_batch
+    from klepto_spark.streaming.dedup import bloom, process_epoch
     idx = str(tmp_path / "idx")
     ver = str(tmp_path / "ver")
     df1 = spark.createDataFrame(_bv_rows(0, 80), _BV_SCHEMA)
     # epoch 1 repeats 20 of epoch 0's values and adds 40 new ones
     df2 = spark.createDataFrame(_bv_rows(60, 180), _BV_SCHEMA)
-    args = ("v", [], SMALL["m"], SMALL["k"])
-    process_bloom_batch(df1, 0, idx, ver, *args)
-    process_bloom_batch(df2, 1, idx, ver, *args)
+    family = bloom("v", [], SMALL["m"], SMALL["k"])
+    process_epoch(family, df1, 0, idx, ver)
+    process_epoch(family, df2, 1, idx, ver)
 
     ep1 = {r["v"]: r["maybe_member"]
            for r in spark.read.parquet(f"{ver}/ep=1").collect()}
@@ -162,8 +162,8 @@ def test_streaming_bloom_verdicts_and_replay(spark, tmp_path):
     assert committed == full
     # out-of-order replay: verdicts and index state byte-identical
     snap = sorted(map(tuple, spark.read.parquet(ver).collect()))
-    process_bloom_batch(df2, 1, idx, ver, *args)
-    process_bloom_batch(df1, 0, idx, ver, *args)
+    process_epoch(family, df2, 1, idx, ver)
+    process_epoch(family, df1, 0, idx, ver)
     assert sorted(map(tuple, spark.read.parquet(ver).collect())) == snap
     assert sorted(r["bloom_bit"] for r in spark.read.parquet(idx)
                   .select("bloom_bit").distinct().collect()) == full
@@ -172,7 +172,7 @@ def test_streaming_bloom_verdicts_and_replay(spark, tmp_path):
 def test_streaming_bloom_writer_end_to_end(spark, tmp_path):
     """The foreachBatch writer wires the same per-epoch protocol over a
     real file stream."""
-    from klepto_spark.streaming.dedup import bloom_stream_writer
+    from klepto_spark.streaming.dedup import bloom, stream_writer
     src = str(tmp_path / "src")
     idx = str(tmp_path / "idx")
     ver = str(tmp_path / "ver")
@@ -182,8 +182,8 @@ def test_streaming_bloom_writer_end_to_end(spark, tmp_path):
             .parquet(src)
         stream = (spark.readStream.schema(_BV_SCHEMA)
                   .option("maxFilesPerTrigger", "1000").parquet(src))
-        q = (bloom_stream_writer(stream, idx, ver, str(tmp_path / "ck"),
-                                 "v", [], m=SMALL["m"], k=SMALL["k"])
+        q = (stream_writer(stream, bloom("v", [], m=SMALL["m"], k=SMALL["k"]),
+                           idx, ver, str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
     ep1 = {r["v"]: r["maybe_member"]

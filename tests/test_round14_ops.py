@@ -297,21 +297,21 @@ def test_cms_append_refuses_mismatched_or_missing_scheme(spark, tmp_path):
 
 
 def test_streaming_cms_estimates_and_replay(spark, tmp_path):
-    """Two micro-batches through process_cms_batch: epoch estimates
+    """Two micro-batches through process_epoch(cms()): epoch estimates
     cover everything at-or-before the batch (own occurrences included),
     bit-identical to cms_probe over that union; the non-idempotent sum
     is exactly why the ep= overwrite protocol is load-bearing — an
     out-of-order REPLAY of epoch 0 must leave both the index and every
     estimate byte-identical."""
-    from klepto_spark.streaming.dedup import process_cms_batch
+    from klepto_spark.streaming.dedup import cms, process_epoch
     idx = str(tmp_path / "idx")
     est = str(tmp_path / "est")
     df1 = _stream(spark)                       # apple 50, banana 20, ...
     df2 = spark.createDataFrame(
         [("apple",)] * 10 + [("durian",)] * 3, "token string")
-    args = ("token", [], CM_SMALL["w"], CM_SMALL["d"])
-    process_cms_batch(df1, 0, idx, est, *args)
-    process_cms_batch(df2, 1, idx, est, *args)
+    family = cms("token", [], CM_SMALL["w"], CM_SMALL["d"])
+    process_epoch(family, df1, 0, idx, est)
+    process_epoch(family, df2, 1, idx, est)
 
     ep1 = {r["token"]: r["est_count"]
            for r in spark.read.parquet(f"{est}/ep=1").collect()}
@@ -326,7 +326,7 @@ def test_streaming_cms_estimates_and_replay(spark, tmp_path):
         .collect()))
     # replay epoch 0 AFTER epoch 1 committed: the pinned prior view
     # (ep < 0 = nothing) and the dir overwrite make it a no-op
-    process_cms_batch(df1, 0, idx, est, *args)
+    process_epoch(family, df1, 0, idx, est)
     after_idx = sorted(map(tuple, C.fold_counters(
         spark.read.parquet(idx).select("cm_row", "cm_col", "cnt"))
         .collect()))

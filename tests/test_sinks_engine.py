@@ -229,6 +229,37 @@ def test_steal_data_only(spark, sf_dir, tmp_path):
     assert report.structure_sql is None and report.ok
 
 
+@pytest.mark.parametrize("concurrency", [1, 4])
+def test_steal_many_tables_to_one_sqltext_file(spark, sf_dir, tmp_path,
+                                               concurrency):
+    """Every table of a multi-table steal lands in the one file:// target,
+    each as one contiguous DDL + INSERT block (a per-table reopen used to
+    truncate the others, and concurrent tables overwrote each other),
+    and the file replays in SQLite."""
+    import sqlite3
+
+    out = tmp_path / "dump.sql"
+    tables = ["customer", "nation", "region", "supplier"]
+    report = steal(Spec(), FileCatalog(spark, sf_dir), f"file://{out}",
+                   concurrency=concurrency, only_tables=tables)
+    rows = {t.table: t.rows for t in report.tables}
+    assert sorted(rows) == tables and all(rows.values())
+    text = out.read_text()
+    inserts = [ln.split('"')[1] for ln in text.splitlines()
+               if ln.startswith("INSERT")]
+    assert {t: inserts.count(t) for t in tables} == rows
+    # one block per table: the table names never interleave
+    runs = [t for i, t in enumerate(inserts) if i == 0 or inserts[i - 1] != t]
+    assert sorted(runs) == tables
+    lite = sqlite3.connect(":memory:")
+    try:
+        lite.executescript(text)
+        assert {t: lite.execute(f'SELECT count(*) FROM "{t}"').fetchone()[0]
+                for t in tables} == rows
+    finally:
+        lite.close()
+
+
 # -------------------------------------------------------- streaming ----
 
 def test_streaming_rollup_matches_batch(spark, sf_dir, tmp_path):

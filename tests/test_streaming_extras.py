@@ -4,6 +4,7 @@ jar) and the RocksDB state-store path for large stateful queries."""
 import pytest
 
 from klepto_spark.sources.dsn import DSNError, parse, route
+from klepto_spark.streaming import dedup as SD
 from klepto_spark.streaming.kafka import (
     kafka_available, kafka_options, read_kafka_stream)
 from klepto_spark.streaming.state import use_default_state, use_rocksdb_state
@@ -566,12 +567,12 @@ def _dup_docs(lo, hi):
 
 
 def test_streaming_dedup_matches_batch_operators(spark, tmp_path):
-    """Two micro-batches through dedup_stream_writer == running the batch
+    """Two micro-batches through stream_writer(minhash()) == running the batch
     operators by hand (bootstrap lsh_pairs, then minhash_append against
     the batch-1 index): same pair set, and the at-rest index ends up
     holding every doc's bands."""
     from klepto_spark.operators import dedup as D
-    from klepto_spark.streaming.dedup import dedup_stream_writer
+    from klepto_spark.streaming.dedup import minhash, stream_writer
 
     src = str(tmp_path / "src")
     idx = str(tmp_path / "idx")
@@ -584,8 +585,8 @@ def test_streaming_dedup_matches_batch_operators(spark, tmp_path):
             .parquet(src)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", "1000").parquet(src))
-        q = (dedup_stream_writer(stream, idx, pairs_out,
-                                 str(tmp_path / "ck"))
+        q = (stream_writer(stream, minhash(), idx, pairs_out,
+                           str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
 
@@ -606,44 +607,18 @@ def test_streaming_dedup_matches_batch_operators(spark, tmp_path):
             == 40)
 
 
-def test_streaming_dedup_retry_is_idempotent(spark, tmp_path):
-    """A crash-recovered foreachBatch re-runs an epoch: replaying the
-    SAME batch with the SAME epoch id must leave index and pairs exactly
-    as a single run (epoch-keyed dynamic overwrite, no appends)."""
-    from klepto_spark.streaming.dedup import process_batch
-
-    idx = str(tmp_path / "idx")
-    pairs_out = str(tmp_path / "pairs")
-    schema = "doc_id bigint, text string"
-    df1 = spark.createDataFrame(_dup_docs(0, 20), schema)
-    df2 = spark.createDataFrame(_dup_docs(20, 40), schema)
-
-    process_batch(df1, 0, idx, pairs_out)
-    process_batch(df2, 1, idx, pairs_out)
-    pairs_once = sorted((r.a, r.b, r.ep) for r in
-                        spark.read.parquet(pairs_out).collect())
-    bands_once = spark.read.parquet(idx).count()
-
-    # retries, out of order, including the bootstrap epoch
-    process_batch(df2, 1, idx, pairs_out)
-    process_batch(df1, 0, idx, pairs_out)
-    pairs_again = sorted((r.a, r.b, r.ep) for r in
-                         spark.read.parquet(pairs_out).collect())
-    assert pairs_again == pairs_once
-    assert spark.read.parquet(idx).count() == bands_once
-
-
 def test_process_batch_does_not_leak_overwrite_mode(spark, tmp_path):
     """The epoch-keyed pairs overwrite must scope dynamic partition
     overwrite to ITS write only — setting it on the shared session
     silently changed later partitioned overwrites (ADVICE r06)."""
-    from klepto_spark.streaming.dedup import process_batch
+    from klepto_spark.streaming.dedup import minhash, process_epoch
 
     key = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(key)
     df1 = spark.createDataFrame(_dup_docs(0, 20),
                                 "doc_id bigint, text string")
-    process_batch(df1, 0, str(tmp_path / "idx"), str(tmp_path / "pairs"))
+    process_epoch(minhash(), df1, 0, str(tmp_path / "idx"),
+                  str(tmp_path / "pairs"))
     assert spark.conf.get(key) == before
     # and the session default still clears ALL partitions on overwrite
     tgt = str(tmp_path / "plain")
@@ -660,14 +635,14 @@ def test_minhash_append_refuses_flat_commit_into_epoch_index(spark, tmp_path):
     would mix partitioned and flat layouts and break the next partition
     discovery — it must refuse and point at the epoch path (ADVICE r06)."""
     from klepto_spark.operators import dedup as D
-    from klepto_spark.streaming.dedup import process_batch
+    from klepto_spark.streaming.dedup import minhash, process_epoch
 
     idx = str(tmp_path / "idx")
     df1 = spark.createDataFrame(_dup_docs(0, 20),
                                 "doc_id bigint, text string")
     df2 = spark.createDataFrame(_dup_docs(20, 40),
                                 "doc_id bigint, text string")
-    process_batch(df1, 0, idx, str(tmp_path / "pairs"))
+    process_epoch(minhash(), df1, 0, idx, str(tmp_path / "pairs"))
     with pytest.raises(ValueError, match="epoch-partitioned"):
         D.minhash_append(spark, idx, df2, commit=True)
     # probing without committing is still allowed on the same root
@@ -695,7 +670,7 @@ def test_streaming_semantic_batches_union_to_full_recompute(spark,
     epoch emits intra-batch pairs; later epochs emit >=1-new-endpoint
     pairs against the index)."""
     from klepto_spark.operators import similarity
-    from klepto_spark.streaming.dedup import process_semantic_batch
+    from klepto_spark.streaming.dedup import process_epoch, semantic
 
     idx = str(tmp_path / "sidx")
     pairs_out = str(tmp_path / "spairs")
@@ -703,10 +678,9 @@ def test_streaming_semantic_batches_union_to_full_recompute(spark,
     df1 = spark.createDataFrame(_emb_batch(0, 30), schema)
     df2 = spark.createDataFrame(_emb_batch(30, 60), schema)
 
-    process_semantic_batch(df1, 0, idx, pairs_out, 0.95, dim=16,
-                           max_bucket=10_000)
-    process_semantic_batch(df2, 1, idx, pairs_out, 0.95, dim=16,
-                           max_bucket=10_000)
+    family = semantic(0.95, dim=16, max_bucket=10_000)
+    process_epoch(family, df1, 0, idx, pairs_out)
+    process_epoch(family, df2, 1, idx, pairs_out)
     got = {(r.a, r.b, r.cosine) for r in
            spark.read.parquet(pairs_out).collect()}
     full = {(r.a, r.b, r.cosine) for r in similarity.cosine_similar_pairs(
@@ -716,7 +690,7 @@ def test_streaming_semantic_batches_union_to_full_recompute(spark,
 
 
 def test_streaming_semantic_retry_is_idempotent(spark, tmp_path):
-    from klepto_spark.streaming.dedup import process_semantic_batch
+    from klepto_spark.streaming.dedup import process_epoch, semantic
 
     idx = str(tmp_path / "sidx2")
     pairs_out = str(tmp_path / "spairs2")
@@ -724,15 +698,16 @@ def test_streaming_semantic_retry_is_idempotent(spark, tmp_path):
     df1 = spark.createDataFrame(_emb_batch(0, 30), schema)
     df2 = spark.createDataFrame(_emb_batch(30, 60), schema)
 
-    process_semantic_batch(df1, 0, idx, pairs_out, 0.95, dim=16)
-    process_semantic_batch(df2, 1, idx, pairs_out, 0.95, dim=16)
+    family = semantic(0.95, dim=16)
+    process_epoch(family, df1, 0, idx, pairs_out)
+    process_epoch(family, df2, 1, idx, pairs_out)
     once = sorted((r.a, r.b, r.ep) for r in
                   spark.read.parquet(pairs_out).collect())
     n_idx = spark.read.parquet(idx).count()
 
     # out-of-order replays, including the bootstrap epoch
-    process_semantic_batch(df2, 1, idx, pairs_out, 0.95, dim=16)
-    process_semantic_batch(df1, 0, idx, pairs_out, 0.95, dim=16)
+    process_epoch(family, df2, 1, idx, pairs_out)
+    process_epoch(family, df1, 0, idx, pairs_out)
     again = sorted((r.a, r.b, r.ep) for r in
                    spark.read.parquet(pairs_out).collect())
     assert again == once
@@ -754,17 +729,17 @@ def test_compact_index_epochs_probe_identical_replay_safe(spark, tmp_path):
     stop)."""
     import os
 
-    from klepto_spark.streaming.dedup import (compact_index_epochs,
-                                              process_batch)
+    from klepto_spark.streaming.dedup import (compact_index_epochs, minhash,
+                                              process_epoch)
 
     idx = str(tmp_path / "cidx")
     pairs_out = str(tmp_path / "cpairs")
     schema = "doc_id bigint, text string"
     for i in range(3):
-        process_batch(spark.createDataFrame(
+        process_epoch(minhash(), spark.createDataFrame(
             _dup_docs(i * 20, (i + 1) * 20), schema), i, idx, pairs_out)
     probe = spark.createDataFrame(_dup_docs(60, 80), schema)
-    process_batch(probe, 3, idx, pairs_out)
+    process_epoch(minhash(), probe, 3, idx, pairs_out)
     once = sorted((r.a, r.b) for r in spark.read.parquet(pairs_out)
                   .filter("ep = 3").collect())
     n_rows = spark.read.parquet(idx).count()
@@ -776,7 +751,7 @@ def test_compact_index_epochs_probe_identical_replay_safe(spark, tmp_path):
     assert spark.read.parquet(idx).count() == n_rows  # still ONE table
 
     # replay of the in-flight epoch probes the identical view
-    process_batch(probe, 3, idx, pairs_out)
+    process_epoch(minhash(), probe, 3, idx, pairs_out)
     again = sorted((r.a, r.b) for r in spark.read.parquet(pairs_out)
                    .filter("ep = 3").collect())
     assert again == once and once
@@ -792,15 +767,14 @@ def test_compact_index_epochs_probe_identical_replay_safe(spark, tmp_path):
 def test_compact_semantic_index_epochs_probe_identical(spark, tmp_path):
     from klepto_spark.operators import dedup as D
     from klepto_spark.streaming.dedup import (compact_index_epochs,
-                                              process_semantic_batch)
+                                              process_epoch, semantic)
 
     idx = str(tmp_path / "csidx")
     pairs_out = str(tmp_path / "cspairs")
     schema = "vec_id bigint, embedding array<double>"
     for i in range(3):
-        process_semantic_batch(spark.createDataFrame(
-            _emb_batch(i * 20, (i + 1) * 20), schema), i, idx, pairs_out,
-            0.95, dim=16)
+        process_epoch(semantic(0.95, dim=16), spark.createDataFrame(
+            _emb_batch(i * 20, (i + 1) * 20), schema), i, idx, pairs_out)
     probe = spark.createDataFrame(_emb_batch(60, 80), schema)
     pre = {(r.a, r.b, r.cosine) for r in D.semantic_append(
         spark, idx, probe, 0.95, dim=16, commit=False).collect()}
@@ -827,14 +801,14 @@ def test_compact_index_epochs_journal_lease_and_recovery(spark, tmp_path,
     import pytest
 
     from klepto_spark.operators import dedup as D
-    from klepto_spark.streaming.dedup import (compact_index_epochs,
-                                              process_batch)
+    from klepto_spark.streaming.dedup import (compact_index_epochs, minhash,
+                                              process_epoch)
 
     idx = str(tmp_path / "ridx")
     pairs_out = str(tmp_path / "rpairs")
     schema = "doc_id bigint, text string"
     for i in range(2):
-        process_batch(spark.createDataFrame(
+        process_epoch(minhash(), spark.createDataFrame(
             _dup_docs(i * 20, (i + 1) * 20), schema), i, idx, pairs_out)
     probe = spark.createDataFrame(_dup_docs(40, 60), schema)
     pre = {(r.a, r.b) for r in D.minhash_append(
@@ -853,11 +827,11 @@ def test_compact_index_epochs_journal_lease_and_recovery(spark, tmp_path,
         spark, idx, probe, commit=False).collect()}
     assert post == pre
 
-    # a stale journal is also converged on the PROBE path (process_batch
+    # a stale journal is also converged on the PROBE path (process_epoch
     # lists the index through _prior_index_paths)
     with open(os.path.join(idx, "_epochfold.json"), "w") as fh:
         json.dump({"olds": [], "news": ["fold-9-0-never.parquet"]}, fh)
-    process_batch(probe, 2, idx, pairs_out)
+    process_epoch(minhash(), probe, 2, idx, pairs_out)
     assert not os.path.exists(os.path.join(idx, "_epochfold.json"))
     got = sorted((r.a, r.b) for r in spark.read.parquet(pairs_out)
                  .filter("ep = 2").collect())
@@ -865,31 +839,6 @@ def test_compact_index_epochs_journal_lease_and_recovery(spark, tmp_path,
 
 
 # --- empty micro-batch guards (ADVICE r07)
-
-
-def test_process_semantic_batch_empty_batch_is_noop(spark, tmp_path):
-    """foreachBatch delivers empty micro-batches; the dim probe used to
-    raise TypeError and kill the stream (ADVICE r07). Empty epochs —
-    bootstrap or mid-stream — must write nothing and leave state
-    untouched."""
-    from klepto_spark.streaming.dedup import process_semantic_batch
-
-    idx = str(tmp_path / "eidx")
-    pairs_out = str(tmp_path / "epairs")
-    schema = "vec_id bigint, embedding array<double>"
-    empty = spark.createDataFrame([], schema)
-    process_semantic_batch(empty, 0, idx, pairs_out, 0.95)  # bootstrap
-    import os
-    assert not os.path.exists(idx)
-    process_semantic_batch(spark.createDataFrame(_emb_batch(0, 30), schema),
-                           1, idx, pairs_out, 0.95, dim=16)
-    once = sorted((r.a, r.b, r.ep) for r in
-                  spark.read.parquet(pairs_out).collect())
-    n_idx = spark.read.parquet(idx).count()
-    process_semantic_batch(empty, 2, idx, pairs_out, 0.95)  # mid-stream
-    assert sorted((r.a, r.b, r.ep) for r in
-                  spark.read.parquet(pairs_out).collect()) == once
-    assert spark.read.parquet(idx).count() == n_idx
 
 
 def test_semantic_append_and_pairs_tolerate_empty_input(spark, tmp_path):
@@ -928,7 +877,7 @@ def test_streaming_exact_batches_union_to_full_recompute(spark, tmp_path):
     emits intra-batch pairs; later epochs emit >=1-new-endpoint pairs
     against the index)."""
     from klepto_spark.operators import dedup as D
-    from klepto_spark.streaming.dedup import process_exact_batch
+    from klepto_spark.streaming.dedup import exact, process_epoch
 
     idx = str(tmp_path / "exidx")
     pairs_out = str(tmp_path / "expairs")
@@ -936,8 +885,8 @@ def test_streaming_exact_batches_union_to_full_recompute(spark, tmp_path):
                             (3, "aa bb cc")])
     b2 = _doc_batch(spark, [(10, "aa bb cc"), (11, "dd ee ff"),
                             (12, "zz yy xx"), (13, "zz yy xx")])
-    process_exact_batch(b1, 0, idx, pairs_out)
-    process_exact_batch(b2, 1, idx, pairs_out)
+    process_epoch(exact(), b1, 0, idx, pairs_out)
+    process_epoch(exact(), b2, 1, idx, pairs_out)
     got = {(r.a, r.b) for r in spark.read.parquet(pairs_out).collect()}
     both = b1.unionByName(b2)
     fp = both.select("doc_id", D.exact_fingerprint("text").alias("fp"))
@@ -950,21 +899,21 @@ def test_streaming_exact_batches_union_to_full_recompute(spark, tmp_path):
 
 def test_streaming_exact_retry_is_idempotent(spark, tmp_path):
     from klepto_spark.operators import dedup as D
-    from klepto_spark.streaming.dedup import process_exact_batch
+    from klepto_spark.streaming.dedup import exact, process_epoch
 
     idx = str(tmp_path / "exidx2")
     pairs_out = str(tmp_path / "expairs2")
     b1 = _doc_batch(spark, [(1, "aa bb"), (2, "cc dd")])
     b2 = _doc_batch(spark, [(10, "aa bb"), (11, "ee ff")])
-    process_exact_batch(b1, 0, idx, pairs_out)
-    process_exact_batch(b2, 1, idx, pairs_out)
+    process_epoch(exact(), b1, 0, idx, pairs_out)
+    process_epoch(exact(), b2, 1, idx, pairs_out)
     once = sorted((r.a, r.b, r.ep) for r in
                   spark.read.parquet(pairs_out).collect())
     n_idx = spark.read.parquet(idx).count()
 
     # out-of-order replays, including the bootstrap epoch
-    process_exact_batch(b2, 1, idx, pairs_out)
-    process_exact_batch(b1, 0, idx, pairs_out)
+    process_epoch(exact(), b2, 1, idx, pairs_out)
+    process_epoch(exact(), b1, 0, idx, pairs_out)
     again = sorted((r.a, r.b, r.ep) for r in
                    spark.read.parquet(pairs_out).collect())
     assert again == once
@@ -975,30 +924,13 @@ def test_streaming_exact_retry_is_idempotent(spark, tmp_path):
         D.exact_append(spark, idx, b2, commit=True)
 
 
-def test_process_exact_batch_empty_batch_is_noop(spark, tmp_path):
-    from klepto_spark.streaming.dedup import process_exact_batch
-
-    idx = str(tmp_path / "exidx3")
-    pairs_out = str(tmp_path / "expairs3")
-    b1 = _doc_batch(spark, [(1, "aa bb"), (2, "aa bb")])
-    process_exact_batch(b1, 0, idx, pairs_out)
-    n_idx = spark.read.parquet(idx).count()
-    n_pairs = spark.read.parquet(pairs_out).count()
-    process_exact_batch(b1.filter("doc_id < 0"), 1, idx, pairs_out)
-    assert spark.read.parquet(idx).count() == n_idx
-    assert spark.read.parquet(pairs_out).count() == n_pairs
-    # and the retried empty epoch also writes nothing
-    process_exact_batch(b1.filter("doc_id < 0"), 1, idx, pairs_out)
-    assert spark.read.parquet(idx).count() == n_idx
-
-
 def test_compact_exact_index_epochs_probe_identical(spark, tmp_path):
     """Folding the exact index's committed epochs must change nothing a
     probe sees — same pairs before and after, fewer ep= dirs."""
     import os as _o
     from klepto_spark.operators import dedup as D
-    from klepto_spark.streaming.dedup import (compact_index_epochs,
-                                              process_exact_batch)
+    from klepto_spark.streaming.dedup import (compact_index_epochs, exact,
+                                              process_epoch)
 
     idx = str(tmp_path / "exidx4")
     pairs_out = str(tmp_path / "expairs4")
@@ -1006,7 +938,7 @@ def test_compact_exact_index_epochs_probe_identical(spark, tmp_path):
             [(1, "aa bb"), (2, "cc dd")],
             [(10, "aa bb")],
             [(20, "cc dd"), (21, "aa bb")]]):
-        process_exact_batch(_doc_batch(spark, rows), ep, idx, pairs_out)
+        process_epoch(exact(), _doc_batch(spark, rows), ep, idx, pairs_out)
     probe = _doc_batch(spark, [(99, "aa bb"), (98, "ee ff")])
     before = {(r.a, r.b) for r in
               D.exact_append(spark, idx, probe, commit=False).collect()}
@@ -1033,12 +965,12 @@ def _cdc_docs(lo, hi):
 
 
 def test_streaming_cdc_batches_union_to_full_restriction(spark, tmp_path):
-    """Two micro-batches through cdc_stream_writer == the batch
+    """Two micro-batches through stream_writer(cdc()) == the batch
     operators by hand (bootstrap cdc_near_dup_pairs, then cdc_append
     against the batch-1 index): same pairs WITH the same agreement
     counts, and the committed index covers every doc."""
     from klepto_spark.operators import dedup as D
-    from klepto_spark.streaming.dedup import cdc_stream_writer
+    from klepto_spark.streaming.dedup import cdc, stream_writer
 
     src = str(tmp_path / "src")
     idx = str(tmp_path / "idx")
@@ -1051,9 +983,9 @@ def test_streaming_cdc_batches_union_to_full_restriction(spark, tmp_path):
             .parquet(src)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", "1000").parquet(src))
-        q = (cdc_stream_writer(stream, idx, pairs_out,
-                               str(tmp_path / "ck"), divisor=4,
-                               min_shared=2, min_words=1)
+        q = (stream_writer(stream,
+                           cdc(divisor=4, min_shared=2, min_words=1),
+                           idx, pairs_out, str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
 
@@ -1077,31 +1009,6 @@ def test_streaming_cdc_batches_union_to_full_restriction(spark, tmp_path):
             == 24)
 
 
-def test_streaming_cdc_retry_is_idempotent(spark, tmp_path):
-    """Replaying the SAME batch with the SAME epoch id leaves index and
-    pairs exactly as a single run (epoch-keyed dynamic overwrite)."""
-    from klepto_spark.streaming.dedup import process_cdc_batch
-
-    idx = str(tmp_path / "idx")
-    pairs_out = str(tmp_path / "pairs")
-    schema = "doc_id bigint, text string"
-    df1 = spark.createDataFrame(_cdc_docs(0, 12), schema)
-    df2 = spark.createDataFrame(_cdc_docs(12, 24), schema)
-
-    process_cdc_batch(df1, 0, idx, pairs_out, divisor=4, min_words=1)
-    process_cdc_batch(df2, 1, idx, pairs_out, divisor=4, min_words=1)
-    once = sorted((r.a, r.b, r.shared_chunks, r.ep) for r in
-                  spark.read.parquet(pairs_out).collect())
-    rows_once = spark.read.parquet(idx).count()
-
-    process_cdc_batch(df2, 1, idx, pairs_out, divisor=4, min_words=1)
-    process_cdc_batch(df1, 0, idx, pairs_out, divisor=4, min_words=1)
-    again = sorted((r.a, r.b, r.shared_chunks, r.ep) for r in
-                   spark.read.parquet(pairs_out).collect())
-    assert again == once
-    assert spark.read.parquet(idx).count() == rows_once
-
-
 def test_compact_cdc_index_epochs_probe_identical(spark, tmp_path):
     """Folding the streaming CDC index's committed epochs must change
     nothing a probe sees — the fourth family's twin of the minhash /
@@ -1110,15 +1017,16 @@ def test_compact_cdc_index_epochs_probe_identical(spark, tmp_path):
     rows as against the unfolded epochs, with fewer ep= dirs."""
     import os as _o
     from klepto_spark.operators import dedup as D
-    from klepto_spark.streaming.dedup import (compact_index_epochs,
-                                              process_cdc_batch)
+    from klepto_spark.streaming.dedup import (cdc, compact_index_epochs,
+                                              process_epoch)
 
     idx = str(tmp_path / "cdcidx5")
     pairs_out = str(tmp_path / "cdcpairs5")
     schema = "doc_id bigint, text string"
     for ep, (lo, hi) in enumerate([(0, 8), (8, 16), (16, 24)]):
-        process_cdc_batch(spark.createDataFrame(_cdc_docs(lo, hi), schema),
-                          ep, idx, pairs_out, divisor=4, min_words=1)
+        process_epoch(cdc(divisor=4, min_words=1),
+                      spark.createDataFrame(_cdc_docs(lo, hi), schema),
+                      ep, idx, pairs_out)
 
     probe = spark.createDataFrame(_cdc_docs(24, 28), schema)
     before = {(r.a, r.b, r.shared_chunks) for r in
@@ -1149,12 +1057,12 @@ def _span_docs(lo, hi):
 
 
 def test_streaming_span_batches_union_to_full_restriction(spark, tmp_path):
-    """Two micro-batches through span_stream_writer == the batch
+    """Two micro-batches through stream_writer(span()) == the batch
     operators by hand (bootstrap dup_span_stats, then span_append
     against the batch-1 count index): same per-doc coverage, and the
     committed index carries every window count."""
     from klepto_spark.operators import text as T
-    from klepto_spark.streaming.dedup import span_stream_writer
+    from klepto_spark.streaming.dedup import span, stream_writer
 
     src = str(tmp_path / "src")
     idx = str(tmp_path / "idx")
@@ -1167,8 +1075,8 @@ def test_streaming_span_batches_union_to_full_restriction(spark, tmp_path):
             .parquet(src)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", "1000").parquet(src))
-        q = (span_stream_writer(stream, idx, stats_out,
-                                str(tmp_path / "ck"), k=3)
+        q = (stream_writer(stream, span(k=3), idx, stats_out,
+                           str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
 
@@ -1199,7 +1107,7 @@ def test_streaming_span_retry_never_double_counts(spark, tmp_path):
     on read, so a replayed epoch must overwrite — not append — its
     (h, cnt) rows. Replaying both epochs leaves index sums and stats
     byte-identical to a single run."""
-    from klepto_spark.streaming.dedup import process_span_batch
+    from klepto_spark.streaming.dedup import process_epoch, span
 
     idx = str(tmp_path / "idx")
     stats_out = str(tmp_path / "stats")
@@ -1207,16 +1115,16 @@ def test_streaming_span_retry_never_double_counts(spark, tmp_path):
     df1 = spark.createDataFrame(_span_docs(0, 8), schema)
     df2 = spark.createDataFrame(_span_docs(8, 16), schema)
 
-    process_span_batch(df1, 0, idx, stats_out, k=3)
-    process_span_batch(df2, 1, idx, stats_out, k=3)
+    process_epoch(span(k=3), df1, 0, idx, stats_out)
+    process_epoch(span(k=3), df2, 1, idx, stats_out)
     once = sorted((r.doc_id, r.n_words, r.dup_words, r.ep) for r in
                   spark.read.parquet(stats_out).collect())
     sums_once = sorted((r.h, r["sum(cnt)"]) for r in
                        spark.read.parquet(idx).groupBy("h").sum("cnt")
                        .collect())
 
-    process_span_batch(df2, 1, idx, stats_out, k=3)
-    process_span_batch(df1, 0, idx, stats_out, k=3)
+    process_epoch(span(k=3), df2, 1, idx, stats_out)
+    process_epoch(span(k=3), df1, 0, idx, stats_out)
     again = sorted((r.doc_id, r.n_words, r.dup_words, r.ep) for r in
                    spark.read.parquet(stats_out).collect())
     sums_again = sorted((r.h, r["sum(cnt)"]) for r in
@@ -1235,15 +1143,15 @@ def test_compact_span_index_epochs_probe_identical(spark, tmp_path):
     import os as _o
     from klepto_spark.operators import text as T
     from klepto_spark.streaming.dedup import (compact_index_epochs,
-                                              process_span_batch)
+                                              process_epoch, span)
 
     idx = str(tmp_path / "spanidx5")
     stats_out = str(tmp_path / "spanstats5")
     schema = "doc_id bigint, text string"
     for ep, (lo, hi) in enumerate([(0, 6), (6, 12), (12, 18)]):
-        process_span_batch(spark.createDataFrame(_span_docs(lo, hi),
-                                                 schema),
-                           ep, idx, stats_out, k=3)
+        process_epoch(span(k=3),
+                      spark.createDataFrame(_span_docs(lo, hi), schema),
+                      ep, idx, stats_out)
 
     probe = spark.createDataFrame(_span_docs(18, 22), schema)
     before = {(r.doc_id, r.n_words, r.dup_words) for r in
@@ -1258,3 +1166,99 @@ def test_compact_span_index_epochs_probe_identical(spark, tmp_path):
     assert after == before
     assert any(w > 0 for _, _, w in after)  # cross-epoch duplication seen
     assert n_after < n_before
+
+
+# --- one epoch-index protocol: every family through process_epoch
+
+
+def _rows_hll(lo, hi):
+    return [(i, f"type{i % 3}", i % 40) for i in range(lo, hi)]
+
+
+#: family -> (family, batch schema, rows of a batch over ids [lo, hi))
+_FAMILIES = {
+    "minhash": (SD.minhash(), "doc_id bigint, text string", _dup_docs),
+    "exact": (SD.exact(), "doc_id bigint, text string", _dup_docs),
+    "cdc": (SD.cdc(divisor=4, min_words=1), "doc_id bigint, text string",
+            _cdc_docs),
+    "semantic": (SD.semantic(0.95, dim=16),
+                 "vec_id bigint, embedding array<double>", _emb_batch),
+    "span": (SD.span(k=3), "doc_id bigint, text string", _span_docs),
+    "hll": (SD.hll("user_id", ["event_type"]),
+            "event_id bigint, event_type string, user_id bigint", _rows_hll),
+    "bloom": (SD.bloom("v", [], m=256, k=4), "v string",
+              lambda lo, hi: [(f"val{i}",) for i in range(lo, hi)]),
+    "cms": (SD.cms("token", [], w=32, d=4), "token string",
+            lambda lo, hi: [(f"tok{i % 7}",) for i in range(lo, hi)]),
+}
+
+
+def _family(spark, name):
+    """(family, batch(lo, hi)) for one at-rest family."""
+    family, schema, rows = _FAMILIES[name]
+    return family, lambda lo, hi: spark.createDataFrame(rows(lo, hi), schema)
+
+
+def _snap(spark, path):
+    """Every row under ``path`` (ep column included), order-free."""
+    return sorted(map(repr, spark.read.parquet(path).collect()))
+
+
+@pytest.mark.parametrize("name", sorted(_FAMILIES))
+def test_epoch_retry_out_of_order_is_idempotent(spark, tmp_path, name):
+    """A crash-recovered foreachBatch re-runs an epoch: replaying the SAME
+    batch with the SAME epoch id, out of order and including the
+    bootstrap epoch, must leave index and output exactly as a single run
+    (epoch-pinned prior view, epoch-keyed overwrites, no appends)."""
+    family, batch = _family(spark, name)
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    df1, df2 = batch(0, 20), batch(20, 40)
+    SD.process_epoch(family, df1, 0, idx, out)
+    SD.process_epoch(family, df2, 1, idx, out)
+    out_once, idx_once = _snap(spark, out), _snap(spark, idx)
+
+    SD.process_epoch(family, df2, 1, idx, out)
+    SD.process_epoch(family, df1, 0, idx, out)
+    assert _snap(spark, out) == out_once and out_once
+    assert _snap(spark, idx) == idx_once and idx_once
+
+
+@pytest.mark.parametrize("name", sorted(_FAMILIES))
+def test_epoch_empty_batch_is_noop(spark, tmp_path, name):
+    """foreachBatch delivers empty micro-batches (ADVICE r07: the semantic
+    dim probe used to raise and kill the stream). Empty epochs —
+    bootstrap, mid-stream, or retried — write nothing and leave state
+    untouched."""
+    import os
+
+    family, batch = _family(spark, name)
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    empty = batch(0, 0)
+    SD.process_epoch(family, empty, 0, idx, out)  # bootstrap
+    assert not os.path.exists(idx) and not os.path.exists(out)
+    SD.process_epoch(family, batch(0, 20), 1, idx, out)
+    out_once, idx_once = _snap(spark, out), _snap(spark, idx)
+    SD.process_epoch(family, empty, 2, idx, out)  # mid-stream
+    assert _snap(spark, out) == out_once
+    assert _snap(spark, idx) == idx_once
+    SD.process_epoch(family, empty, 2, idx, out)  # retried empty epoch
+    assert _snap(spark, idx) == idx_once
+    assert not os.path.exists(os.path.join(idx, "ep=2"))
+
+
+@pytest.mark.parametrize("name", sorted(_FAMILIES))
+def test_epoch_empty_output_leaves_out_path_readable(spark, tmp_path, name):
+    """A one-row bootstrap epoch has no pair to emit for the pair
+    families. The epoch's output dir must still carry the schema, so the
+    output root reads back (0 rows, not UNABLE_TO_INFER_SCHEMA) before
+    any epoch has produced a row — and equals the family's bootstrap
+    output for every family."""
+    family, batch = _family(spark, name)
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    one = batch(0, 1)
+    SD.process_epoch(family, one, 0, idx, out)
+    got = spark.read.parquet(out)
+    want = family.bootstrap(one, family.rows(one))
+    assert got.columns == [*want.columns, "ep"]
+    assert (sorted(map(repr, got.drop("ep").collect()))
+            == sorted(map(repr, want.collect())))
