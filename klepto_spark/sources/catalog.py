@@ -3,7 +3,7 @@
 Mirrors the reference's reader surface (SURVEY §2.1 S1-S6):
 - GetTables  (base tables only; views excluded) ->
   reference: pkg/reader/mysql/reader.go:34-57, pkg/reader/postgres/reader.go:36-62
-- GetColumns (cached)                           -> engine.go:52-79
+- GetColumns (resolved handles memoised)        -> engine.go:52-79
 - ReadTable                                     -> engine.go:82-133
 - GetStructure (DDL text)                       -> mysql/reader.go:84-111 / pg_dump
 
@@ -15,6 +15,8 @@ source database exactly as the reference pushes its generated SQL.
 
 from __future__ import annotations
 
+import os
+import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,9 +28,43 @@ CORRUPT_COL = "_corrupt_record"
 
 _MISSING = object()  # "no per-table entry" (None is a stored value)
 
+#: a file table whose newest file changed less than this many seconds
+#: before its fingerprint was taken is resolved but not memoised: a
+#: same-size rewrite inside the filesystem's timestamp granularity leaves
+#: (size, mtime, inode) unchanged, so only a fingerprint older than the
+#: granularity can vouch for the bytes (git's "racily clean" rule). Two
+#: seconds covers the coarsest common granularity (FAT); ext4 and xfs
+#: stamp nanoseconds.
+_RACY_WINDOW_S = 2.0
+
 #: stride_mode="auto" switches to histogram strides when the key span
 #: exceeds this multiple of COUNT(*) — see _derive_partition_options
 _AUTO_SPARSITY_FACTOR = 2
+
+
+def _fingerprint(root: Path) -> tuple | None:
+    """The file state a resolved handle of ``root`` is valid for, or None
+    when no handle may be memoised: the root is missing, a file vanished
+    mid-walk, or the newest file changed within ``_RACY_WINDOW_S``."""
+    now = time.time()
+    try:
+        if not root.is_dir():
+            st = root.stat()
+            files = [("", st.st_size, st.st_mtime_ns, st.st_ino)]
+        else:
+            files = []
+            for dirpath, _, names in os.walk(root):
+                for name in names:
+                    path = os.path.join(dirpath, name)
+                    st = os.stat(path)
+                    files.append((os.path.relpath(path, root), st.st_size,
+                                  st.st_mtime_ns, st.st_ino))
+    except FileNotFoundError:
+        return None
+    newest = max((f[2] for f in files), default=0)
+    if now - newest / 1e9 < _RACY_WINDOW_S:
+        return None
+    return tuple(sorted(files))
 
 
 class FileCatalog:
@@ -54,7 +90,21 @@ class FileCatalog:
     (measured), so one poison row silently widens affected columns to
     string. With a declared schema, type-corrupt rows are detected and
     (in permissive mode) skipped; with inference, only arity-corrupt rows
-    are."""
+    are.
+
+    :meth:`load` memoises each table's resolved DataFrame handle — the
+    file listing, schema inference and merged-view plan — for as long as
+    the table's files are unchanged, so a steal reads each table's
+    metadata once however many pipelines restrict through it. The handle
+    is valid while the table root's fingerprint is: ``(size, mtime_ns,
+    inode)`` of a single-file table, or the sorted ``(relative path,
+    size, mtime_ns, inode)`` of every file beneath a directory table —
+    ``_dvlog``/``_pdvlog`` epochs and journals included, so commits and
+    merge-on-read epochs invalidate it. A fingerprint whose newest mtime
+    is within ``_RACY_WINDOW_S`` of the moment it was taken is never
+    stored, and neither is one taken while bin-pack remnants were
+    present. Every load pays one ``stat`` per file under the table root;
+    the memo lives on the instance, so each ``connect()`` starts empty."""
 
     def __init__(self, spark: SparkSession, directory: str, fmt: str = "parquet",
                  row_mode: str = "strict", schemas: dict | None = None,
@@ -74,7 +124,8 @@ class FileCatalog:
         # type widening at the cost of reading every footer; opt-in
         # because at large file counts that inference pass is real IO.
         self.merge_schema = merge_schema
-        self._columns_cache: dict[str, list[str]] = {}
+        # table -> (fingerprint, resolved handle); see the class docstring
+        self._handles: dict[str, tuple[tuple, DataFrame]] = {}
         if row_mode == "permissive" and fmt == "csv":
             # With parser column pruning, arity-malformed rows are only
             # detected when the FULL row parses — a narrow projection would
@@ -87,9 +138,7 @@ class FileCatalog:
         return sorted(p.stem for p in self.directory.glob(f"*.{self.fmt}"))
 
     def columns(self, table: str) -> list[str]:
-        if table not in self._columns_cache:
-            self._columns_cache[table] = self.load(table).columns
-        return self._columns_cache[table]
+        return self.load(table).columns
 
     def _path(self, table: str) -> str:
         return str(self.directory / f"{table}.{self.fmt}")
@@ -122,9 +171,7 @@ class FileCatalog:
         return reader.load(self._path(table))
 
     def load(self, table: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from klepto_spark.session import ensure_nanos_conf, normalise_nanos_ts
+        from klepto_spark.session import ensure_nanos_conf
         ensure_nanos_conf(self.spark)
         # a crash mid bin-pack publish leaves transient duplicates (news
         # moved in before olds deleted); replay/roll back the journaled
@@ -153,11 +200,9 @@ class FileCatalog:
         remnants = [p for p in (journal, root / "_bpstage")
                     if p.exists()]
         if remnants:
-            import os as _os
-            import time as _time
-            lease = float(_os.environ.get(
+            lease = float(os.environ.get(
                 "KLEPTO_BINPACK_LEASE_SEC", "60"))
-            age = _time.time() - max(p.stat().st_mtime for p in remnants)
+            age = time.time() - max(p.stat().st_mtime for p in remnants)
             if age < lease and journal.exists():
                 raise RuntimeError(
                     f"table {table!r} has a bin-pack publish journal "
@@ -170,6 +215,21 @@ class FileCatalog:
             from klepto_spark.sinks.writers import _hadoop_fs
             jvm, fs, tgt = _hadoop_fs(self.spark.range(0), str(root))
             _recover_binpack(jvm, fs, tgt)
+        fingerprint = None if remnants else _fingerprint(root)
+        hit = self._handles.get(table)  # stored fingerprints are never None
+        if hit is not None and hit[0] == fingerprint:
+            return hit[1]
+        df = self._resolve(table)
+        if fingerprint is not None:
+            self._handles[table] = (fingerprint, df)
+        return df
+
+    def _resolve(self, table: str) -> DataFrame:
+        """Read the table as it stands: file listing, schema, and the
+        positional/deletion-vector merged view."""
+        from pyspark.sql import functions as F
+
+        from klepto_spark.session import normalise_nanos_ts
         if self.fmt in ("csv", "json"):
             if self.row_mode == "permissive":
                 df = (self._raw_permissive(table)

@@ -112,3 +112,6 @@ def test_bench_detail_carries_cold_sample_and_cpus():
         assert isinstance(c, (int, float)) and c > 0, name
     assert "cpus" in detail and "defaultParallelism" in detail
     assert detail["defaultParallelism"] >= 1
+    # local[N] runs N task slots: a stamp that disagrees names the wrong
+    # core count (older artifacts stored the count as a string)
+    assert int(detail["cpus"]) == detail["defaultParallelism"]
