@@ -76,7 +76,12 @@ def hex_int(hash_sql: str, pos: int, nchars: int) -> str:
 
 def hex_mod(hash_sql: str, pos: int, nchars: int, modulus: int, offset: int = 0) -> str:
     """offset + (hex_int % modulus) as BIGINT."""
-    expr = f"({hex_int(hash_sql, pos, nchars)} % {modulus})"
+    return mod_offset(hex_int(hash_sql, pos, nchars), modulus, offset)
+
+
+def mod_offset(int_sql: str, modulus: int, offset: int = 0) -> str:
+    """offset + (int_sql % modulus)."""
+    expr = f"({int_sql} % {modulus})"
     if offset:
         expr = f"({expr} + {offset})"
     return expr

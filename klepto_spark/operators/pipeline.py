@@ -115,10 +115,10 @@ def build_table_df(table: TableSpec, load: LoadFn, *, spec: Spec | None = None,
             df = df.filter(match)
     else:
         df = base
-        for rel in table.relationships:
-            parent = load(rel.referenced_table).alias(rel.referenced_table)
+        for rel, alias in zip(table.relationships, _join_aliases(table)):
+            parent = load(rel.referenced_table).alias(alias)
             join_tbl = rel.table or table.name
-            cond = F.col(f"{rel.referenced_table}.{rel.referenced_key}") == \
+            cond = F.col(f"{alias}.{rel.referenced_key}") == \
                 F.col(f"{join_tbl}.{rel.foreign_key}")
             df = df.join(parent, cond, "inner")
         if match:
@@ -140,37 +140,51 @@ def build_table_df(table: TableSpec, load: LoadFn, *, spec: Spec | None = None,
     if table.filter.limit > 0:
         df = df.limit(table.filter.limit)
 
-    if anonymise and table.anonymise:
-        locale = spec.locale if spec else "en"
+    if anonymise:
+        df = anonymise_projection(
+            df, table.anonymise, table=table.name, seed=seed,
+            locale=spec.locale if spec else "en",
+            cast_policy=table.cast_policy, pii_redact=table.pii_redact)
+    return df
+
+
+def anonymise_projection(df: DataFrame, anonymise: dict[str, str], *,
+                         table: str = "", seed: str = DEFAULT_SEED,
+                         locale: str = "en", cast_policy: str = "string",
+                         pii_redact: list[str] | tuple = ()) -> DataFrame:
+    """The anonymise stage of a table pipeline, batch or streaming: the
+    column fakers (``anonymise``: column -> faker spec), then the
+    ``pii_redact`` free-text masking. Stateless, so the same projection
+    serves a bounded and an unbounded frame.
+
+    The fakers compile to the Spark execution twin of the portable inline
+    text (:func:`anonymise_spark_factored`): reused md5 streams and the
+    per-row keyed strings become a helper pre-projection (codegen stays
+    inside janino's method limit, each stream computed once per row, only
+    when read), and the final projection replaces each column. The oracle
+    replays the INLINE text — values, types and nullability are identical
+    (pytest-pinned).
+
+    All fakers compile in ONE pass of two selectExpr calls (helper
+    pre-projection, then the replacing projection) instead of a
+    select/withColumn/drop triple per column: each faker's SQL reads only
+    ITS OWN source column plus its helpers, so the one-shot projection is
+    value-identical to a sequential loop (k05–k15 oracle parity pins it),
+    and construction costs two py4j calls instead of ~3+|helpers| per
+    column."""
+    if anonymise:
         types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        # Spark execution twin of the portable inline text: reused
-        # md5 streams become a pre-projection (codegen stays inside
-        # janino's method limit, each stream computed once per row)
-        # and the position-keyed fakers compile to higher-order
-        # transform/aggregate lambdas analysed once instead of a
-        # 40-way expanded CASE tree. The oracle replays the INLINE
-        # text — values are identical (pytest-pinned).
-        #
-        # All fakers compile in ONE pass of two selectExpr calls (helper
-        # pre-projection, then the replacing projection) instead of a
-        # select/withColumn/drop triple per column: each faker's SQL
-        # reads only ITS OWN source column plus its helpers, so the
-        # one-shot projection is value-identical to the sequential loop
-        # (k05–k15 oracle parity pins it), and construction drops from
-        # ~3+|helpers| py4j round-trips per column to two calls total —
-        # ~40% of the cheap k-family queries' wall time was this chatter
-        # (measured: k05 350 ms/action, 266 ms in py4j).
         cols = list(df.columns)
         taken = set(cols)
         all_helpers: dict[str, str] = {}
         final_sql: dict[str, str] = {}
-        for col, faker_spec in table.anonymise.items():
+        for col, faker_spec in anonymise.items():
             sql, helpers = anonymise_spark_factored(
-                faker_spec, col, table=table.name, seed=seed,
-                locale=locale, avoid=taken)
-            if table.cast_policy == "keep" and col in types:
+                faker_spec, col, table=table, seed=seed, locale=locale,
+                avoid=taken)
+            if cast_policy == "keep" and col in types:
                 sql = keep_type_sql(faker_spec, sql, types[col],
-                                    context=f"{table.name}.{col}")
+                                    context=f"{table}.{col}")
             all_helpers.update(helpers)
             taken.update(helpers)
             final_sql[col] = sql
@@ -185,16 +199,36 @@ def build_table_df(table: TableSpec, load: LoadFn, *, spec: Spec | None = None,
                 for c in final_sql if c not in cols]
         df = df.selectExpr(*out)
 
-    if anonymise and table.pii_redact:
+    if pii_redact:
         # free-text masking stage (engine extension): declarative regex
         # rules (operators/pii.py), applied after the column fakers so a
         # faked value that still carries PII shapes gets masked too —
         # one projection for all rules (same py4j-chatter rationale)
         from klepto_spark.operators.pii import redact
-        masked = set(table.pii_redact)
+        masked = set(pii_redact)
         df = df.select(*[redact(c).alias(c) if c in masked
                          else F.col(quote_ident(c, "mysql")) for c in df.columns])
     return df
+
+
+def _join_aliases(table: TableSpec) -> list[str]:
+    """The alias of each relationship's parent join in the inner-join
+    shape: the parent's own name the first time it is joined, then
+    ``<parent>_2``, ``<parent>_3``, ... (the target counts as joined), so
+    two FKs to one parent — or an FK to the table itself — join apart
+    instead of under one ambiguous name. Predicates and chained
+    relationships that name the parent bind to its first join."""
+    names = {table.name, *(r.referenced_table for r in table.relationships)}
+    seen = {table.name}
+    aliases = []
+    for rel in table.relationships:
+        alias, k = rel.referenced_table, 1
+        while alias in seen or (k > 1 and alias in names):
+            k += 1
+            alias = f"{rel.referenced_table}_{k}"
+        seen.add(alias)
+        aliases.append(alias)
+    return aliases
 
 
 def _parent_tables(table: TableSpec, match: str) -> set[str]:
@@ -246,10 +280,11 @@ def build_table_sql(table: TableSpec, *, spec: Spec | None = None,
     t = table.name
     sel = ", ".join(f"{t}.{c}" for c in columns)
     sql = f"SELECT {sel} FROM {t}"
-    for rel in table.relationships:
+    for rel, alias in zip(table.relationships, _join_aliases(table)):
         join_tbl = rel.table or t
-        sql += (f" JOIN {rel.referenced_table} ON "
-                f"{rel.referenced_table}.{rel.referenced_key} = "
+        parent = (rel.referenced_table if alias == rel.referenced_table
+                  else f"{rel.referenced_table} AS {alias}")
+        sql += (f" JOIN {parent} ON {alias}.{rel.referenced_key} = "
                 f"{join_tbl}.{rel.foreign_key}")
     match = spec.resolve_matcher(table.filter.match) if spec else table.filter.match
     if match:

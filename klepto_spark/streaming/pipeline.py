@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from klepto_spark.functions.anonymise import anonymise_sql
+from klepto_spark.operators.pipeline import anonymise_projection
 
 
 def read_events_stream(spark: SparkSession, directory: str,
@@ -33,18 +33,13 @@ def read_events_stream(spark: SparkSession, directory: str,
 def anonymise_stream(df: DataFrame, anonymise: dict[str, str],
                      table: str = "", seed: str = "klepto",
                      pii_redact: list[str] | None = None) -> DataFrame:
-    """The anonymise projection is stateless — identical expression code
-    works on stream and batch (same registry, same determinism). Free-text
-    ``pii_redact`` columns run the regex masking rules after the fakers,
-    matching the batch pipeline's PiiRedact stage."""
-    for col, spec in anonymise.items():
-        df = df.withColumn(col, F.expr(anonymise_sql(spec, col, table=table,
-                                                     seed=seed)))
-    if pii_redact:
-        from klepto_spark.operators.pii import redact
-        for col in pii_redact:
-            df = df.withColumn(col, redact(col))
-    return df
+    """The batch pipeline's anonymise stage on a stream: the projection is
+    stateless, so :func:`~klepto_spark.operators.pipeline.anonymise_projection`
+    — the same fakers, the same Spark twin, the same ``pii_redact`` masking
+    after them — serves both, and a stream and a batch over the same rows
+    give the same output."""
+    return anonymise_projection(df, anonymise, table=table, seed=seed,
+                                pii_redact=pii_redact or ())
 
 
 def windowed_rollup(df: DataFrame, window: str = "1 hour",

@@ -326,6 +326,27 @@ def test_format_preserve_numeric_keep_cast(spark):
     assert all(v is not None for v in vals.values())
 
 
+# Twin-parity corpus: every shape class the position-keyed and hashed
+# fakers branch on — NULL, empty, ASCII, non-ASCII, a non-BMP char,
+# lengths around the 40-char keyed prefix (39/40/41/45), digits-only at
+# the Luhn bounds (2/19/20 chars), mixed case and separators.
+TWIN_CORPUS = [
+    None, "", "a", "Z", "9", "42", "Abc-123 x", "4556737586899855",
+    "UPPER lower 987", "alice@x.com", "1234567890123456789",
+    "12345678901234567890", "Customer#000000042", "12-34",
+    "4111111111111111", "ü当ñ x9", "Grüße Zoë", "x😀Y 7 \U0001F600z",
+    "x" * 39 + "9", "y" * 40, "A1b-" * 10 + "Z", "y" * 45, "0" * 19, "00",
+    "25-989-741-2988", "tab\there, 'quoted' \\ back",
+    "abcDEF123!@# spaces ümlaut 0123456789 ABCXYZ tail beyond "
+    "forty chars 99",
+]
+
+
+def _corpus_df(spark):
+    return spark.createDataFrame(list(enumerate(TWIN_CORPUS)),
+                                 "id int, v string")
+
+
 @pytest.mark.parametrize("spec", [
     "FormatPreserve", "FormatPreserveLuhn", "EmailAddress", "FullName",
     "Paragraph", "IPv4", "CreditCardNum:visa", "Password:8:2:2:2:false",
@@ -336,10 +357,7 @@ def test_anonymise_factored_matches_inline(spark, spec):
     oracle replays — for every faker shape, including NULLs."""
     from klepto_spark.functions.anonymise import (
         anonymise_factored, anonymise_sql)
-    df = spark.createDataFrame(
-        [(1, "Abc-123 x"), (2, None), (3, "4556737586899855"),
-         (4, "UPPER lower 987"), (5, "")],
-        "id int, v string")
+    df = _corpus_df(spark)
     inline = anonymise_sql(spec, "v", table="t")
     factored, helpers = anonymise_factored(spec, "v", table="t")
     want = {r.id: r.out for r in
@@ -353,21 +371,16 @@ def test_anonymise_factored_matches_inline(spark, spec):
 
 @pytest.mark.parametrize("spec", ["FormatPreserve", "FormatPreserveLuhn"])
 def test_hof_twins_match_portable(spark, spec):
-    """The higher-order Spark twins of the position-keyed fakers
-    (transform/aggregate lambdas over pre-projected stream arrays,
-    compiled by anonymise_spark_factored) must be value-identical to the
-    inline portable text the oracle replays — across every shape class:
-    empty, NULL, pure digits at each Luhn boundary (2/19/20 chars),
-    mixed case, separators, unicode passthrough, and >40-char tails."""
+    """The keyed-candidate Spark twins of the position-keyed fakers (one
+    `transform` lambda over the pre-projected candidate string, compiled
+    by anonymise_spark_factored) must be value-identical to the inline
+    portable text the oracle replays — across every shape class of
+    TWIN_CORPUS: empty, NULL, pure digits at each Luhn boundary
+    (2/19/20 chars), mixed case, separators, unicode passthrough, and
+    >40-char tails."""
     from klepto_spark.functions.anonymise import (
         anonymise_spark_factored, anonymise_sql)
-    vals = ["", None, "a", "Z", "9", "42", "1234567890123456789",
-            "12345678901234567890", "Customer#000000042", "12-34",
-            "4111111111111111", "ü当ñ x9", "x" * 39 + "9", "y" * 45,
-            "0" * 19, "00",
-            "abcDEF123!@# spaces ümlaut 0123456789 ABCXYZ tail beyond "
-            "forty chars 99"]
-    df = spark.createDataFrame(list(enumerate(vals)), "id int, v string")
+    df = _corpus_df(spark)
     inline = anonymise_sql(spec, "v", table="t")
     twin, helpers = anonymise_spark_factored(spec, "v", table="t")
     assert "transform(" in twin  # really the HOF path, not the fallback
@@ -378,6 +391,91 @@ def test_hof_twins_match_portable(spark, spec):
     got = {r.id: r.out for r in
            stage.selectExpr("id", f"{twin} AS out").collect()}
     assert got == want
+
+
+def _sweep_specs():
+    # every registry name, plus the args form of the parameterised ones
+    # (the bare form exercises parseArgs' zero-value fallback)
+    return [spec for n in FAKER_NAMES
+            for spec in dict.fromkeys([n, ARG_SPECS.get(n, n)])]
+
+
+@pytest.mark.parametrize("locale", ["en", "de", "fr"])
+def test_twin_parity_sweep(spark, locale):
+    """Every faker (args forms included) under every locale: the Spark
+    twin the engine runs equals the inline portable text on value, and
+    on the output field's type and nullability (a nullability drift
+    would change the parquet schema and the dumped SQL DDL)."""
+    from klepto_spark.functions.anonymise import (
+        FAKER_LOCALES, anonymise_spark_factored)
+    assert locale in FAKER_LOCALES
+    specs = _sweep_specs()
+    df = _corpus_df(spark)
+    inline = df.selectExpr("id", *[
+        f"{anonymise_sql(sp, 'v', table='t', locale=locale)} AS c{i}"
+        for i, sp in enumerate(specs)])
+    taken = {"id", "v"}
+    helpers, final = {}, []
+    for i, sp in enumerate(specs):
+        sql, hs = anonymise_spark_factored(sp, "v", table="t",
+                                           locale=locale, avoid=taken)
+        taken.update(hs)
+        helpers.update(hs)
+        final.append(f"{sql} AS c{i}")
+    twin = df.selectExpr("id", "v", *[f"{h} AS {n}"
+                                      for n, h in helpers.items()]
+                         ).selectExpr("id", *final)
+    want_fields = [(f.name, f.dataType, f.nullable)
+                   for f in inline.schema.fields]
+    got_fields = [(f.name, f.dataType, f.nullable)
+                  for f in twin.schema.fields]
+    assert got_fields == want_fields
+    want = {r.id: tuple(r) for r in inline.collect()}
+    got = {r.id: tuple(r) for r in twin.collect()}
+    for i, sp in enumerate(specs):
+        assert ({k: v[i + 1] for k, v in got.items()}
+                == {k: v[i + 1] for k, v in want.items()}), sp
+
+
+#: sha256 of the inline portable text over every faker x locale (see
+#: test_oracle_text_is_pinned); it changes only when the oracle's values do
+ORACLE_TEXT_SHA256 = (
+    "cb65df27d723675147001f5431c7cd8136c0bb8aa04d769e4d1828e1023fc87e")
+
+
+def test_oracle_text_is_pinned():
+    """The DuckDB oracle replays anonymise_sql's text; the Spark twins are
+    free to change, that text is not. Pinned by digest over FAKER_NAMES
+    (args forms included) x FAKER_LOCALES."""
+    import hashlib
+    import logging
+
+    from klepto_spark.functions.anonymise import FAKER_LOCALES
+    logging.disable(logging.WARNING)  # parseArgs' zero-value fallbacks
+    try:
+        texts = [anonymise_sql(sp, "v", table="t", locale=loc)
+                 for loc in FAKER_LOCALES for sp in _sweep_specs()]
+    finally:
+        logging.disable(logging.NOTSET)
+    assert len(texts) == 300
+    digest = hashlib.sha256("\n".join(texts).encode()).hexdigest()
+    assert digest == ORACLE_TEXT_SHA256
+
+
+@pytest.mark.parametrize("spec", ["FullName", "FormatPreserve",
+                                  "EmailAddress", "Company", "Phone",
+                                  "Sentence"])
+def test_twin_uses_byte_view_and_array_kernels(spec):
+    """The Spark twin of the benchmarked fakers decodes hash draws from
+    the byte view and picks words from an array: no per-hex-char
+    ``instr`` walk, no packed-literal ``rtrim(substr(...))`` pick."""
+    from klepto_spark.functions.anonymise import anonymise_spark_factored
+    sql, helpers = anonymise_spark_factored(spec, "v", table="t")
+    text = "\n".join([sql, *helpers.values()])
+    assert "instr('0123456789abcdef'" not in text
+    assert "rtrim(substr('" not in text
+    # ...while the oracle's inline text keeps both
+    assert "instr('0123456789abcdef'" in anonymise_sql(spec, "v", table="t")
 
 
 def test_anonymise_spark_factored_delegates_for_plain_fakers():

@@ -325,6 +325,41 @@ def test_streaming_anonymise_pii_redact_stage(spark, tmp_path):
     assert got == {1: "mail <EMAIL> acct <NUM>", 2: "clean"}
 
 
+def test_stream_and_batch_anonymise_agree(spark, tmp_path):
+    """One anonymise projection for batch and streaming: the same rows
+    through anonymise_stream and build_table_df give identical output —
+    the keyed-candidate (FormatPreserve), array-pick (Sentence) and
+    salted (EmailAddress) fakers, and a pii_redact column after them."""
+    from klepto_spark.config import TableSpec
+    from klepto_spark.operators.pipeline import build_table_df
+    from klepto_spark.streaming.pipeline import (
+        anonymise_stream, run_to_memory)
+    schema = "id bigint, phone string, txt string, email string, note string"
+    src = tmp_path / "agree_src"
+    (spark.createDataFrame(
+        [(1, "25-989-741-2988", "hello", "a@b.io", "mail a@b.io 123456789"),
+         (2, None, None, None, None),
+         (3, "Ab-\u00fc\U0001F600 9z" * 3, "", "x@y.org", "clean"),
+         (4, "", "tail " * 12, "", "acct 9876543210")], schema)
+     .write.parquet(str(src)))
+    fakers = {"phone": "FormatPreserve", "txt": "Sentence",
+              "email": "EmailAddress"}
+    batch = build_table_df(
+        TableSpec(name="t", anonymise=fakers, pii_redact=["note"]),
+        lambda name: spark.read.parquet(str(src)))
+    stream = anonymise_stream(spark.readStream.schema(schema)
+                              .parquet(str(src)), fakers, table="t",
+                              pii_redact=["note"])
+    run_to_memory(stream, "anon_agree")
+    got = spark.table("anon_agree")
+    assert got.columns == batch.columns
+    assert (sorted(tuple(r) for r in got.collect())
+            == sorted(tuple(r) for r in batch.collect()))
+    out = {r.id: r for r in got.collect()}
+    assert out[1].note == "mail <EMAIL> <NUM>"
+    assert out[1].phone != "25-989-741-2988" and len(out[1].phone) == 15
+
+
 def test_merge_files_partitioned_prunes_untouched(spark, tmp_path):
     """Bucket-partitioned merge: only the delta's buckets are rewritten —
     untouched buckets keep their exact files (path, mtime, size), the
