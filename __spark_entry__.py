@@ -903,9 +903,9 @@ def q_exact_append(spark, sf_dir):
     kind = f"exidx-p{D11_PREFIX}-m{D11_MOD}"
 
     def _build():
-        return docs.filter(F.col("doc_id") % D11_MOD != 0).select(
-            F.col("doc_id"),
-            dedup.exact_fingerprint("text", D11_PREFIX).alias("fp"))
+        return dedup.exact_index_rows(
+            docs.filter(F.col("doc_id") % D11_MOD != 0),
+            prefix_words=D11_PREFIX)
 
     path = derived.derived_path(src, kind)
     derived.read_or_build(spark, src, kind, _build)
@@ -1225,7 +1225,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     a full recompute exactly — the t21 contract, which is what this
     oracle hashes."""
     from klepto_spark.operators import bloom_portable as B
-    from klepto_spark.operators.dedup import write_index_meta
+    from klepto_spark.operators.dedup import write_index
     from klepto_spark.sinks import derived
     src = f"{sf_dir}/documents.parquet"
     docs = _load(spark, sf_dir)("documents")
@@ -1245,8 +1245,9 @@ def q_bloom_decontaminate(spark, sf_dir):
         return B.bloom_bits(train, "fp")
 
     idx = derived.read_or_build(spark, src, tag, _build)
-    write_index_meta(spark, derived.derived_path(src, tag), "bloom",
-                     {"m": B.M_BITS, "k": B.K_HASHES})
+    # stamp the published index's scheme ("ignore": its rows are there)
+    write_index(idx, derived.derived_path(src, tag), "bloom", B.scheme(),
+                "ignore")
     return (B.bloom_probe(idx, probe, "fp", id_cols=["doc_id"])
             .select("doc_id", "fp", "maybe_member"))
 
@@ -1309,7 +1310,7 @@ def q_hll_append(spark, sf_dir):
     commutative, so a replayed append cannot even double-count — the
     hazard class the span index needs journaled epochs for vanishes."""
     from klepto_spark.operators import hll_portable as H
-    from klepto_spark.operators.dedup import write_index_meta
+    from klepto_spark.operators.dedup import write_index
     from klepto_spark.sinks import derived
     src = f"{sf_dir}/events.parquet"
     events = _load(spark, sf_dir)("events")
@@ -1323,13 +1324,13 @@ def q_hll_append(spark, sf_dir):
             events.filter(F.col("event_id") % T21_MOD != 0),
             "user_id", ["event_type"])
 
-    derived.read_or_build(spark, src, tag, _build)
-    # Stamp the geometry meta on the published index (idempotent
-    # overwrite) so hll_append's scheme guard actually has something to
+    idx = derived.read_or_build(spark, src, tag, _build)
+    # Stamp the geometry meta on the published index ("ignore": its rows
+    # are there) so hll_append's scheme guard actually has something to
     # check — read_or_build alone never writes _dedupmeta.json
     # (ADVICE r12).
-    write_index_meta(spark, derived.derived_path(src, tag), "hll",
-                     {"p": H._P, "rho_bits": H._RHO_BITS})
+    write_index(idx, derived.derived_path(src, tag), "hll", H.SCHEME,
+                "ignore")
     return H.hll_append(spark, derived.derived_path(src, tag),
                         events.filter(F.col("event_id") % T21_MOD == 0),
                         "user_id", ["event_type"], commit=False)
@@ -2333,12 +2334,10 @@ def q_span_append(spark, sf_dir):
     kind = f"spanidx-k{T18_K}-m{T20_MOD}"
 
     def _build():
-        from klepto_spark.operators.text import _window_grams
-        _, grams = _window_grams(
+        _, grams = T._window_grams(
             docs.filter(F.col("doc_id") % T20_MOD != 3),
             "text", "doc_id", T18_K)
-        return grams.groupBy("h").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"))
+        return T._window_counts(grams)
 
     path = derived.derived_path(src, kind)
     derived.read_or_build(spark, src, kind, _build)
@@ -2403,10 +2402,9 @@ def q_cdc_append(spark, sf_dir):
     kind = (f"cdcidx-d{T17_DIVISOR}-w{D12_MIN_WORDS}-m{D13_MOD}")
 
     def _build():
-        from klepto_spark.operators.text import cdc_chunk_rows
-        return cdc_chunk_rows(
+        return dedup.cdc_index_rows(
             docs.filter(F.col("doc_id") % D13_MOD != 0), "text",
-            "doc_id", T17_DIVISOR, D12_MIN_WORDS).distinct()
+            "doc_id", T17_DIVISOR, D12_MIN_WORDS)
 
     path = derived.derived_path(src, kind)
     derived.read_or_build(spark, src, kind, _build)

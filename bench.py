@@ -8,11 +8,11 @@ The FINAL stdout line is one compact JSON object:
 The per-query map is deliberately NOT on the final line: the driver keeps
 only the last 2000 chars of merged output, and at 81 queries the map alone
 is ~2.2 KB — that truncation made BENCH_r05.json unparseable ("parsed":
-null).  Per-query medians are printed on the PENULTIMATE stdout line (safe:
-the tail is taken from the end, so a long line *before* the final one never
-clips the final one) and, with best/stdev/max, in BENCH_DETAIL.json.  A
-self-check asserts the final line stays < 1500 chars so future surface
-growth cannot regress the contract a third time.
+null).  The PENULTIMATE stdout line carries the medians of the TOP_N
+slowest queries, keyed by query id, 2 decimals (:func:`tail_lines`); all
+medians, with best/stdev/max, are in BENCH_DETAIL.json.  A self-check
+asserts the final line stays < 1500 chars and the two lines together
+< 1900, so both sit inside the driver's tail.
 
 Results are forced with the noop sink (full computation, no driver
 collect); a warmup query amortises JVM/codegen startup out of the first
@@ -35,6 +35,28 @@ import time
 import __spark_entry__ as entry_mod
 from klepto_spark.operators import dedup
 from klepto_spark.session import get_spark
+
+
+#: queries on the penultimate stdout line (the slowest, by median)
+TOP_N = 50
+
+
+def tail_lines(medians: dict[str, float], final: dict) -> list[str]:
+    """The last two stdout lines: the TOP_N slowest queries' medians
+    (2 decimals, keyed by query id — the name up to its first ``_``,
+    unique across the contract), then the final metric object. Both must
+    fit in the driver's 2000-char tail window."""
+    top = sorted(medians.items(), key=lambda kv: kv[1], reverse=True)
+    lines = [json.dumps({"queries": {name.split("_")[0]: round(sec, 2)
+                                     for name, sec in top[:TOP_N]}},
+                        separators=(",", ":")),
+             json.dumps(final, separators=(",", ":"))]
+    assert len(lines[1]) < 1500, (
+        f"bench final line {len(lines[1])} chars >= 1500: would be "
+        "truncated by the driver's 2000-char tail window")
+    assert len(lines[0]) + len(lines[1]) + 2 < 1900, (
+        "bench tail lines would not fit the driver's 2000-char window")
+    return lines
 
 
 def _load_now() -> float:
@@ -255,24 +277,17 @@ def main() -> None:
         pass
     sys.stderr.flush()
     spark.stop()
-    # Penultimate line: per-query medians.  The driver's 2000-char tail is
-    # taken from the END of output, so a long line before the final one
-    # cannot clip the final one — but the final line itself must stay small
-    # (r05: an 81-entry map on the final line pushed it to ~2.2 KB and the
-    # driver recorded "parsed": null).
-    print(json.dumps({"queries": medians}, separators=(",", ":")))
-    final_line = json.dumps(
-        {"metric": "total_query_sec", "value": total_median, "unit": "sec",
-         "sf": sf, "runs": runs, "n_queries": len(timings),
-         "total_best_sec": total, "loadavg_1m": load_start,
-         "loadavg_1m_end": load_end, "n_requeued": len(requeued),
-         "load_gate_passed": load_gate_passed},
-        separators=(",", ":"))
-    # Contract self-check: the driver keeps only the last 2000 chars.
-    assert len(final_line) < 1500, (
-        f"bench final line {len(final_line)} chars >= 1500: would be "
-        "truncated by the driver's 2000-char tail window")
-    print(final_line, flush=True)
+    # The driver's 2000-char tail is taken from the END of output: the
+    # final line must stay small (r05: an 81-entry map on it pushed it to
+    # ~2.2 KB and the driver recorded "parsed": null), and the per-query
+    # line before it must fit beside it (the full 131-query map was
+    # ~3.4 KB, outside the window).
+    print("\n".join(tail_lines(medians, {
+        "metric": "total_query_sec", "value": total_median, "unit": "sec",
+        "sf": sf, "runs": runs, "n_queries": len(timings),
+        "total_best_sec": total, "loadavg_1m": load_start,
+        "loadavg_1m_end": load_end, "n_requeued": len(requeued),
+        "load_gate_passed": load_gate_passed})), flush=True)
 
 
 if __name__ == "__main__":

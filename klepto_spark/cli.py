@@ -349,59 +349,43 @@ def _cmd_dedup_index(args: argparse.Namespace) -> int:
         return 2
     spark = get_spark(app_name="klepto_spark_dedup_index")
     spark.sparkContext.setLogLevel("WARN")
-    mode = args.mode
-    # the index's fingerprint scheme: persisted at build, validated on
-    # append — a mismatched append (e.g. built --prefix-words 8,
-    # appended with the default) probes a DIFFERENT fingerprint space
-    # (zero/wrong pairs) and a commit would mix two schemes in one
-    # index permanently (ADVICE r08)
-    scheme = {"exact": {"key": args.key, "text": args.text,
-                        "prefix_words": args.prefix_words},
-              "minhash": {"key": args.key, "text": args.text, "k": args.k,
-                          "num_hashes": args.num_hashes,
-                          "bands": args.bands},
-              "semantic": {"key": args.key, "vec": args.vec,
-                           "bits": args.bits, "dim": args.dim}}[mode]
+    mode, idx = args.mode, args.index
+    # the family's parameters from the flags; its write stamps the scheme
+    # they make at build and commits under it in append mode, and its
+    # append refuses a scheme other than the stamped one (operators/
+    # dedup.py write_index / read_index / commit_index)
+    params = {
+        "exact": dict(text_col=args.text, key_col=args.key,
+                      prefix_words=args.prefix_words),
+        "minhash": dict(text_col=args.text, key_col=args.key, k=args.k,
+                        num_hashes=args.num_hashes, bands=args.bands),
+        "semantic": dict(vec_col=args.vec, key_col=args.key, bits=args.bits,
+                         dim=args.dim)}[mode]
+    probe_params = {"exact": dict(max_group=args.max_group),
+                    "minhash": dict(max_bucket=args.max_bucket),
+                    "semantic": dict(threshold=args.threshold,
+                                     max_bucket=args.max_bucket)}[mode]
+
+    def write(df, m):
+        getattr(D, f"{mode}_write_index")(df, idx, mode=m, **params)
+
     if args.action == "build":
-        df = spark.read.parquet(args.source)
-        if mode == "exact":
-            D.exact_write_index(df, args.index, args.text, args.key,
-                                args.prefix_words)
-        elif mode == "minhash":
-            D.minhash_write_index(df, args.index, args.text, args.key,
-                                  args.k, args.num_hashes, args.bands)
-        else:
-            D.semantic_write_index(df, args.index, args.vec, args.key,
-                                   args.bits, args.dim)
-        D.write_index_meta(spark, args.index, mode, scheme)
-        n = spark.read.parquet(args.index).count()
+        write(spark.read.parquet(args.source), "overwrite")
+        n = spark.read.parquet(idx).count()
         print(json.dumps({"mode": mode, "index_rows": n, "ok": True}))
         return 0
-    try:
-        D.check_index_meta(spark, args.index, mode, scheme)
-    except ValueError as exc:
-        print(str(exc), file=sys.stderr)
-        return 2
     batch = spark.read.parquet(args.batch)
     commit = not args.no_commit
     # Probe with commit=False regardless of the flag: the fold must
     # happen AFTER the pairs output succeeds, or a failed --pairs-out
     # write leaves the index mutated and a retry double-folds the batch
     # (self-pairs + duplicated fingerprints forever).
-    if mode == "exact":
-        pairs = D.exact_append(spark, args.index, batch, args.text,
-                               args.key, args.prefix_words, commit=False,
-                               max_group=args.max_group)
-    elif mode == "minhash":
-        pairs = D.minhash_append(spark, args.index, batch, args.text,
-                                 args.key, args.k, args.num_hashes,
-                                 args.bands, args.max_bucket,
-                                 commit=False)
-    else:
-        pairs = D.semantic_append(spark, args.index, batch,
-                                  args.threshold, args.vec, args.key,
-                                  args.bits, args.dim, args.max_bucket,
-                                  commit=False)
+    try:
+        pairs = getattr(D, f"{mode}_append")(
+            spark, idx, batch, commit=False, **params, **probe_params)
+    except ValueError as exc:
+        print(str(exc), file=sys.stderr)
+        return 2
     if args.pairs_out:
         pairs.write.mode("overwrite").parquet(args.pairs_out)
         n = spark.read.parquet(args.pairs_out).count()
@@ -409,17 +393,7 @@ def _cmd_dedup_index(args: argparse.Namespace) -> int:
         n = pairs.count()
     if commit:
         # the batch is re-fingerprinted once — O(batch), never O(corpus)
-        D._refuse_epoch_layout(spark, args.index, "dedup-index append")
-        if mode == "exact":
-            D.exact_write_index(batch, args.index, args.text, args.key,
-                                args.prefix_words, mode="append")
-        elif mode == "minhash":
-            D.minhash_write_index(batch, args.index, args.text, args.key,
-                                  args.k, args.num_hashes, args.bands,
-                                  mode="append")
-        else:
-            D.semantic_write_index(batch, args.index, args.vec, args.key,
-                                   args.bits, args.dim, mode="append")
+        write(batch, "append")
     print(json.dumps({"mode": mode, "pairs": n, "committed": commit,
                       "ok": True}))
     return 0

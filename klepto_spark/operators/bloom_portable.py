@@ -51,6 +51,11 @@ M_BITS = 1 << 18
 K_HASHES = 4
 
 
+def scheme(m: int = M_BITS, k: int = K_HASHES) -> dict:
+    """The filter index's scheme: its (m, k) geometry."""
+    return {"m": m, "k": k}
+
+
 def bit_sql(value_sql: str, i: int, m: int = M_BITS) -> str:
     """The i-th bit position for a value: md5 of the salted stringified
     value, first 8 hex chars as an integer, mod m. Pure integer ops —
@@ -82,10 +87,11 @@ def bloom_write(df: DataFrame, value_col: str, group_cols: list[str],
     """Persist the bit rows as the SEVENTH at-rest probe family. The
     (m, k, hash derivation) geometry is recorded in ``_dedupmeta.json``
     so appends with a different scheme refuse instead of silently
-    merging incompatible filters (the hll_write_registers discipline)."""
-    from klepto_spark.operators.dedup import write_index_meta
-    bloom_bits(df, value_col, group_cols, m, k).write.mode(mode).parquet(path)
-    write_index_meta(df.sparkSession, path, "bloom", {"m": m, "k": k})
+    merging incompatible filters (the at-rest index protocol,
+    ``operators.dedup.write_index``)."""
+    from klepto_spark.operators.dedup import write_index
+    write_index(bloom_bits(df, value_col, group_cols, m, k), path, "bloom",
+                scheme(m, k), mode)
 
 
 def bloom_append(spark, path: str, batch: DataFrame, value_col: str,
@@ -96,13 +102,13 @@ def bloom_append(spark, path: str, batch: DataFrame, value_col: str,
     the returned filter is bit-equal to a full recompute over
     old ∪ new, and a REPLAYED commit changes nothing (distinct-on-read
     absorbs duplicate rows) — the t21 idempotence contract."""
-    from klepto_spark.operators.dedup import check_index_meta
-    check_index_meta(spark, path, "bloom", {"m": m, "k": k})
+    from klepto_spark.operators.dedup import commit_index, read_index
     batch_bits = bloom_bits(batch, value_col, group_cols, m, k)
-    idx = spark.read.parquet(path).select(*group_cols, "bloom_bit")
+    idx = read_index(spark, path, (*group_cols, "bloom_bit"), "bloom",
+                     scheme(m, k))
     combined = idx.unionByName(batch_bits).distinct()
     if commit:
-        batch_bits.write.mode("append").parquet(path)
+        commit_index(spark, path, batch_bits, "bloom_append")
     return combined
 
 

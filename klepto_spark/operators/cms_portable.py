@@ -54,6 +54,17 @@ W_COLS = 1024
 D_ROWS = 4
 
 
+#: both geometry params must be in the stored meta: a sketch stamped
+#: without them cannot prove its counters are compatible, and summing
+#: incompatible counters corrupts silently (ADVICE r13)
+REQUIRED = ("w", "d")
+
+
+def scheme(w: int = W_COLS, d: int = D_ROWS) -> dict:
+    """The counter index's scheme: its (w, d) geometry."""
+    return {"w": w, "d": d}
+
+
 def col_sql(value_sql: str, i: int, w: int = W_COLS) -> str:
     """The i-th counter column for a value: md5 of the salted
     stringified value, first 8 hex chars as an integer, mod w. Pure
@@ -101,11 +112,12 @@ def cms_write(df: DataFrame, value_col: str, group_cols: list[str],
     (exact/minhash/semantic/cdc/span/hll/bloom/cms). The (w, d, hash
     derivation) geometry is recorded in ``_dedupmeta.json`` so appends
     with a different scheme refuse instead of silently summing
-    incompatible counters (the hll_write_registers discipline — and a
-    REQUIRED param absent from stored meta refuses too)."""
-    from klepto_spark.operators.dedup import write_index_meta
-    cms_counters(df, value_col, group_cols, w, d).write.mode(mode).parquet(path)
-    write_index_meta(df.sparkSession, path, "cms", {"w": w, "d": d})
+    incompatible counters (the at-rest index protocol,
+    ``operators.dedup.write_index`` — and a :data:`REQUIRED` param absent
+    from stored meta refuses too)."""
+    from klepto_spark.operators.dedup import write_index
+    write_index(cms_counters(df, value_col, group_cols, w, d), path, "cms",
+                scheme(w, d), mode)
 
 
 def cms_append(spark, path: str, batch: DataFrame, value_col: str,
@@ -115,23 +127,16 @@ def cms_append(spark, path: str, batch: DataFrame, value_col: str,
     combined folded counters. Counter addition is exact, so the
     returned sketch is row-identical to a full recompute over
     old ∪ new. Sum is NOT idempotent: a replayed commit would
-    double-count, so this refuses epoch layouts (those belong to the
+    double-count, so a commit refuses epoch layouts (those belong to the
     streaming twin, whose epoch-keyed overwrite IS replay-safe) — the
-    same discipline as the span count index (t20)."""
-    from klepto_spark.operators.dedup import (_refuse_epoch_layout,
-                                              check_index_meta)
-    # both geometry params are REQUIRED in the stored meta: a sketch
-    # stamped without them cannot prove its counters are compatible,
-    # and summing incompatible counters corrupts silently (ADVICE r13)
-    check_index_meta(spark, path, "cms", {"w": w, "d": d},
-                     required=("w", "d"))
+    at-rest index protocol's ``operators.dedup.commit_index`` guard."""
+    from klepto_spark.operators.dedup import commit_index, read_index
     batch_counters = cms_counters(batch, value_col, group_cols, w, d)
-    idx = spark.read.parquet(path).select(*group_cols, "cm_row", "cm_col",
-                                          "cnt")
+    idx = read_index(spark, path, (*group_cols, "cm_row", "cm_col", "cnt"),
+                     "cms", scheme(w, d), REQUIRED)
     combined = fold_counters(idx.unionByName(batch_counters), group_cols)
     if commit:
-        _refuse_epoch_layout(spark, path, "cms_append")
-        batch_counters.write.mode("append").parquet(path)
+        commit_index(spark, path, batch_counters, "cms_append")
     return combined
 
 

@@ -69,6 +69,11 @@ _SMALL_CUTOFF = 2.5 * M           # Flajolet small-range threshold
 # magnitude while staying an exact-parse literal in both engines.
 _LINEAR_TABLE = [f"{M * math.log(M / v):.6f}" for v in range(1, M + 1)]
 
+#: the register index's scheme; one stamped without ``rho_bits`` (the
+#: pre-48-bit word) refuses
+SCHEME = {"p": _P, "rho_bits": _RHO_BITS}
+REQUIRED = ("rho_bits",)
+
 
 def hash_sql(value_sql: str) -> str:
     """md5 over the stringified value — the shared hash for bucket+rho."""
@@ -167,13 +172,10 @@ def hll_write_registers(df: DataFrame, value_col: str,
     register merge is ``max``, which is idempotent AND commutative, so
     commits are pure parquet appends folded by max-on-read — strictly
     simpler than the span index's sum-fold (a replayed append cannot
-    even double-count). The hash scheme (p, the md5 derivation) is
-    recorded in ``_dedupmeta.json`` so appends with a different
-    geometry refuse instead of silently merging incompatible registers."""
-    from klepto_spark.operators.dedup import write_index_meta
-    hll_registers(df, value_col, group_cols).write.mode(mode).parquet(path)
-    write_index_meta(df.sparkSession, path, "hll",
-                     {"p": _P, "rho_bits": _RHO_BITS})
+    even double-count)."""
+    from klepto_spark.operators.dedup import write_index
+    write_index(hll_registers(df, value_col, group_cols), path, "hll",
+                SCHEME, mode)
 
 
 def hll_append(spark, path: str, batch: DataFrame, value_col: str,
@@ -189,15 +191,13 @@ def hll_append(spark, path: str, batch: DataFrame, value_col: str,
     as s13/t20, and the property the t21 oracle hashes. The returned
     frame probes the PRE-append snapshot even after the commit (the
     parquet relation pins its file list at read time)."""
-    from klepto_spark.operators.dedup import check_index_meta
-    check_index_meta(spark, path, "hll", {"p": _P, "rho_bits": _RHO_BITS},
-                     required=("rho_bits",))
+    from klepto_spark.operators.dedup import commit_index, read_index
     batch_regs = hll_registers(batch, value_col, group_cols)
-    idx = spark.read.parquet(path).select(*group_cols, "hll_bucket",
-                                          "hll_r")
+    idx = read_index(spark, path, (*group_cols, "hll_bucket", "hll_r"),
+                     "hll", SCHEME, REQUIRED)
     est = _fold_estimate(idx.unionByName(batch_regs), group_cols)
     if commit:
-        batch_regs.write.mode("append").parquet(path)
+        commit_index(spark, path, batch_regs, "hll_append")
     return est
 
 

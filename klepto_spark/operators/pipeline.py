@@ -244,26 +244,37 @@ def _build_semi(table: TableSpec, base: DataFrame, load: LoadFn,
     (engine.go:140-152, examples/user-orders.toml:33-56). We rebuild that
     chain from the leaf: filter the ultimate parent with any parent-side
     predicate, semi-join downward so each hop only carries keys.
+
+    A parent already on the restrict path (a self-FK ``t.fk -> t.id``, or
+    a longer cycle) is joined once under its own alias
+    (:func:`_join_aliases`) and not re-entered — the single join the
+    inner shape makes — instead of recursing without end.
     """
     parent_preds = _parent_tables(table, match) if match else set()
 
-    # Group relationship edges by the table they hang off ("" = target).
+    # Group relationship edges, with their inner-shape alias, by the table
+    # they hang off ("" = target).
     by_src: dict[str, list] = {}
-    for rel in table.relationships:
-        by_src.setdefault(rel.table or table.name, []).append(rel)
+    for rel, alias in zip(table.relationships, _join_aliases(table)):
+        by_src.setdefault(rel.table or table.name, []).append((rel, alias))
 
-    def restrict(name: str, df: DataFrame) -> DataFrame:
-        for rel in by_src.get(name, []):
-            parent = load(rel.referenced_table).alias(rel.referenced_table)
-            parent = restrict(rel.referenced_table, parent)
-            if rel.referenced_table in parent_preds:
-                parent = parent.filter(F.expr(match))
-            cond = F.col(f"{rel.referenced_table}.{rel.referenced_key}") == \
+    def restrict(name: str, df: DataFrame, path: frozenset) -> DataFrame:
+        for rel, alias in by_src.get(name, []):
+            ref = rel.referenced_table
+            if ref in path:
+                # predicates bind to the first join, as in the inner shape
+                parent = load(ref).alias(alias)
+            else:
+                alias = ref
+                parent = restrict(ref, load(ref).alias(ref), path | {ref})
+                if ref in parent_preds:
+                    parent = parent.filter(F.expr(match))
+            cond = F.col(f"{alias}.{rel.referenced_key}") == \
                 F.col(f"{name}.{rel.foreign_key}")
             df = df.join(parent, cond, "left_semi")
         return df
 
-    return restrict(table.name, base)
+    return restrict(table.name, base, frozenset([table.name]))
 
 
 # ---------------------------------------------------------------------------

@@ -1227,6 +1227,15 @@ SELECT __n.{key_col},
 FROM __n LEFT JOIN __r USING ({key_col})"""
 
 
+def _span_scheme(k: int) -> dict:
+    return {"k": k}
+
+
+def _window_counts(grams: "DataFrame") -> "DataFrame":
+    """(h, cnt) window-hash count rows — the span index's row unit."""
+    return grams.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+
+
 def span_write_index(df: "DataFrame", path: str, text_col: str = "text",
                      key_col: str = "doc_id", k: int = 8,
                      mode: str = "overwrite") -> None:
@@ -1237,14 +1246,10 @@ def span_write_index(df: "DataFrame", path: str, text_col: str = "text",
     corpus. Counts (not per-occurrence rows) are what coverage needs —
     the index is corpus-DISTINCT-window sized, and folding an append is
     a sum-on-read over appended count rows, so commits are pure parquet
-    appends with no rewrite. The window scheme is recorded in
-    ``_dedupmeta.json`` so appends with a different ``k`` refuse instead
-    of silently probing incompatible hashes."""
-    from klepto_spark.operators.dedup import write_index_meta
+    appends with no rewrite."""
+    from klepto_spark.operators.dedup import write_index
     _, grams = _window_grams(df, text_col, key_col, k)
-    (grams.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-     .write.mode(mode).parquet(path))
-    write_index_meta(df.sparkSession, path, "span", {"k": k})
+    write_index(_window_counts(grams), path, "span", _span_scheme(k), mode)
 
 
 def span_append(spark, path, new_docs: "DataFrame",
@@ -1266,29 +1271,19 @@ def span_append(spark, path, new_docs: "DataFrame",
     hash groups aggregate. The returned frame keeps probing the
     PRE-append snapshot even after the commit below (the parquet
     relation pins its file list at read time)."""
-    from klepto_spark.operators.dedup import (_refuse_epoch_layout,
-                                              check_index_meta)
-    check_index_meta(spark, path if not isinstance(path, (list, tuple))
-                     else path[0], "span", {"k": k})
+    from klepto_spark.operators.dedup import commit_index, read_index
     docs, grams = _window_grams(new_docs, text_col, key_col, k)
-    batch_cnt = (grams.groupBy("h")
-                 .agg(F.count(F.lit(1)).cast("long").alias("bc")))
-    paths = list(path) if isinstance(path, (list, tuple)) else [path]
-    idx = spark.read.parquet(*paths).select("h", "cnt")
+    batch_cnt = _window_counts(grams)
+    idx = read_index(spark, path, ("h", "cnt"), "span", _span_scheme(k))
     probe = batch_cnt.select("h")
     idx_cnt = (idx.join(F.broadcast(probe), "h", "left_semi")
                .groupBy("h").agg(F.sum("cnt").alias("ic")))
     dup_h = (batch_cnt.join(idx_cnt, "h", "left")
-             .filter(F.col("bc") + F.coalesce(F.col("ic"), F.lit(0))
+             .filter(F.col("cnt") + F.coalesce(F.col("ic"), F.lit(0))
                      >= min_count)
              .select("h"))
     occ = grams.join(dup_h, "h", "left_semi").select(key_col, "pos")
     out = _span_coverage(docs, occ, key_col, k)
     if commit:
-        if isinstance(path, (list, tuple)):
-            raise ValueError("commit=True needs a single index root, "
-                             "not a path list")
-        _refuse_epoch_layout(spark, path, "span_append")
-        (batch_cnt.select("h", F.col("bc").alias("cnt"))
-         .write.mode("append").parquet(path))
+        commit_index(spark, path, batch_cnt, "span_append")
     return out

@@ -145,8 +145,8 @@ def exact(text_col: str = "text", key_col: str = "doc_id",
     fingerprint index (:func:`operators.dedup.exact_append`); the batch
     commits its (key, fp) rows."""
     return Family(
-        rows=lambda batch: batch.select(F.col(key_col), D.exact_fingerprint(
-            text_col, prefix_words).alias("fp")),
+        rows=lambda batch: D.exact_index_rows(batch, text_col, key_col,
+                                              prefix_words),
         bootstrap=lambda _, fp: (
             fp.withColumnRenamed(key_col, "a")
             .join(fp.withColumnRenamed(key_col, "b"), "fp")
@@ -164,8 +164,8 @@ def cdc(text_col: str = "text", key_col: str = "doc_id", divisor: int = 8,
     (:func:`operators.dedup.cdc_append`); the batch commits its (key, h)
     chunk-hash rows."""
     return Family(
-        rows=lambda batch: T.cdc_chunk_rows(
-            batch, text_col, key_col, divisor, min_words).distinct(),
+        rows=lambda batch: D.cdc_index_rows(
+            batch, text_col, key_col, divisor, min_words),
         bootstrap=lambda batch, _: D.cdc_near_dup_pairs(
             batch, text_col, key_col, divisor, min_shared, min_words,
             max_bucket),
@@ -199,13 +199,9 @@ def span(text_col: str = "text", key_col: str = "doc_id", k: int = 8,
     (h, cnt) window-count rows. The index stores COUNTS that sum on
     read, so the ep= overwrite is load-bearing: it keeps a replayed
     batch from double-counting its own windows."""
-    def rows(batch):
-        _, grams = T._window_grams(batch, text_col, key_col, k)
-        return grams.groupBy("h").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"))
-
     return Family(
-        rows,
+        rows=lambda batch: T._window_counts(
+            T._window_grams(batch, text_col, key_col, k)[1]),
         bootstrap=lambda batch, _: T.dup_span_stats(
             batch, text_col, key_col, k, min_count),
         append=lambda batch, _, prior: T.span_append(
@@ -221,14 +217,12 @@ def hll(value_col: str, group_cols: list[str]) -> Family:
     bucket, rho) register rows. Register merge is MAX, which is
     idempotent: a replayed epoch could not double-count even without the
     epoch-pinned view."""
-    def estimates(batch, regs, prior=()):
-        if prior:
-            regs = regs.unionByName(batch.sparkSession.read.parquet(
-                *prior).select(*regs.columns))
-        return H._fold_estimate(regs, group_cols)
-
-    return Family(lambda batch: H.hll_registers(batch, value_col, group_cols),
-                  estimates, estimates)
+    return Family(
+        rows=lambda batch: H.hll_registers(batch, value_col, group_cols),
+        bootstrap=lambda _, regs: H._fold_estimate(regs, group_cols),
+        append=lambda batch, _, prior: H.hll_append(
+            batch.sparkSession, prior, batch, value_col, group_cols,
+            commit=False))
 
 
 def bloom(value_col: str, group_cols: list[str], m: int | None = None,
@@ -244,9 +238,9 @@ def bloom(value_col: str, group_cols: list[str], m: int | None = None,
     k = k or B.K_HASHES
 
     def verdicts(batch, bits, prior=()):
-        prior_bits = (batch.sparkSession.read.parquet(*prior)
-                      .select(*bits.columns).distinct() if prior
-                      else bits.limit(0))
+        prior_bits = (D.read_index(batch.sparkSession, prior, bits.columns,
+                                   "bloom", B.scheme(m, k)).distinct()
+                      if prior else bits.limit(0))
         return B.bloom_probe(prior_bits, batch, value_col, group_cols,
                              m=m, k=k)
 
@@ -267,15 +261,16 @@ def cms(value_col: str, group_cols: list[str], w: int | None = None,
     w = w or C.W_COLS
     d = d or C.D_ROWS
 
-    def estimates(batch, counters, prior=()):
-        if prior:
-            counters = counters.unionByName(batch.sparkSession.read.parquet(
-                *prior).select(*counters.columns))
-        return C.cms_probe(C.fold_counters(counters, group_cols), batch,
-                           value_col, group_cols, w=w, d=d)
+    def probe(batch, counters):
+        return C.cms_probe(counters, batch, value_col, group_cols, w=w, d=d)
 
-    return Family(lambda batch: C.cms_counters(
-        batch, value_col, group_cols, w, d), estimates, estimates)
+    return Family(
+        rows=lambda batch: C.cms_counters(batch, value_col, group_cols, w, d),
+        bootstrap=lambda batch, counters: probe(
+            batch, C.fold_counters(counters, group_cols)),
+        append=lambda batch, _, prior: probe(batch, C.cms_append(
+            batch.sparkSession, prior, batch, value_col, group_cols,
+            commit=False, w=w, d=d)))
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from bench import outlier_queries
+from bench import TOP_N, outlier_queries, tail_lines
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -115,3 +115,31 @@ def test_bench_detail_carries_cold_sample_and_cpus():
     # local[N] runs N task slots: a stamp that disagrees names the wrong
     # core count (older artifacts stored the count as a string)
     assert int(detail["cpus"]) == detail["defaultParallelism"]
+
+
+def test_tail_lines_fit_the_driver_window_at_worst_case_length():
+    """The per-query line and the final line must both sit inside the
+    driver's 2000-char tail: 131 synthetic names as long as the longest
+    contract name, every median >= 1000 s, and a worst-case final
+    object."""
+    import __spark_entry__ as entry
+
+    names = list(entry.queries())
+    ids = [n.split("_")[0] for n in names]
+    assert len(set(ids)) == len(ids) == 131  # the line's keys stay unique
+    width = max(map(len, names))
+    fake = {f"{chr(97 + i // 100)}{i % 100:02d}_".ljust(width, "x"):
+            1000.0 + i + 0.129 for i in range(131)}
+    final = {"metric": "total_query_sec", "value": 123456.789,
+             "unit": "sec", "sf": 0.1, "runs": 10, "n_queries": 131,
+             "total_best_sec": 123456.789, "loadavg_1m": 123.45,
+             "loadavg_1m_end": 123.45, "n_requeued": 131,
+             "load_gate_passed": False}
+    top, last = tail_lines(fake, final)
+    assert len(top) + len(last) + 2 < 1900
+    assert json.loads(last) == final
+    got = json.loads(top)["queries"]
+    assert len(got) == TOP_N
+    # the slowest TOP_N, rounded to 2 decimals
+    assert min(got.values()) == round(1000.0 + 131 - TOP_N + 0.129, 2)
+    assert all(v == round(v, 2) for v in got.values())

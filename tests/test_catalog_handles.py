@@ -303,6 +303,35 @@ def test_two_fks_to_one_parent_share_its_handle(spark, tmp_path):
         assert sorted(tuple(r) for r in got.collect()) == want, strategy
 
 
+def test_self_fk_copies_like_build_table_sql(spark, tmp_path):
+    """A self-FK (emp.mgr -> emp.id): the semi shape joins the self-parent
+    once under its own alias (emp_2) instead of re-entering emp without
+    end, and both strategies copy the rows of build_table_sql run in
+    DuckDB."""
+    rows = [(1, None), (2, 1), (3, 2), (4, 9), (5, 5)]
+    _write(tmp_path / "emp.parquet", rows,
+           pa.schema([("id", pa.int64()), ("mgr", pa.int64())]))
+    _backdate(tmp_path)
+    cat = FileCatalog(spark, str(tmp_path))
+    t = TableSpec(name="emp", relationships=[
+        Relationship(foreign_key="mgr", referenced_table="emp",
+                     referenced_key="id")])
+    sql = build_table_sql(t, columns=["id", "mgr"])
+    assert "JOIN emp AS emp_2 ON emp_2.id = emp.mgr" in sql
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW emp AS SELECT * FROM "
+                    f"read_parquet('{tmp_path}/emp.parquet')")
+        want = sorted(con.execute(sql).fetchall())
+    finally:
+        con.close()
+    assert want == [(2, 1), (3, 2), (5, 5)]
+    for strategy in ("inner", "semi"):
+        got = build_table_df(t, cat.load, join_strategy=strategy)
+        assert got.columns == ["id", "mgr"], strategy
+        assert sorted(tuple(r) for r in got.collect()) == want, strategy
+
+
 def test_concurrent_loads_share_one_settled_handle(spark, tmp_path):
     """Engine threads load the same tables at once: racing misses may each
     resolve, but every caller gets the table's rows, and once the threads

@@ -1262,3 +1262,109 @@ def test_epoch_empty_output_leaves_out_path_readable(spark, tmp_path, name):
     assert got.columns == [*want.columns, "ep"]
     assert (sorted(map(repr, got.drop("ep").collect()))
             == sorted(map(repr, want.collect())))
+
+
+# --- one at-rest index protocol: every family's batch build/probe/commit
+
+from klepto_spark.operators import (  # noqa: E402
+    bloom_portable as B, cms_portable as C, dedup as D, hll_portable as H,
+    text as T)
+
+#: family -> (write(df, path, **scheme), append(spark, path, df, commit,
+#: **scheme), another scheme). hll's geometry is fixed in code, so an
+#: index built under another one is simulated by its stamp (None).
+_BATCH = {
+    "minhash": (D.minhash_write_index,
+                lambda s, p, df, c, **kw: D.minhash_append(
+                    s, p, df, commit=c, **kw), {"k": 3}),
+    "exact": (D.exact_write_index,
+              lambda s, p, df, c, **kw: D.exact_append(
+                  s, p, df, commit=c, **kw), {"prefix_words": 4}),
+    "cdc": (D.cdc_write_index,
+            lambda s, p, df, c, **kw: D.cdc_append(s, p, df, commit=c, **kw),
+            {"divisor": 4}),
+    "semantic": (D.semantic_write_index,
+                 lambda s, p, df, c, **kw: D.semantic_append(
+                     s, p, df, 0.95, commit=c, **kw), {"bits": 8}),
+    "span": (T.span_write_index,
+             lambda s, p, df, c, **kw: T.span_append(s, p, df, commit=c,
+                                                     **kw), {"k": 3}),
+    "hll": (lambda df, p, **kw: H.hll_write_registers(
+                df, "user_id", ["event_type"], p, **kw),
+            lambda s, p, df, c, **kw: H.hll_append(
+                s, p, df, "user_id", ["event_type"], commit=c, **kw), None),
+    "bloom": (lambda df, p, **kw: B.bloom_write(df, "v", [], p, **kw),
+              lambda s, p, df, c, **kw: B.bloom_append(s, p, df, "v", [],
+                                                       commit=c, **kw),
+              {"m": 256}),
+    "cms": (lambda df, p, **kw: C.cms_write(df, "token", [], p, **kw),
+            lambda s, p, df, c, **kw: C.cms_append(s, p, df, "token", [],
+                                                   commit=c, **kw),
+            {"w": 32}),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BATCH))
+def test_index_append_refuses_another_scheme(spark, tmp_path, name):
+    """An index built with one scheme and probed with another would
+    answer from a different hash space (and a commit would mix two
+    schemes in one index): the append refuses."""
+    write, append, other = _BATCH[name]
+    _, batch = _family(spark, name)
+    idx = str(tmp_path / "idx")
+    if other is None:
+        write(batch(0, 20), idx)
+        D.write_index_meta(spark, idx, name, {"p": 4, "rho_bits": 48})
+    else:
+        write(batch(0, 20), idx, **other)
+    with pytest.raises(ValueError, match="different scheme"):
+        append(spark, idx, batch(20, 40), True)
+
+
+@pytest.mark.parametrize("name", sorted(_BATCH))
+def test_index_commit_refuses_epoch_index(spark, tmp_path, name):
+    """A flat commit into a process_epoch-built index would land in every
+    epoch's prior view, so a replayed epoch would read rows that arrived
+    after it: commit=True refuses and names process_epoch, and the index
+    keeps its epoch-only layout."""
+    import os
+
+    family, batch = _family(spark, name)
+    _, append, _ = _BATCH[name]
+    idx = str(tmp_path / "idx")
+    SD.process_epoch(family, batch(0, 20), 0, idx, str(tmp_path / "out"))
+    with pytest.raises(ValueError, match="process_epoch"):
+        append(spark, idx, batch(20, 40), True)
+    assert [n for n in os.listdir(idx) if not n.startswith((".", "_"))] \
+        == ["ep=0"]
+
+
+@pytest.mark.parametrize("name", sorted(_BATCH))
+def test_index_commit_refuses_path_list(spark, tmp_path, name):
+    write, append, _ = _BATCH[name]
+    _, batch = _family(spark, name)
+    idx = str(tmp_path / "idx")
+    write(batch(0, 20), idx)
+    with pytest.raises(ValueError, match="single index root"):
+        append(spark, [idx], batch(20, 40), True)
+
+
+@pytest.mark.parametrize("name", sorted(_BATCH))
+def test_index_defaults_round_trip(spark, tmp_path, name):
+    """Built and appended with the defaults, the index stamps its family's
+    scheme and accepts the commit and the next probe; semantic stamps the
+    dim it resolved from the rows."""
+    import json
+    import os
+
+    write, append, _ = _BATCH[name]
+    _, batch = _family(spark, name)
+    idx = str(tmp_path / "idx")
+    write(batch(0, 20), idx)
+    append(spark, idx, batch(20, 40), True).collect()
+    append(spark, idx, batch(40, 60), False).collect()
+    with open(os.path.join(idx, D.INDEX_META)) as fh:
+        meta = json.load(fh)
+    assert meta["mode"] == name
+    if name == "semantic":
+        assert meta["dim"] == 16
