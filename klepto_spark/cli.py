@@ -299,6 +299,7 @@ def _cmd_history(args: argparse.Namespace) -> int:
     floor — what ``snapshot --epoch`` can still serve."""
     from klepto_spark.session import get_spark
     from klepto_spark.sinks import deletion_vectors as dv
+    from klepto_spark.sinks.tablefs import hadoop_fs, table_path
     from klepto_spark.sources.dsn import file_path, route
 
     kind, fmt, dsn = route(args.source)
@@ -311,12 +312,9 @@ def _cmd_history(args: argparse.Namespace) -> int:
     directory = file_path(dsn)
     out = {}
     for table in args.table:
-        from klepto_spark.sinks.deletion_vectors import (
-            _hadoop_fs, _target, load_dv_meta)
-        jvm, fs, tgt = _hadoop_fs(spark.range(0),
-                                  _target(directory, table, fmt))
         epochs = dv.pending_epochs(spark, directory, table, fmt)
-        meta = load_dv_meta(jvm, fs, tgt) if fs.exists(tgt) else None
+        meta = dv.load_dv_meta(*hadoop_fs(
+            spark, table_path(directory, table, fmt)))
         floor = (meta or {}).get("base_epoch", 0)
         if epochs:
             floor = max(floor, epochs[0]["id"] - 1)

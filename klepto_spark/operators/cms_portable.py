@@ -110,14 +110,14 @@ def cms_write(df: DataFrame, value_col: str, group_cols: list[str],
               w: int = W_COLS, d: int = D_ROWS) -> None:
     """Persist the counter rows as the EIGHTH at-rest probe family
     (exact/minhash/semantic/cdc/span/hll/bloom/cms). The (w, d, hash
-    derivation) geometry is recorded in ``_dedupmeta.json`` so appends
-    with a different scheme refuse instead of silently summing
-    incompatible counters (the at-rest index protocol,
-    ``operators.dedup.write_index`` — and a :data:`REQUIRED` param absent
-    from stored meta refuses too)."""
+    derivation) geometry is recorded in ``_dedupmeta.json``, so
+    ``mode="append"`` and :func:`cms_append` refuse a different scheme
+    instead of silently summing incompatible counters, and refuse a
+    stamp that lacks a :data:`REQUIRED` param (the at-rest index
+    protocol, ``operators.dedup.write_index``)."""
     from klepto_spark.operators.dedup import write_index
     write_index(cms_counters(df, value_col, group_cols, w, d), path, "cms",
-                scheme(w, d), mode)
+                scheme(w, d), mode, REQUIRED)
 
 
 def cms_append(spark, path: str, batch: DataFrame, value_col: str,

@@ -20,9 +20,9 @@ hot path.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import Column, DataFrame, functions as F
+
+from klepto_spark.sinks.tablefs import hadoop_fs, read_json, sub, write_json
 
 
 #: id(df) -> (df, numPartitions). The strong reference to ``df`` keeps the
@@ -376,13 +376,8 @@ def write_index_meta(spark, path: str, mode: str, params: dict) -> None:
     against it (:func:`check_index_meta`): probing an index with a
     different scheme silently produces zero/wrong pairs, and a committed
     append would mix two schemes in the same index forever (ADVICE r08)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(root, INDEX_META), True)
-    out.write(bytearray(json.dumps(
-        {"mode": mode, **params}).encode("utf-8")))
-    out.close()
+    jvm, fs, root = hadoop_fs(spark, path)
+    write_json(fs, sub(jvm, root, INDEX_META), {"mode": mode, **params})
 
 
 def check_index_meta(spark, path: str, mode: str, params: dict,
@@ -395,18 +390,10 @@ def check_index_meta(spark, path: str, mode: str, params: dict,
     across versions (e.g. hll's rho word width) makes an old index
     stamped without it incompatible, and "key absent" must refuse like
     "key differs" (ADVICE r13)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    jp = jvm.org.apache.hadoop.fs.Path(root, INDEX_META)
-    if not fs.exists(jp):
+    jvm, fs, root = hadoop_fs(spark, path)
+    meta = read_json(jvm, fs, sub(jvm, root, INDEX_META))
+    if meta is None:
         return
-    stream = fs.open(jp)
-    try:
-        meta = json.loads(
-            jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
     want = {"mode": mode, **params}
     bad = {k: (meta.get(k), v) for k, v in want.items()
            if (k in meta and meta[k] != v)
@@ -426,17 +413,18 @@ def check_index_meta(spark, path: str, mode: str, params: dict,
 
 
 def write_index(rows: DataFrame, path: str, family: str, scheme: dict,
-                mode: str = "overwrite") -> None:
+                mode: str = "overwrite", required: tuple = ()) -> None:
     """Write an at-rest index's rows at ``path`` and stamp the ``family``
     ``scheme`` they were built with. ``mode="append"`` is a commit: the
-    scheme must match the recorded one, the rows land through
+    scheme must match the recorded one (each key in ``required`` must be
+    recorded, as in :func:`read_index`), the rows land through
     :func:`commit_index`, and the build-time stamp stays as it is.
     ``mode="ignore"`` skips the write where rows already exist, so it
     stamps an index another writer published (the derived store's
     staging-swap)."""
     spark = rows.sparkSession
     if mode == "append":
-        check_index_meta(spark, path, family, scheme)
+        check_index_meta(spark, path, family, scheme, required)
         commit_index(spark, path, rows, f"{family}_append")
         return
     rows.write.mode(mode).parquet(path)

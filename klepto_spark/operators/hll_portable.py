@@ -175,7 +175,7 @@ def hll_write_registers(df: DataFrame, value_col: str,
     even double-count)."""
     from klepto_spark.operators.dedup import write_index
     write_index(hll_registers(df, value_col, group_cols), path, "hll",
-                SCHEME, mode)
+                SCHEME, mode, REQUIRED)
 
 
 def hll_append(spark, path: str, batch: DataFrame, value_col: str,

@@ -35,6 +35,10 @@ Single-writer per table, like every file-sink merge in this package.
 Capture windows must carry one version per key (``steal_cdc`` guarantees
 this); the resolution picks one arbitrary row of a same-epoch duplicate.
 
+The log, meta and contract sidecars, the epoch listing and the vacuum's
+journaled publish are the table layout of :mod:`klepto_spark.sinks.tablefs`;
+every mutation here opens the table through its ``open_table``.
+
 Reference scope note: hellofresh/klepto rewrites whole tables per run
 (pkg/dumper/engine/engine.go); incremental file-sink state is an engine
 extension, like incremental.py.
@@ -42,79 +46,34 @@ extension, like incremental.py.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from klepto_spark.sinks.tablefs import (
+    BINPACK_STAGE, BUCKET_COL, DV_LOG, DV_META, PDV_LOG, SCHEMA_FILE, drop,
+    epoch_log, epoch_name, hadoop_fs, invalidate_manifest,
+    is_bucket_layout, open_table, pending, publish_staged, read_contract,
+    read_json, read_layout, sub, table_path, write_contract, write_json)
 from klepto_spark.sinks.writers import (
-    BUCKET_COL,
-    _hadoop_fs,
-    _load_layout,
-    _load_schema_contract,
-    _save_schema_contract,
-    align_to_contract,
-    merge_files,
-    merge_files_partitioned,
-    write_files,
-)
+    align_to_contract, merge_files, merge_files_partitioned, table_reader,
+    write_files)
 
-_LOG_DIR = "_dvlog"
 _DELTA_DIR = "_delta"
 _DV_DIR = "_dv"
-_META_FILE = "_dvmeta.json"
 EPOCH_COL = "_dv_epoch"
-
-
-def _target(directory: str, table: str, fmt: str) -> str:
-    return f"{directory.rstrip('/')}/{table}.{fmt}"
-
-
-def _epoch_name(n: int) -> str:
-    return f"e{n:06d}"
-
-
-def _read_json(jvm, fs, path) -> dict:
-    stream = fs.open(path)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def _write_json(fs, path, payload: dict) -> None:
-    out = fs.create(path, True)
-    out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    out.close()
-
-
-def _sub(jvm, base, *parts: str):
-    p = base
-    for part in parts:
-        p = jvm.org.apache.hadoop.fs.Path(p, part)
-    return p
 
 
 def committed_epochs(jvm, fs, tgt) -> list[dict]:
     """The table's committed epochs, oldest first. The commit file IS the
     publish: data directories without one are invisible (a crashed append
     left them; the next merge removes them)."""
-    log_dir = _sub(jvm, tgt, _LOG_DIR)
-    if not fs.exists(log_dir):
-        return []
-    out = []
-    for status in fs.listStatus(log_dir):
-        name = status.getPath().getName()
-        if name.startswith("e") and name.endswith(".json"):
-            out.append(_read_json(jvm, fs, status.getPath()))
-    return sorted(out, key=lambda e: e["id"])
+    return epoch_log(jvm, fs, tgt, DV_LOG)
 
 
 def _clean_uncommitted(jvm, fs, tgt, committed_ids: set[int]) -> None:
     """Remove epoch data dirs that have no commit file — the leftovers of
     a merge that crashed between the data write and the commit."""
     for d in (_DELTA_DIR, _DV_DIR):
-        parent = _sub(jvm, tgt, d)
+        parent = sub(jvm, tgt, d)
         if not fs.exists(parent):
             continue
         for status in fs.listStatus(parent):
@@ -129,26 +88,12 @@ def _clean_uncommitted(jvm, fs, tgt, committed_ids: set[int]) -> None:
                 fs.delete(status.getPath(), True)
 
 
-def _meta_path(jvm, tgt):
-    return _sub(jvm, tgt, _META_FILE)
-
-
 def load_dv_meta(jvm, fs, tgt) -> dict | None:
-    path = _meta_path(jvm, tgt)
-    if not fs.exists(path):
-        return None
-    return _read_json(jvm, fs, path)
+    return read_json(jvm, fs, sub(jvm, tgt, DV_META))
 
 
-def _base_reader(spark: SparkSession, fmt: str, contract):
-    reader = spark.read.format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-        reader = (reader.schema(contract) if contract is not None
-                  else reader.option("inferSchema", "true"))
-    elif contract is not None:
-        reader = reader.schema(contract)
-    return reader
+def _write_meta(jvm, fs, tgt, meta: dict) -> None:
+    write_json(fs, sub(jvm, tgt, DV_META), meta)
 
 
 def merge_files_dv(df: DataFrame, directory: str, table: str, fmt: str,
@@ -164,9 +109,9 @@ def merge_files_dv(df: DataFrame, directory: str, table: str, fmt: str,
     ``auto_compact``: fold epochs into the base when pending event rows
     exceed this fraction of the base's rows (None disables; compaction
     is then the caller's cadence via :func:`compact_files_dv`)."""
-    target = _target(directory, table, fmt)
+    target = table_path(directory, table, fmt)
     spark = df.sparkSession
-    jvm, fs, tgt = _hadoop_fs(df, target)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
 
     if not fs.exists(tgt):
         if n_buckets:
@@ -178,8 +123,8 @@ def merge_files_dv(df: DataFrame, directory: str, table: str, fmt: str,
                 first = first.join(deletes.select(*keys).distinct(),
                                    on=keys, how="left_anti")
             write_files(first, directory, table, fmt, mode="overwrite")
-            _save_schema_contract(jvm, fs, tgt, df.schema)
-        _write_json(fs, _meta_path(jvm, tgt), {"keys": list(keys)})
+            write_contract(jvm, fs, tgt, df.schema)
+        _write_meta(jvm, fs, tgt, {"keys": list(keys)})
         return
 
     meta = load_dv_meta(jvm, fs, tgt)
@@ -188,7 +133,7 @@ def merge_files_dv(df: DataFrame, directory: str, table: str, fmt: str,
             f"table {table!r} tracks deletion vectors by keys "
             f"{meta['keys']}, merge requested {list(keys)}: key identity "
             "cannot change without compacting and rewriting")
-    layout = _load_layout(jvm, fs, tgt)
+    layout = read_layout(jvm, fs, tgt)
     if layout is not None and list(layout["keys"]) != list(keys):
         raise ValueError(
             f"table {table!r} was bucketed by keys {layout['keys']}, "
@@ -203,29 +148,29 @@ def merge_files_dv(df: DataFrame, directory: str, table: str, fmt: str,
     floor = (meta or {}).get("base_epoch", 0)
     next_id = max(epochs[-1]["id"] if epochs else 0, floor) + 1
 
-    contract = _load_schema_contract(jvm, fs, tgt)
+    contract = read_contract(jvm, fs, tgt)
     if contract is None:
         # adopting a pre-contract table: the at-rest schema becomes the
         # contract now, so later epochs and the view stay type-stable
-        base_probe = _base_reader(spark, fmt, None).load(target)
+        base_probe = table_reader(spark, fmt).load(target)
         from pyspark.sql.types import StructType
         contract = StructType(
             [f for f in base_probe.schema.fields if f.name != BUCKET_COL])
-        _save_schema_contract(jvm, fs, tgt, contract)
+        write_contract(jvm, fs, tgt, contract)
     table_types = {f.name: f.dataType for f in contract.fields}
 
     delta = align_to_contract(df, table_types, table)
-    name = _epoch_name(next_id)
+    name = epoch_name(next_id)
     delta_rows = dv_rows = 0
     if delta.columns:
         counted = delta.withColumn(EPOCH_COL, F.lit(next_id))
-        path = str(_sub(jvm, tgt, _DELTA_DIR, name))
+        path = str(sub(jvm, tgt, _DELTA_DIR, name))
         counted.write.mode("overwrite").parquet(path)
         delta_rows = spark.read.parquet(path).count()
     if deletes is not None:
         dels = align_to_contract(deletes.select(*keys).distinct(),
                                  table_types, table)
-        path = str(_sub(jvm, tgt, _DV_DIR, name))
+        path = str(sub(jvm, tgt, _DV_DIR, name))
         dels.withColumn(EPOCH_COL, F.lit(next_id)) \
             .write.mode("overwrite").parquet(path)
         dv_rows = spark.read.parquet(path).count()
@@ -233,26 +178,24 @@ def merge_files_dv(df: DataFrame, directory: str, table: str, fmt: str,
         _clean_uncommitted(jvm, fs, tgt, {e["id"] for e in epochs})
         return
     # the commit point: one file create publishes the epoch atomically
-    log_dir = _sub(jvm, tgt, _LOG_DIR)
+    log_dir = sub(jvm, tgt, DV_LOG)
     if not fs.exists(log_dir):
         fs.mkdirs(log_dir)
-    _write_json(fs, _sub(jvm, tgt, _LOG_DIR, f"{name}.json"),
-                {"id": next_id, "delta_rows": delta_rows,
-                 "dv_rows": dv_rows})
+    write_json(fs, sub(jvm, log_dir, f"{name}.json"),
+               {"id": next_id, "delta_rows": delta_rows, "dv_rows": dv_rows})
     if meta is None:
-        _write_json(fs, _meta_path(jvm, tgt), {"keys": list(keys)})
+        _write_meta(jvm, fs, tgt, {"keys": list(keys)})
     if not epochs:
         # first epoch on an optimized table: the min/max manifest only
         # describes the base files, so a pruned read would skip every
         # epoch row — retire it (optimize refuses pending epochs anyway,
         # so it can only be rebuilt after compaction)
-        from klepto_spark.sinks.layout import invalidate_manifest
         invalidate_manifest(jvm, fs, tgt)
 
     if auto_compact is not None:
         pending = sum(e["delta_rows"] + e["dv_rows"] for e in epochs)
         pending += delta_rows + dv_rows
-        base_rows = _base_reader(spark, fmt, contract).load(target).count()
+        base_rows = table_reader(spark, fmt, contract).load(target).count()
         if pending >= auto_compact * max(base_rows, 1):
             compact_files_dv(spark, directory, table, fmt)
 
@@ -269,15 +212,7 @@ def _resolve(base: DataFrame, upserts: DataFrame | None,
         # delete-only history: every event key is dead, nothing revives
         gone = dv.select(*keys).distinct()
         return base.join(gone, on=keys, how="left_anti").select(*cols)
-    from pyspark.sql.window import Window
-    events = upserts.withColumn("_dv_tomb", F.lit(False))
-    if dv is not None:
-        events = events.unionByName(dv.withColumn("_dv_tomb", F.lit(True)),
-                                    allowMissingColumns=True)
-    w = Window.partitionBy(*keys).orderBy(F.desc(EPOCH_COL),
-                                          F.asc("_dv_tomb"))
-    latest = (events.withColumn("_dv_rn", F.row_number().over(w))
-              .filter(F.col("_dv_rn") == 1))
+    events, latest = _latest(upserts, dv, keys)
     live = latest.filter(~F.col("_dv_tomb")).select(*cols)
     # the event-key set is the pending CDC volume — small by compaction
     # contract; AQE picks broadcast vs shuffled anti-join by its size
@@ -286,10 +221,24 @@ def _resolve(base: DataFrame, upserts: DataFrame | None,
     return kept.unionByName(live)
 
 
+def _latest(upserts: DataFrame, dv: DataFrame | None, keys: list[str]):
+    """The event rows (``_dv_tomb`` marks deletes) and each key's winning
+    event: the newest epoch's, an upsert beating a delete within one."""
+    from pyspark.sql.window import Window
+    events = upserts.withColumn("_dv_tomb", F.lit(False))
+    if dv is not None:
+        events = events.unionByName(dv.withColumn("_dv_tomb", F.lit(True)),
+                                    allowMissingColumns=True)
+    w = Window.partitionBy(*keys).orderBy(F.desc(EPOCH_COL),
+                                          F.asc("_dv_tomb"))
+    return events, (events.withColumn("_dv_rn", F.row_number().over(w))
+                    .filter(F.col("_dv_rn") == 1))
+
+
 def _event_frames(spark, jvm, fs, tgt, epochs):
-    delta_paths = [str(_sub(jvm, tgt, _DELTA_DIR, _epoch_name(e["id"])))
+    delta_paths = [str(sub(jvm, tgt, _DELTA_DIR, epoch_name(e["id"])))
                    for e in epochs if e["delta_rows"]]
-    dv_paths = [str(_sub(jvm, tgt, _DV_DIR, _epoch_name(e["id"])))
+    dv_paths = [str(sub(jvm, tgt, _DV_DIR, epoch_name(e["id"])))
                 for e in epochs if e["dv_rows"]]
     upserts = spark.read.parquet(*delta_paths) if delta_paths else None
     dv = spark.read.parquet(*dv_paths) if dv_paths else None
@@ -310,12 +259,11 @@ def read_files_dv(spark: SparkSession, directory: str, table: str,
     into the base files (compaction is this layer's VACUUM) — asking for
     it raises rather than silently serving the wrong snapshot; the floor
     itself is servable because the base IS that snapshot."""
-    target = _target(directory, table, fmt)
-    spark_any = base if base is not None else spark.range(0)
-    jvm, fs, tgt = _hadoop_fs(spark_any, target)
-    contract = _load_schema_contract(jvm, fs, tgt)
+    target = table_path(directory, table, fmt)
+    jvm, fs, tgt = hadoop_fs(spark, target)
+    contract = read_contract(jvm, fs, tgt)
     if base is None:
-        base = _base_reader(spark, fmt, contract).load(target)
+        base = table_reader(spark, fmt, contract).load(target)
     if BUCKET_COL in base.columns:
         base = base.drop(BUCKET_COL)
     epochs = committed_epochs(jvm, fs, tgt)
@@ -342,7 +290,7 @@ def read_files_dv(spark: SparkSession, directory: str, table: str,
     meta = load_dv_meta(jvm, fs, tgt)
     if meta is None:
         raise ValueError(f"table {table!r} has committed epochs but no "
-                         f"{_META_FILE}: cannot resolve without the keys")
+                         f"{DV_META}: cannot resolve without the keys")
     upserts, dv = _event_frames(spark, jvm, fs, tgt, epochs)
     return _resolve(base, upserts, dv, list(meta["keys"]), base.columns)
 
@@ -351,11 +299,8 @@ def pending_epochs(spark: SparkSession, directory: str, table: str,
                    fmt: str) -> list[dict]:
     """Committed-but-uncompacted epochs (oldest first) — the observable
     compaction debt."""
-    jvm, fs, tgt = _hadoop_fs(spark.range(0),
-                              _target(directory, table, fmt))
-    if not fs.exists(tgt):
-        return []
-    return committed_epochs(jvm, fs, tgt)
+    return committed_epochs(
+        *hadoop_fs(spark, table_path(directory, table, fmt)))
 
 
 def compact_files_dv(spark: SparkSession, directory: str, table: str,
@@ -370,21 +315,18 @@ def compact_files_dv(spark: SparkSession, directory: str, table: str,
     consistent throughout: before the fold they see base+events; after
     the fold but before retirement, events re-apply rows the base already
     holds (same keys, same values) and delete keys already gone."""
-    target = _target(directory, table, fmt)
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), target)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
     epochs = committed_epochs(jvm, fs, tgt)
     if not epochs:
         return 0
     meta = load_dv_meta(jvm, fs, tgt)
     if meta is None:
         raise ValueError(f"table {table!r} has committed epochs but no "
-                         f"{_META_FILE}: cannot compact without the keys")
+                         f"{DV_META}: cannot compact without the keys")
     keys = list(meta["keys"])
-    contract = _load_schema_contract(jvm, fs, tgt)
+    contract = read_contract(jvm, fs, tgt)
     cols = [f.name for f in contract.fields] if contract is not None else None
     upserts, dv = _event_frames(spark, jvm, fs, tgt, epochs)
-
-    from pyspark.sql.window import Window
     if upserts is None:
         # delete-only history: merge an empty upsert frame, dv keys only
         if cols is None:
@@ -394,15 +336,7 @@ def compact_files_dv(spark: SparkSession, directory: str, table: str,
         dels = dv.select(*keys).distinct()
         merge_files(ups, directory, table, fmt, keys, deletes=dels)
     else:
-        events = upserts.withColumn("_dv_tomb", F.lit(False))
-        if dv is not None:
-            events = events.unionByName(
-                dv.withColumn("_dv_tomb", F.lit(True)),
-                allowMissingColumns=True)
-        w = Window.partitionBy(*keys).orderBy(F.desc(EPOCH_COL),
-                                              F.asc("_dv_tomb"))
-        latest = (events.withColumn("_dv_rn", F.row_number().over(w))
-                  .filter(F.col("_dv_rn") == 1)).persist()
+        latest = _latest(upserts, dv, keys)[1].persist()
         try:
             if cols is None:
                 cols = [c for c in latest.columns
@@ -420,26 +354,26 @@ def compact_files_dv(spark: SparkSession, directory: str, table: str,
         finally:
             latest.unpersist()
     # retire consumed epochs (no-ops where the dir swap already did)
-    for e in epochs:
-        name = _epoch_name(e["id"])
-        for p in (_sub(jvm, tgt, _LOG_DIR, f"{name}.json"),
-                  _sub(jvm, tgt, _DELTA_DIR, name),
-                  _sub(jvm, tgt, _DV_DIR, name)):
-            if fs.exists(p):
-                fs.delete(p, True)
-    if contract is not None and not fs.exists(
-            _sub(jvm, tgt, "_schema.json")):
-        _save_schema_contract(jvm, fs, tgt, contract)
+    _retire(jvm, fs, tgt, epochs, contract)
     # record where history now starts: epochs <= base_epoch are folded
     # into the base files and no longer reconstructible (time travel
     # below this floor must refuse, like a vacuumed Delta table)
-    _write_json(fs, _meta_path(jvm, tgt),
-                {"keys": keys, "base_epoch": epochs[-1]["id"]})
+    _write_meta(jvm, fs, tgt, {"keys": keys, "base_epoch": epochs[-1]["id"]})
     # the fold rewrote base files: any surviving min/max manifest now
     # names gone files and must not serve pruned reads
-    from klepto_spark.sinks.layout import invalidate_manifest
     invalidate_manifest(jvm, fs, tgt)
     return len(epochs)
+
+
+def _retire(jvm, fs, tgt, epochs, contract) -> None:
+    """Delete folded epochs' commits and data, then re-publish the schema
+    contract if a whole-directory swap took it with the old base."""
+    for e in epochs:
+        name = epoch_name(e["id"])
+        drop(fs, sub(jvm, tgt, DV_LOG, f"{name}.json"),
+             sub(jvm, tgt, _DELTA_DIR, name), sub(jvm, tgt, _DV_DIR, name))
+    if contract is not None and not fs.exists(sub(jvm, tgt, SCHEMA_FILE)):
+        write_contract(jvm, fs, tgt, contract)
 
 
 def vacuum_epochs(spark: SparkSession, directory: str, table: str,
@@ -472,17 +406,14 @@ def vacuum_epochs(spark: SparkSession, directory: str, table: str,
     if fmt != "parquet":
         raise ValueError("vacuum_epochs requires parquet (the partial "
                          "fold republishes base files in place)")
-    from klepto_spark.sinks.layout import _recover_binpack, _sub_path
-    from klepto_spark.sinks.writers import _is_bucket_layout
-    target = _target(directory, table, fmt)
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), target)
+    target = table_path(directory, table, fmt)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
     if not fs.exists(tgt):
         return 0
-    if _is_bucket_layout(fs, tgt):
+    if is_bucket_layout(fs, tgt):
         raise ValueError(
             f"table {table!r} is bucket-partitioned: vacuum would break "
             "its key routing; use compact_files_dv (full fold)")
-    _recover_binpack(jvm, fs, tgt)
     epochs = committed_epochs(jvm, fs, tgt)
     fold = epochs[:-retain_epochs] if retain_epochs else epochs
     if not fold:
@@ -490,53 +421,40 @@ def vacuum_epochs(spark: SparkSession, directory: str, table: str,
     meta = load_dv_meta(jvm, fs, tgt)
     if meta is None:
         raise ValueError(f"table {table!r} has committed epochs but no "
-                         f"{_META_FILE}: cannot vacuum without the keys")
-    pdv_log = _sub(jvm, tgt, "_pdvlog")
-    if fs.exists(pdv_log) and fs.listStatus(pdv_log):
+                         f"{DV_META}: cannot vacuum without the keys")
+    if pending(jvm, fs, tgt, PDV_LOG):
         from klepto_spark.sinks.positional_dv import compact_files_pdv
         compact_files_pdv(spark, directory, table, fmt)
     keys = list(meta["keys"])
-    contract = _load_schema_contract(jvm, fs, tgt)
-    base = _base_reader(spark, fmt, contract).load(target)
+    contract = read_contract(jvm, fs, tgt)
+    base = table_reader(spark, fmt, contract).load(target)
     cols = ([f.name for f in contract.fields] if contract is not None
             else base.columns)
     upserts, dv = _event_frames(spark, jvm, fs, tgt, fold)
     resolved = _resolve(base, upserts, dv, keys, cols)
 
-    stage = _sub_path(jvm, tgt, "_bpstage")
-    if fs.exists(stage):
-        fs.delete(stage, True)
+    stage = sub(jvm, tgt, BINPACK_STAGE)
+    drop(fs, stage)
     resolved.write.mode("overwrite").parquet(str(stage))
     olds = [str(st.getPath()) for st in fs.listStatus(tgt)
             if st.getPath().getName().endswith(".parquet")
             and not st.getPath().getName().startswith("_")]
-    staged = [str(st.getPath()) for st in fs.listStatus(stage)
-              if st.getPath().getName().endswith(".parquet")]
-    news = [f"{target}/vac-{fold[-1]['id']}-{i}-{p.rsplit('/', 1)[1]}"
-            for i, p in enumerate(staged)]
     # floor first: from here on, pre-fold snapshots refuse (they could
     # otherwise resolve folded epochs against the ALREADY-folded base)
     meta["base_epoch"] = max(meta.get("base_epoch", 0), fold[-1]["id"])
-    _write_json(fs, _meta_path(jvm, tgt), meta)
-    from klepto_spark.sinks.journal import publish_renames, write_plan
-    write_plan(fs, _sub_path(jvm, tgt, "_binpack.json"), olds, news)
+    _write_meta(jvm, fs, tgt, meta)
     # Hadoop rename reports failure as a False return, not an exception
     # (e.g. destination exists). A failed publish must abort BEFORE the
     # retirement loop or the folded epochs' upserts vanish from the
     # current view (ADVICE r06 medium). The abort decision is made from
-    # the POST-recovery state below, not these return values.
-    to_path = lambda s: jvm.org.apache.hadoop.fs.Path(s)  # noqa: E731
-    outcome = publish_renames(
-        jvm, fs, tgt, "_binpack.json", to_path,
-        [to_path(s) for s in staged], news, olds,
-        lost_journal_msg=(
-            f"vacuum_epochs: journal for table {table!r} disappeared "
-            "mid-publish (a concurrent recovery rolled the fold back); "
-            "this fold's files were removed, the pre-fold base stands "
-            "and the folded epochs were NOT retired — re-run "
-            "vacuum_epochs"))
-    if outcome == "renamed":
-        _recover_binpack(jvm, fs, tgt)  # deletes olds + plan + staging
+    # the POST-recovery state below, not the rename return values.
+    news = publish_staged(
+        jvm, fs, tgt, target, f"vac-{fold[-1]['id']}", olds,
+        f"vacuum_epochs: journal for table {table!r} disappeared "
+        "mid-publish (a concurrent recovery rolled the fold back); "
+        "this fold's files were removed, the pre-fold base stands "
+        "and the folded epochs were NOT retired — re-run "
+        "vacuum_epochs")
     news_paths = [jvm.org.apache.hadoop.fs.Path(n) for n in news]
     # Decide from the POST-recovery state, not the rename return values
     # (ADVICE r07): a rename can report False because the destination
@@ -549,14 +467,5 @@ def vacuum_epochs(spark: SparkSession, directory: str, table: str,
             f"vacuum_epochs: publish did not land for table {table!r} "
             "(rename failed); recovery kept the pre-fold base and the "
             "folded epochs were NOT retired — re-run vacuum_epochs")
-    for e in fold:
-        name = _epoch_name(e["id"])
-        for p in (_sub(jvm, tgt, _LOG_DIR, f"{name}.json"),
-                  _sub(jvm, tgt, _DELTA_DIR, name),
-                  _sub(jvm, tgt, _DV_DIR, name)):
-            if fs.exists(p):
-                fs.delete(p, True)
-    if contract is not None and not fs.exists(
-            _sub(jvm, tgt, "_schema.json")):
-        _save_schema_contract(jvm, fs, tgt, contract)
+    _retire(jvm, fs, tgt, fold, contract)
     return len(fold)

@@ -9,6 +9,12 @@ others — VERDICT r08 #3):
 * merge-on-read vacuum (``sinks/deletion_vectors.py``),
 * streaming dedup-index epoch folds (``streaming/dedup.py``).
 
+The journal is a JSON sidecar read and written through
+:mod:`klepto_spark.sinks.tablefs`, which also names the bin-pack journal
+and stage of a file-sink table and settles them
+(:func:`klepto_spark.sinks.tablefs.settle`) whenever a mutation opens the
+table.
+
 Protocol: stage the replacement files, write a ``{olds, news}`` journal,
 rename the news into place, and only then delete the olds — olds retire
 strictly AFTER every new file landed, so a crash at any point is
@@ -33,28 +39,21 @@ concurrent roll-forward).
 """
 from __future__ import annotations
 
-import json as _json
 from typing import Callable, Optional
+
+from klepto_spark.sinks.tablefs import drop, read_json, write_json
 
 __all__ = ["read_plan", "write_plan", "recover", "publish_renames"]
 
 
 def read_plan(jvm, fs, jp) -> dict:
     """Parse a ``{olds, news}`` journal at Hadoop path ``jp``."""
-    stream = fs.open(jp)
-    try:
-        return _json.loads(
-            jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
+    return read_json(jvm, fs, jp)
 
 
 def write_plan(fs, jp, olds: list[str], news: list[str]) -> None:
     """Write the ``{olds, news}`` journal (overwrites)."""
-    out = fs.create(jp, True)
-    out.write(bytearray(
-        _json.dumps({"olds": olds, "news": news}).encode("utf-8")))
-    out.close()
+    write_json(fs, jp, {"olds": olds, "news": news})
 
 
 def recover(jvm, fs, root, journal_name: str, stage_name: str,
@@ -73,24 +72,18 @@ def recover(jvm, fs, root, journal_name: str, stage_name: str,
     jp = P(root, journal_name)
     stage = P(root, stage_name)
     if not fs.exists(jp):
-        if clean_stage_without_journal and fs.exists(stage):
-            fs.delete(stage, True)
+        if clean_stage_without_journal:
+            drop(fs, stage)
         return "none"
     plan = read_plan(jvm, fs, jp)
     news = [to_path(n) for n in plan["news"]]
     if news and all(fs.exists(p) for p in news):
         outcome = "forward"
-        for name in plan["olds"]:
-            op = to_path(name)
-            if fs.exists(op):
-                fs.delete(op, True)
+        drop(fs, *(to_path(name) for name in plan["olds"]))
     else:
         outcome = "back"
-        for p in news:
-            if fs.exists(p):
-                fs.delete(p, True)
-    if fs.exists(stage):
-        fs.delete(stage, True)
+        drop(fs, *news)
+    drop(fs, stage)
     if on_change is not None:
         on_change()
     fs.delete(jp, False)
@@ -132,9 +125,6 @@ def publish_renames(jvm, fs, root, journal_name: str,
                 # which converges to the same published file set)
                 # (ADVICE r09).
                 return "published"
-            for n2 in news:
-                p2 = to_path(n2)
-                if fs.exists(p2):
-                    fs.delete(p2, True)
+            drop(fs, *(to_path(n2) for n2 in news))
             raise RuntimeError(lost_journal_msg)
     return "renamed"

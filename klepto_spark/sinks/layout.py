@@ -29,6 +29,11 @@ equivalence tests).
 Z-value math uses unsigned bit-interleaving of the per-column RANK within
 a fixed quantile grid (not raw values), so skewed distributions still
 spread evenly across files.
+
+The table's sidecar names, the pending-epoch test, the directory swap
+:func:`optimize_table` publishes with, and the bin-pack journal's settle
+all live in :mod:`klepto_spark.sinks.tablefs`; both mutations here open
+the table through its ``open_table``.
 """
 
 from __future__ import annotations
@@ -39,7 +44,11 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-MANIFEST = "_minmax.json"
+from klepto_spark.sinks.tablefs import (
+    BINPACK_STAGE, DV_LOG, MANIFEST, PDV_LOG, drop, is_bucket_layout,
+    open_table, pending, publish_staged, sub, swap_dir, table_path)
+from klepto_spark.sinks.tablefs import invalidate_manifest  # noqa: F401
+
 _GRID_BITS = 16  # 65536 quantile cells per z-column
 
 
@@ -216,18 +225,15 @@ def optimize_table(spark: SparkSession, directory: str, table: str,
         raise ValueError("optimize_table requires parquet (footer manifest)")
     if (zorder_by is None) == (sort_by is None):
         raise ValueError("pass exactly one of zorder_by / sort_by")
-    from klepto_spark.sinks.writers import _hadoop_fs
-    target = f"{directory.rstrip('/')}/{table}.{fmt}"
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), target)
-    for pending in ("_dvlog", "_pdvlog"):
-        d = jvm.org.apache.hadoop.fs.Path(str(tgt), pending)
-        if fs.exists(d) and fs.listStatus(d):
+    target = table_path(directory, table, fmt)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
+    for log in (DV_LOG, PDV_LOG):
+        if pending(jvm, fs, tgt, log):
             raise ValueError(
-                f"table {table!r} has pending {pending} epochs: run "
+                f"table {table!r} has pending {log} epochs: run "
                 "compaction before optimize (clustering rewrites every "
                 "file and would strand merge-on-read state)")
-    from klepto_spark.sinks.writers import _is_bucket_layout
-    if _is_bucket_layout(fs, tgt):
+    if is_bucket_layout(fs, tgt):
         raise ValueError(
             f"table {table!r} is bucket-partitioned (CDC merge layout): "
             "optimize would flatten the key-routed directories the merge "
@@ -235,56 +241,15 @@ def optimize_table(spark: SparkSession, directory: str, table: str,
             "composable")
     staging = jvm.org.apache.hadoop.fs.Path(target + "._optstage")
     old = jvm.org.apache.hadoop.fs.Path(target + "._optold")
-    for leftover in (staging, old):
-        if fs.exists(leftover):
-            fs.delete(leftover, True)
+    drop(fs, staging, old)
     df = spark.read.parquet(target)
     if zorder_by is not None:
         n = write_zordered(df, str(staging), list(zorder_by),
                            n_files=n_files)
     else:
         n = write_sorted(df, str(staging), list(sort_by), n_files=n_files)
-    if not fs.rename(tgt, old):
-        raise IOError(f"cannot retire {target}")
-    if not fs.rename(staging, tgt):
-        fs.rename(old, tgt)  # roll back
-        raise IOError(f"cannot publish optimized {target}")
-    fs.delete(old, True)
+    swap_dir(fs, tgt, staging, old, target)
     return n
-
-
-def invalidate_manifest(jvm, fs, tgt) -> None:
-    """Drop a table's ``_minmax.json`` after a mutation that rewrites or
-    supersedes files — a stale manifest must never serve a pruned read
-    (it would name gone files, or skip files whose contents changed).
-    Called by every layout-mutating operation: positional/key-epoch
-    compaction, bin-pack, and the first merge-on-read epoch commit."""
-    p = _sub_path(jvm, tgt, MANIFEST)
-    if fs.exists(p):
-        fs.delete(p, False)
-
-
-_BINPACK_PLAN = "_binpack.json"
-
-
-def _recover_binpack(jvm, fs, tgt) -> None:
-    """Finish or roll back a half-applied bin-pack publish. Old files are
-    deleted only AFTER every replacement landed, so recovery is simple:
-    all news present -> finish deleting olds; otherwise drop partial news
-    and keep the olds (nothing was lost either way). Either branch
-    changed the table's file set (news moved in, or olds survived a
-    rollback the manifest may predate), so the min/max manifest stands
-    down. Shared protocol: :mod:`klepto_spark.sinks.journal`; journal
-    entries are absolute path strings."""
-    from klepto_spark.sinks.journal import recover
-    recover(jvm, fs, tgt, _BINPACK_PLAN, "_bpstage",
-            to_path=lambda s: jvm.org.apache.hadoop.fs.Path(s),
-            on_change=lambda: invalidate_manifest(jvm, fs, tgt),
-            clean_stage_without_journal=True)
-
-
-def _sub_path(jvm, base, name: str):
-    return jvm.org.apache.hadoop.fs.Path(str(base), name)
 
 
 def compact_small_files(spark: SparkSession, directory: str, table: str,
@@ -297,23 +262,21 @@ def compact_small_files(spark: SparkSession, directory: str, table: str,
     exactly the IO of the tail itself. Publish order makes crashes safe
     without renames of live files: stage merged outputs, journal the
     plan, move the news in, only then delete the olds (see
-    :func:`_recover_binpack`). Returns the number of small files folded.
+    :func:`klepto_spark.sinks.tablefs.publish_staged`). Returns the
+    number of small files folded.
 
     Not for bucket-partitioned layouts (their files are key-routed) or
     tables with pending merge-on-read epochs — same guards as
     :func:`optimize_table`."""
     if fmt != "parquet":
         raise ValueError("compact_small_files requires parquet")
-    from klepto_spark.sinks.writers import _hadoop_fs, _is_bucket_layout
-    target = f"{directory.rstrip('/')}/{table}.{fmt}"
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), target)
-    _recover_binpack(jvm, fs, tgt)
-    for pending in ("_dvlog", "_pdvlog"):
-        d = _sub_path(jvm, tgt, pending)
-        if fs.exists(d) and fs.listStatus(d):
-            raise ValueError(f"table {table!r} has pending {pending} "
+    target = table_path(directory, table, fmt)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
+    for log in (DV_LOG, PDV_LOG):
+        if pending(jvm, fs, tgt, log):
+            raise ValueError(f"table {table!r} has pending {log} "
                              "epochs: compact those first")
-    if _is_bucket_layout(fs, tgt):
+    if is_bucket_layout(fs, tgt):
         raise ValueError(f"table {table!r} is bucket-partitioned: its "
                          "file routing is the layout; bin-packing would "
                          "break it")
@@ -326,29 +289,17 @@ def compact_small_files(spark: SparkSession, directory: str, table: str,
             small.append(str(status.getPath()))
     if len(small) < 2:
         return 0
-    stage = _sub_path(jvm, tgt, "_bpstage")
-    if fs.exists(stage):
-        fs.delete(stage, True)
+    stage = sub(jvm, tgt, BINPACK_STAGE)
+    drop(fs, stage)
     merged = spark.read.parquet(*small)
     total_bytes = sum(fs.getFileStatus(
         jvm.org.apache.hadoop.fs.Path(p)).getLen() for p in small)
     n_out = max(1, int(total_bytes // (target_mb * 1024 * 1024)) + 1)
     merged.repartition(n_out).write.mode("overwrite").parquet(str(stage))
-    staged = [str(st.getPath()) for st in fs.listStatus(stage)
-              if st.getPath().getName().endswith(".parquet")]
-    news = [f"{target}/bp-{i}-{p.rsplit('/', 1)[1]}"
-            for i, p in enumerate(staged)]
-    from klepto_spark.sinks.journal import publish_renames, write_plan
-    write_plan(fs, _sub_path(jvm, tgt, _BINPACK_PLAN), small, news)
-    to_path = lambda s: jvm.org.apache.hadoop.fs.Path(s)  # noqa: E731
-    outcome = publish_renames(
-        jvm, fs, tgt, _BINPACK_PLAN, to_path,
-        [to_path(s) for s in staged], news, small,
-        lost_journal_msg=(
-            f"compact_small_files: journal for {table!r} disappeared "
-            "mid-publish (a concurrent recovery rolled the plan back); "
-            "this pack's files were removed and the pre-pack layout "
-            "stands — re-run compact_small_files"))
-    if outcome == "renamed":
-        _recover_binpack(jvm, fs, tgt)  # deletes olds + plan + staging
+    publish_staged(
+        jvm, fs, tgt, target, "bp", small,
+        f"compact_small_files: journal for {table!r} disappeared "
+        "mid-publish (a concurrent recovery rolled the plan back); "
+        "this pack's files were removed and the pre-pack layout "
+        "stands — re-run compact_small_files")
     return len(small)

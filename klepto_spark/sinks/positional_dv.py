@@ -32,69 +32,35 @@ operation replays or rolls back half-applied plans; positional epochs are
 retired only after every file published. Single-writer per table, like
 every file-sink merge in this package. Positions for a file that no
 longer exists are no-ops (they addressed a row that a later rewrite
-already dropped), which is what makes replay idempotent.
+already dropped), which is what makes replay idempotent. The ``_pdvlog``
+commits, their listing and the JSON sidecars are the table layout of
+:mod:`klepto_spark.sinks.tablefs`; each mutation here opens the table
+through its ``open_table``, so a crashed bin-pack publish is settled
+before positions are resolved against the base.
 """
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from klepto_spark.sinks.writers import _hadoop_fs
+from klepto_spark.sinks.tablefs import (
+    DV_LOG, DV_META, PDV_LOG, drop, epoch_log, epoch_name, hadoop_fs,
+    invalidate_manifest, open_table, pending, read_json, sub, table_path,
+    write_json)
 
 _PDV_DIR = "_pdv"
-_PDV_LOG = "_pdvlog"
 _PDV_STAGE = "_pdvstage"
 _PDV_PLAN = "_pdvplan.json"
 _FILE_COL = "_pdv_file"
 _POS_COL = "_pdv_pos"
 
 
-def _target(directory: str, table: str, fmt: str) -> str:
-    return f"{directory.rstrip('/')}/{table}.{fmt}"
-
-
-def _sub(jvm, base, *parts):
-    p = base
-    for part in parts:
-        p = jvm.org.apache.hadoop.fs.Path(p, part)
-    return p
-
-
-def _read_json(jvm, fs, path) -> dict:
-    stream = fs.open(path)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def _write_json(fs, path, payload: dict) -> None:
-    out = fs.create(path, True)
-    out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    out.close()
-
-
-def _epoch_name(n: int) -> str:
-    return f"e{n:06d}"
-
-
 def committed_pdv_epochs(jvm, fs, tgt) -> list[dict]:
-    log_dir = _sub(jvm, tgt, _PDV_LOG)
-    if not fs.exists(log_dir):
-        return []
-    out = []
-    for status in fs.listStatus(log_dir):
-        name = status.getPath().getName()
-        if name.startswith("e") and name.endswith(".json"):
-            out.append(_read_json(jvm, fs, status.getPath()))
-    return sorted(out, key=lambda e: e["id"])
+    return epoch_log(jvm, fs, tgt, PDV_LOG)
 
 
 def _epoch_paths(jvm, tgt, epochs) -> list[str]:
-    return [str(_sub(jvm, tgt, _PDV_DIR, _epoch_name(e["id"])))
+    return [str(sub(jvm, tgt, _PDV_DIR, epoch_name(e["id"])))
             for e in epochs if e["n_positions"]]
 
 
@@ -105,10 +71,9 @@ def _current_dv_epoch(jvm, fs, tgt) -> int:
     positional deletes in the SAME history as key epochs (a positional
     delete recorded while epoch D was current must not apply to a
     snapshot as-of an earlier epoch)."""
-    from klepto_spark.sinks.deletion_vectors import (
-        committed_epochs as _dv_epochs, load_dv_meta)
-    epochs = _dv_epochs(jvm, fs, tgt)
-    floor = (load_dv_meta(jvm, fs, tgt) or {}).get("base_epoch", 0)
+    epochs = epoch_log(jvm, fs, tgt, DV_LOG)
+    floor = (read_json(jvm, fs, sub(jvm, tgt, DV_META))
+             or {}).get("base_epoch", 0)
     return max(epochs[-1]["id"] if epochs else 0, floor)
 
 
@@ -119,11 +84,20 @@ def _base_with_address(spark: SparkSession, target: str) -> DataFrame:
     partition directories by Spark's discovery, which bypasses the
     underscore path filter; nested non-partition layouts would need a
     different listing strategy."""
-    return (spark.read.option("recursiveFileLookup", "false")
-            .parquet(target)
-            .select("*",
-                    F.col("_metadata.file_path").alias(_FILE_COL),
-                    F.col("_metadata.row_index").alias(_POS_COL)))
+    return _addressed(spark.read.option("recursiveFileLookup", "false")
+                      .parquet(target))
+
+
+def _addressed(df: DataFrame) -> DataFrame:
+    """``df`` (a parquet scan) with each row's (file, row_index)."""
+    return df.select("*", F.col("_metadata.file_path").alias(_FILE_COL),
+                     F.col("_metadata.row_index").alias(_POS_COL))
+
+
+def _positions(spark, jvm, tgt, epochs) -> DataFrame:
+    """The distinct (file, row_index) addresses ``epochs`` delete."""
+    return (spark.read.parquet(*_epoch_paths(jvm, tgt, epochs))
+            .select(_FILE_COL, _POS_COL).distinct())
 
 
 def positional_delete(spark: SparkSession, directory: str, table: str,
@@ -147,8 +121,8 @@ def positional_delete(spark: SparkSession, directory: str, table: str,
                          "(row_index is a physical parquet address)")
     if (predicate is None) == (keys_df is None):
         raise ValueError("pass exactly one of predicate / keys_df")
-    target = _target(directory, table, fmt)
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), target)
+    target = table_path(directory, table, fmt)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
     _recover_plan(spark, jvm, fs, tgt)
 
     base = _base_with_address(spark, target)
@@ -167,19 +141,19 @@ def positional_delete(spark: SparkSession, directory: str, table: str,
         seen = spark.read.parquet(*paths).select(_FILE_COL, _POS_COL)
         hit = hit.join(seen, on=[_FILE_COL, _POS_COL], how="left_anti")
     next_id = (epochs[-1]["id"] + 1) if epochs else 1
-    name = _epoch_name(next_id)
-    out = str(_sub(jvm, tgt, _PDV_DIR, name))
+    name = epoch_name(next_id)
+    out = str(sub(jvm, tgt, _PDV_DIR, name))
     hit.select(_FILE_COL, _POS_COL).write.mode("overwrite").parquet(out)
     n = spark.read.parquet(out).count()
     if n == 0:
-        fs.delete(_sub(jvm, tgt, _PDV_DIR, name), True)
+        fs.delete(sub(jvm, tgt, _PDV_DIR, name), True)
         return 0
-    log_dir = _sub(jvm, tgt, _PDV_LOG)
+    log_dir = sub(jvm, tgt, PDV_LOG)
     if not fs.exists(log_dir):
         fs.mkdirs(log_dir)
-    _write_json(fs, _sub(jvm, tgt, _PDV_LOG, f"{name}.json"),
-                {"id": next_id, "n_positions": n,
-                 "dv_epoch": _current_dv_epoch(jvm, fs, tgt)})
+    write_json(fs, sub(jvm, log_dir, f"{name}.json"),
+               {"id": next_id, "n_positions": n,
+                "dv_epoch": _current_dv_epoch(jvm, fs, tgt)})
     if auto_compact is not None:
         pending = sum(e["n_positions"] for e in epochs) + n
         base_rows = spark.read.parquet(target).count()
@@ -201,7 +175,7 @@ def apply_positional(spark: SparkSession, target: str,
     positional epoch from before that stamp existed cannot be placed in
     history, so a snapshot read REFUSES rather than guessing (the same
     refuse-don't-lie discipline as the compaction floor)."""
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), target)
+    jvm, fs, tgt = hadoop_fs(spark, target)
     _recover_plan(spark, jvm, fs, tgt)
     epochs = committed_pdv_epochs(jvm, fs, tgt)
     if as_of_dv_epoch is not None:
@@ -216,22 +190,16 @@ def apply_positional(spark: SparkSession, target: str,
         base = spark.read.parquet(target)
     if not epochs:
         return base
-    pos = spark.read.parquet(*_epoch_paths(jvm, tgt, epochs)) \
-        .select(_FILE_COL, _POS_COL).distinct()
-    addressed = (base.select(
-        "*", F.col("_metadata.file_path").alias(_FILE_COL),
-        F.col("_metadata.row_index").alias(_POS_COL)))
-    return (addressed.join(pos, on=[_FILE_COL, _POS_COL], how="left_anti")
+    pos = _positions(spark, jvm, tgt, epochs)
+    return (_addressed(base).join(pos, on=[_FILE_COL, _POS_COL],
+                                  how="left_anti")
             .drop(_FILE_COL, _POS_COL))
 
 
 def has_pending_pdv(spark: SparkSession, directory: str, table: str,
                     fmt: str = "parquet") -> bool:
-    target = _target(directory, table, fmt)
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), target)
-    if not fs.exists(tgt):
-        return False
-    return bool(committed_pdv_epochs(jvm, fs, tgt))
+    return pending(*hadoop_fs(spark, table_path(directory, table, fmt)),
+                   PDV_LOG)
 
 
 # --------------------------------------------------------------------------
@@ -243,19 +211,18 @@ def _recover_plan(spark: SparkSession, jvm, fs, tgt) -> None:
     file: all replacements landed -> drop the retired original; otherwise
     restore the original and drop partial replacements. Then clear the
     staging dir and (only if every entry published) retire the epochs."""
-    plan_path = _sub(jvm, tgt, _PDV_PLAN)
-    if not fs.exists(plan_path):
-        stage = _sub(jvm, tgt, _PDV_STAGE)
-        if fs.exists(stage):
-            fs.delete(stage, True)  # crash before the plan: nothing visible
+    plan_path = sub(jvm, tgt, _PDV_PLAN)
+    stage = sub(jvm, tgt, _PDV_STAGE)
+    plan = read_json(jvm, fs, plan_path)
+    if plan is None:
+        drop(fs, stage)  # crash before the plan: nothing visible
         return
-    plan = _read_json(jvm, fs, plan_path)
     all_ok = True
     for entry in plan["files"]:
         parent = jvm.org.apache.hadoop.fs.Path(entry["dir"])
-        retired = _sub(jvm, parent, entry["retired"])
-        original = _sub(jvm, parent, entry["name"])
-        finals = [_sub(jvm, parent, f) for f in entry["finals"]]
+        retired = sub(jvm, parent, entry["retired"])
+        original = sub(jvm, parent, entry["name"])
+        finals = [sub(jvm, parent, f) for f in entry["finals"]]
         staged = [jvm.org.apache.hadoop.fs.Path(p) for p in entry["staged"]]
         # published = every replacement landed AND the original is gone;
         # the original-gone clause matters for fully-deleted files (empty
@@ -268,30 +235,21 @@ def _recover_plan(spark: SparkSession, jvm, fs, tgt) -> None:
             continue
         # replacements incomplete: move the ones that landed out of the
         # way, restore the original
-        for f in finals:
-            if fs.exists(f):
-                fs.delete(f, False)
-        for s in staged:
-            if fs.exists(s):
-                fs.delete(s, False)
+        drop(fs, *finals, *staged)
         if fs.exists(retired):
-            original = _sub(jvm, parent, entry["name"])
             fs.rename(retired, original)
         all_ok = False
-    stage = _sub(jvm, tgt, _PDV_STAGE)
-    if fs.exists(stage):
-        fs.delete(stage, True)
+    drop(fs, stage)
     if all_ok:
         for eid in plan["epochs"]:
-            fs.delete(_sub(jvm, tgt, _PDV_LOG, f"{_epoch_name(eid)}.json"),
+            fs.delete(sub(jvm, tgt, PDV_LOG, f"{epoch_name(eid)}.json"),
                       False)
-            fs.delete(_sub(jvm, tgt, _PDV_DIR, _epoch_name(eid)), True)
+            fs.delete(sub(jvm, tgt, _PDV_DIR, epoch_name(eid)), True)
     # files were replaced (or rolled back under a manifest that may
     # postdate them): the min/max index no longer describes the layout,
     # so it must not serve pruned reads. (An empty plan — all positions
     # addressed already-gone files — touched nothing and keeps it.)
     if plan["files"]:
-        from klepto_spark.sinks.layout import invalidate_manifest
         invalidate_manifest(jvm, fs, tgt)
     fs.delete(plan_path, False)
 
@@ -304,8 +262,7 @@ def _bump_dv_floor_for_fold(jvm, fs, tgt, epochs) -> None:
     (legacy unstamped epochs force the current dv epoch — conservative:
     refuses more history, never serves a wrong snapshot). No-op for
     tables without key-epoch history."""
-    from klepto_spark.sinks import deletion_vectors as dvmod
-    meta = dvmod.load_dv_meta(jvm, fs, tgt)
+    meta = read_json(jvm, fs, sub(jvm, tgt, DV_META))
     if meta is None:
         return
     stamps = [e.get("dv_epoch") for e in epochs]
@@ -314,7 +271,7 @@ def _bump_dv_floor_for_fold(jvm, fs, tgt, epochs) -> None:
                  else _current_dv_epoch(jvm, fs, tgt))
     if new_floor > meta.get("base_epoch", 0):
         meta["base_epoch"] = new_floor
-        _write_json(fs, dvmod._meta_path(jvm, tgt), meta)
+        write_json(fs, sub(jvm, tgt, DV_META), meta)
 
 
 def compact_files_pdv(spark: SparkSession, directory: str, table: str,
@@ -325,14 +282,12 @@ def compact_files_pdv(spark: SparkSession, directory: str, table: str,
     file), then each file publishes by the retire->move rename pair under
     a journaled plan (see :func:`_recover_plan`). Returns the number of
     files rewritten."""
-    target = _target(directory, table, fmt)
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), target)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
     _recover_plan(spark, jvm, fs, tgt)
     epochs = committed_pdv_epochs(jvm, fs, tgt)
     if not epochs:
         return 0
-    pos = spark.read.parquet(*_epoch_paths(jvm, tgt, epochs)) \
-        .select(_FILE_COL, _POS_COL).distinct()
+    pos = _positions(spark, jvm, tgt, epochs)
     affected = [r[0] for r in pos.select(_FILE_COL).distinct().collect()]
     # existing files only: positions addressing already-rewritten (gone)
     # files are no-ops
@@ -340,22 +295,19 @@ def compact_files_pdv(spark: SparkSession, directory: str, table: str,
             if fs.exists(jvm.org.apache.hadoop.fs.Path(p))]
     if not live:
         _bump_dv_floor_for_fold(jvm, fs, tgt, epochs)
-        _write_json(fs, _sub(jvm, tgt, _PDV_PLAN),
-                    {"files": [], "epochs": [e["id"] for e in epochs]})
+        write_json(fs, sub(jvm, tgt, _PDV_PLAN),
+                   {"files": [], "epochs": [e["id"] for e in epochs]})
         _recover_plan(spark, jvm, fs, tgt)
         return 0
 
-    stage_dir = _sub(jvm, tgt, _PDV_STAGE)
-    if fs.exists(stage_dir):
-        fs.delete(stage_dir, True)
+    stage_dir = sub(jvm, tgt, _PDV_STAGE)
+    drop(fs, stage_dir)
 
     # one job: read affected files, drop deleted positions, write one
     # staged replacement per source file (file-id partitioning keeps the
     # 1:1 correspondence the per-file publish needs)
     file_id = {p: i for i, p in enumerate(sorted(live))}
-    src = (spark.read.parquet(*sorted(live))
-           .select("*", F.col("_metadata.file_path").alias(_FILE_COL),
-                   F.col("_metadata.row_index").alias(_POS_COL)))
+    src = _addressed(spark.read.parquet(*sorted(live)))
     kept = src.join(pos, on=[_FILE_COL, _POS_COL], how="left_anti")
     mapping = F.create_map(*[x for p, i in file_id.items()
                              for x in (F.lit(p), F.lit(i))])
@@ -370,7 +322,7 @@ def compact_files_pdv(spark: SparkSession, directory: str, table: str,
         src_path = jvm.org.apache.hadoop.fs.Path(path)
         parent = src_path.getParent()
         name = src_path.getName()
-        staged_dir = _sub(jvm, stage_dir, f"_pdv_fid={fid}")
+        staged_dir = sub(jvm, stage_dir, f"_pdv_fid={fid}")
         staged, finals = [], []
         if fs.exists(staged_dir):
             k = 0
@@ -389,17 +341,17 @@ def compact_files_pdv(spark: SparkSession, directory: str, table: str,
     # could retire epochs with the floor unraised and serve wrong
     # snapshots
     _bump_dv_floor_for_fold(jvm, fs, tgt, epochs)
-    _write_json(fs, _sub(jvm, tgt, _PDV_PLAN),
-                {"files": plan_files, "epochs": [e["id"] for e in epochs]})
+    write_json(fs, sub(jvm, tgt, _PDV_PLAN),
+               {"files": plan_files, "epochs": [e["id"] for e in epochs]})
 
     for entry in plan_files:
         parent = jvm.org.apache.hadoop.fs.Path(entry["dir"])
-        original = _sub(jvm, parent, entry["name"])
-        retired = _sub(jvm, parent, entry["retired"])
+        original = sub(jvm, parent, entry["name"])
+        retired = sub(jvm, parent, entry["retired"])
         fs.rename(original, retired)
         for s, f in zip(entry["staged"], entry["finals"]):
             fs.rename(jvm.org.apache.hadoop.fs.Path(s),
-                      _sub(jvm, parent, f))
+                      sub(jvm, parent, f))
         fs.delete(retired, False)
     # publish complete: recovery path retires the epochs + clears staging
     _recover_plan(spark, jvm, fs, tgt)

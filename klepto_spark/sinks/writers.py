@@ -21,6 +21,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from klepto_spark.sinks.tablefs import (
+    BUCKET_COL, LAYOUT_FILE, PDV_LOG, drop, hadoop_fs, is_bucket_layout,
+    open_table, pending, read_contract, read_layout, swap_dir, table_path,
+    write_contract, write_layout)
 from klepto_spark.sources.dsn import DSN, DSNError, file_path, jdbc_url, route
 
 
@@ -99,14 +103,6 @@ STAGING_SUFFIX = "_klepto_staging"
 _OLD_SUFFIX = "_klepto_old"
 
 
-def _hadoop_fs(df: DataFrame, path: str):
-    jvm = df.sparkSession._sc._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(
-        df.sparkSession._sc._jsc.hadoopConfiguration())
-    return jvm, fs, hpath
-
-
 def write_files(df: DataFrame, directory: str, table: str, fmt: str,
                 mode: str = "overwrite", atomic: bool = True) -> None:
     """File sink with the same publish discipline as the JDBC sink: the
@@ -121,7 +117,7 @@ def write_files(df: DataFrame, directory: str, table: str, fmt: str,
     staged data files into the live directory under collision-free names:
     readers never observe a partially-written FILE, and nothing moves
     unless the whole job succeeded."""
-    target = f"{directory.rstrip('/')}/{table}.{fmt}"
+    target = table_path(directory, table, fmt)
 
     def _save(path: str, m: str) -> None:
         writer = df.write.format(fmt).mode(m)
@@ -133,24 +129,14 @@ def write_files(df: DataFrame, directory: str, table: str, fmt: str,
         _save(target, mode)
         return
 
-    jvm, fs, tgt = _hadoop_fs(df, target)
+    jvm, fs, tgt = hadoop_fs(df.sparkSession, target)
     staging = jvm.org.apache.hadoop.fs.Path(target + STAGING_SUFFIX)
     old = jvm.org.apache.hadoop.fs.Path(target + _OLD_SUFFIX)
-    for leftover in (staging, old):
-        if fs.exists(leftover):
-            fs.delete(leftover, True)
+    drop(fs, staging, old)
     try:
         _save(str(staging), "overwrite")
         if mode == "overwrite" or not fs.exists(tgt):
-            if fs.exists(tgt):
-                if not fs.rename(tgt, old):
-                    raise IOError(f"cannot retire {target}")
-            if not fs.rename(staging, tgt):
-                # roll the previous data back into place
-                if fs.exists(old):
-                    fs.rename(old, tgt)
-                raise IOError(f"cannot publish {target}")
-            fs.delete(old, True)
+            swap_dir(fs, tgt, staging, old, target)
         else:  # append into a live directory, file-at-a-time
             import uuid
             run_id = uuid.uuid4().hex[:12]
@@ -164,8 +150,7 @@ def write_files(df: DataFrame, directory: str, table: str, fmt: str,
                     raise IOError(f"cannot append {name} into {target}")
             fs.delete(staging, True)
     finally:
-        if fs.exists(staging):
-            fs.delete(staging, True)
+        drop(fs, staging)
 
 
 def _jdbc_writer(df: DataFrame, dsn: DSN, table: str, mode: str,
@@ -277,29 +262,25 @@ def merge_files(df: DataFrame, directory: str, table: str, fmt: str,
     this DELEGATES to the partitioned merge with the layout's recorded
     routing parameters, so the default path inherits touched-buckets-only
     cost — and never flattens an existing layout into a whole-table dir."""
-    target = f"{directory.rstrip('/')}/{table}.{fmt}"
+    target = table_path(directory, table, fmt)
     spark = df.sparkSession
-    jvm, fs, tgt = _hadoop_fs(df, target)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
     merged = df
     if fs.exists(tgt):
         _fold_pending_positional(spark, directory, table, fmt, jvm, fs, tgt)
-        if _is_bucket_layout(fs, tgt):
-            layout = _load_layout(jvm, fs, tgt)
+        if is_bucket_layout(fs, tgt):
+            layout = read_layout(jvm, fs, tgt)
             if layout is None:
                 raise ValueError(
                     f"{target} is bucket-partitioned but has no "
-                    f"{_LAYOUT_FILE} sidecar (pre-sidecar layout): run "
+                    f"{LAYOUT_FILE} sidecar (pre-sidecar layout): run "
                     "merge_files_partitioned once with the ORIGINAL "
                     "n_buckets to heal it — guessing the modulus here "
                     "would misroute keys")
             return merge_files_partitioned(
                 df, directory, table, fmt, keys,
                 n_buckets=layout["n_buckets"], deletes=deletes)
-        reader = spark.read.format(fmt)
-        if fmt == "csv":
-            reader = reader.option("header", "true").option(
-                "inferSchema", "true")
-        current = reader.load(target)
+        current = table_reader(spark, fmt).load(target)
         gone = df.select(*keys)
         if deletes is not None:
             gone = gone.unionByName(deletes.select(*keys))
@@ -310,20 +291,29 @@ def merge_files(df: DataFrame, directory: str, table: str, fmt: str,
     write_files(merged, directory, table, fmt, mode="overwrite", atomic=True)
 
 
+def table_reader(spark, fmt: str, contract=None):
+    """A reader of the table's data files: typed by ``contract`` when
+    there is one, else as stored (csv infers, with a header)."""
+    reader = spark.read.format(fmt)
+    if fmt == "csv":
+        reader = reader.option("header", "true")
+        reader = (reader.schema(contract) if contract is not None
+                  else reader.option("inferSchema", "true"))
+    elif contract is not None:
+        reader = reader.schema(contract)
+    return reader
+
+
 def _fold_pending_positional(spark, directory, table, fmt, jvm, fs, tgt
                              ) -> None:
     """Keyed merges rewrite base files, which would invalidate pending
     positional deletion vectors' (file, row) addresses — so any pending
     positional epochs are folded into the base FIRST. Cheap no-op check
-    when the table has no positional state."""
-    log_dir = jvm.org.apache.hadoop.fs.Path(str(tgt), "_pdvlog")
-    if not fs.exists(log_dir):
-        return
-    from klepto_spark.sinks.positional_dv import compact_files_pdv
-    compact_files_pdv(spark, directory, table, fmt)
+    when the table has no committed positional epoch."""
+    if pending(jvm, fs, tgt, PDV_LOG):
+        from klepto_spark.sinks.positional_dv import compact_files_pdv
+        compact_files_pdv(spark, directory, table, fmt)
 
-
-BUCKET_COL = "_kp"
 
 _INTEGRAL_RANK = {"tinyint": 1, "smallint": 2, "int": 3, "bigint": 4}
 
@@ -341,88 +331,6 @@ def _lossless_widening(src: str, dst: str) -> bool:
     if rs is not None and rs <= 3 and dst == "double":
         return True
     return False
-
-
-_SCHEMA_FILE = "_schema.json"
-_LAYOUT_FILE = "_layout.json"
-
-
-def _layout_path(jvm, tgt):
-    return jvm.org.apache.hadoop.fs.Path(str(tgt), _LAYOUT_FILE)
-
-
-def _save_layout(jvm, fs, tgt, n_buckets: int, keys: list[str]) -> None:
-    """Persist the bucket routing parameters next to the data. n_buckets
-    is part of the at-rest contract: a merge routed with a different
-    modulus would send an existing key to a DIFFERENT bucket, leaving the
-    stale version alive in the old one — silent key duplication. The
-    sidecar makes the original choice discoverable, so later merges (and
-    the :func:`merge_files` auto-delegation) reuse it instead of trusting
-    the caller to remember."""
-    import json
-    out = fs.create(_layout_path(jvm, tgt), True)
-    out.write(bytearray(json.dumps(
-        {"n_buckets": int(n_buckets), "keys": list(keys)}).encode("utf-8")))
-    out.close()
-
-
-def _load_layout(jvm, fs, tgt) -> dict | None:
-    import json
-    path = _layout_path(jvm, tgt)
-    if not fs.exists(path):
-        return None
-    stream = fs.open(path)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def _is_bucket_layout(fs, tgt) -> bool:
-    """True when the target directory is a bucket-partitioned table
-    (any BUCKET_COL= partition dir, or the layout sidecar)."""
-    for status in fs.listStatus(tgt):
-        name = status.getPath().getName()
-        if name == _LAYOUT_FILE or name.startswith(f"{BUCKET_COL}="):
-            return True
-    return False
-
-
-def _schema_contract_path(jvm, tgt):
-    # underscore prefix: invisible to Spark's file listing, like _retired.*
-    return jvm.org.apache.hadoop.fs.Path(str(tgt), _SCHEMA_FILE)
-
-
-def _save_schema_contract(jvm, fs, tgt, schema) -> None:
-    """Persist the table's data-column types next to the data. The
-    bucketed layout's premise is 'the at-rest schema is the contract',
-    but csv is not self-describing — inferSchema can flip (int vs bigint
-    as values grow), and xxhash64 bucketing is type-sensitive, so an
-    inference flip would wedge a previously-working CDC pipeline. The
-    sidecar makes the contract explicit and stable for every format (and
-    saves parquet a footer pass / csv a full infer scan on merge)."""
-    from pyspark.sql.types import StructType
-    st = StructType([f for f in schema.fields if f.name != BUCKET_COL])
-    out = fs.create(_schema_contract_path(jvm, tgt), True)
-    out.write(bytearray(st.json().encode("utf-8")))
-    out.close()
-
-
-def _load_schema_contract(jvm, fs, tgt):
-    """Read the sidecar back as a StructType; None for layouts written
-    before the sidecar existed (the next merge heals them)."""
-    import json
-    from pyspark.sql.types import StructType
-    path = _schema_contract_path(jvm, tgt)
-    if not fs.exists(path):
-        return None
-    stream = fs.open(path)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return StructType.fromJson(json.loads(text))
 
 
 def align_to_contract(df: DataFrame, table_types: dict, table: str) -> DataFrame:
@@ -481,8 +389,8 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
     bucket, fall back to :func:`merge_files`."""
     from pyspark.sql import functions as F
     spark = df.sparkSession
-    target = f"{directory.rstrip('/')}/{table}.{fmt}"
-    jvm, fs, tgt = _hadoop_fs(df, target)
+    target = table_path(directory, table, fmt)
+    jvm, fs, tgt = open_table(spark, directory, table, fmt)
     _recover_retired_buckets(jvm, fs, tgt)
     if fs.exists(tgt):
         _fold_pending_positional(spark, directory, table, fmt, jvm, fs, tgt)
@@ -499,8 +407,8 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
             delta = delta.join(deletes.select(*keys).distinct(), on=keys,
                                how="left_anti")
         _write(delta, target)
-        _save_schema_contract(jvm, fs, tgt, df.schema)
-        _save_layout(jvm, fs, tgt, n_buckets, keys)
+        write_contract(jvm, fs, tgt, df.schema)
+        write_layout(jvm, fs, tgt, n_buckets, keys)
         return
 
     # the at-rest routing parameters are the contract: a caller-supplied
@@ -508,7 +416,7 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
     # existing keys to different buckets (stale versions left alive), so
     # the sidecar wins; mismatched keys change routing identity outright
     # and are refused
-    layout = _load_layout(jvm, fs, tgt)
+    layout = read_layout(jvm, fs, tgt)
     if layout is not None:
         if list(layout["keys"]) != list(keys):
             raise ValueError(
@@ -525,14 +433,8 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
     # csv, where inference could flip int->bigint as values grow); layouts
     # predating the sidecar fall back to the at-rest schema once and are
     # healed below.
-    contract = _load_schema_contract(jvm, fs, tgt)
-    reader = spark.read.format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-        reader = (reader.schema(contract) if contract is not None
-                  else reader.option("inferSchema", "true"))
-    elif contract is not None:
-        reader = reader.schema(contract)
+    contract = read_contract(jvm, fs, tgt)
+    reader = table_reader(spark, fmt, contract)
     if contract is not None:
         table_types = {f.name: f.dataType for f in contract.fields}
     else:
@@ -561,8 +463,7 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
     merged = kept.unionByName(delta.select(*kept.columns))
 
     staging = jvm.org.apache.hadoop.fs.Path(target + STAGING_SUFFIX)
-    if fs.exists(staging):
-        fs.delete(staging, True)
+    drop(fs, staging)
     try:
         _write(merged, str(staging))
         for b in sorted(touched):
@@ -572,8 +473,7 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
                 str(tgt), f"{BUCKET_COL}={b}")
             old_dir = jvm.org.apache.hadoop.fs.Path(
                 str(tgt), _retired_bucket(b))
-            if fs.exists(old_dir):
-                fs.delete(old_dir, True)
+            drop(fs, old_dir)
             had_old = fs.exists(dst_dir)
             if had_old and not fs.rename(dst_dir, old_dir):
                 raise IOError(f"cannot retire bucket {b} of {target}")
@@ -585,12 +485,11 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
             if had_old:
                 fs.delete(old_dir, True)
     finally:
-        if fs.exists(staging):
-            fs.delete(staging, True)
+        drop(fs, staging)
     if contract is None:  # heal a pre-sidecar layout after a clean merge
-        _save_schema_contract(jvm, fs, tgt, delta.schema)
+        write_contract(jvm, fs, tgt, delta.schema)
     if layout is None:  # record routing params for the default-path delegate
-        _save_layout(jvm, fs, tgt, n_buckets, keys)
+        write_layout(jvm, fs, tgt, n_buckets, keys)
 
 
 _RETIRED_PREFIX = "_retired."

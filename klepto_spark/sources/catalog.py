@@ -21,6 +21,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from klepto_spark.sinks import tablefs
 from klepto_spark.sources.dsn import DSN, DSNError, file_path, jdbc_url, route
 
 
@@ -173,31 +174,44 @@ class FileCatalog:
     def load(self, table: str) -> DataFrame:
         from klepto_spark.session import ensure_nanos_conf
         ensure_nanos_conf(self.spark)
-        # a crash mid bin-pack publish leaves transient duplicates (news
-        # moved in before olds deleted); replay/roll back the journaled
-        # plan on the read path — same discipline as apply_positional's
-        # _recover_plan — so every catalog read sees a settled file set.
-        # Driver-side existence checks only; the jvm hop is paid only when
-        # a half-applied plan is actually present.
-        #
-        # LEASE GATE (ADVICE r05): recovery deletes staged/new files, a
-        # destructive mutation — a reader racing a LIVE publish in another
-        # process must not mistake it for a crash. A plan/stage younger
-        # than the lease raises instead of recovering (retry once the
-        # writer settles, or run `compact_small_files`/the writer-side
-        # recovery explicitly); older remnants recover as before. The
-        # writer's publish window is seconds, so a fresh journal almost
-        # always means a publish in flight.
-        # The lease applies ONLY when the journal exists: before
-        # _binpack.json lands, nothing has been published and recovery
-        # merely drops the staging dir — the table's file set is
-        # untouched either way, so blocking reads for the full lease on
-        # a bare _bpstage remnant bought no safety (ADVICE r06). A live
-        # writer whose pre-journal staging is dropped just fails its
-        # stage write and retries; the table never regresses.
+        remnants = self._settle(table)
+        fingerprint = None if remnants else _fingerprint(
+            Path(self._path(table)))
+        hit = self._handles.get(table)  # stored fingerprints are never None
+        if hit is not None and hit[0] == fingerprint:
+            return hit[1]
+        df = self._resolve(table)
+        if fingerprint is not None:
+            self._handles[table] = (fingerprint, df)
+        return df
+
+    def _settle(self, table: str) -> bool:
+        """Settle a crashed bin-pack publish before a read, and return
+        whether bin-pack remnants were present.
+
+        A crash mid bin-pack publish leaves transient duplicates (news
+        moved in before olds deleted). The read path replays or rolls back
+        the journaled plan (``tablefs.open_table``, the writers' settle)
+        so every catalog read sees a settled file set. The checks are
+        driver-side existence tests; the JVM hop is paid only when a
+        remnant is actually present.
+
+        LEASE GATE (ADVICE r05): recovery deletes staged/new files, a
+        destructive mutation, and a reader racing a LIVE publish in
+        another process must not mistake it for a crash. A journal
+        younger than the lease raises instead of recovering (retry once
+        the writer settles, or run ``compact_small_files``/the
+        writer-side recovery explicitly); older remnants recover. The
+        writer's publish window is seconds, so a fresh journal almost
+        always means a publish in flight. The lease applies ONLY when the
+        journal exists: before ``_binpack.json`` lands nothing has been
+        published and recovery merely drops the stage, so blocking reads
+        on a bare stage remnant would buy no safety (ADVICE r06). A live
+        writer whose pre-journal stage is dropped fails its stage write
+        and retries; the table never regresses."""
         root = Path(self._path(table))
-        journal = root / "_binpack.json"
-        remnants = [p for p in (journal, root / "_bpstage")
+        journal = root / tablefs.BINPACK_JOURNAL
+        remnants = [p for p in (journal, root / tablefs.BINPACK_STAGE)
                     if p.exists()]
         if remnants:
             lease = float(os.environ.get(
@@ -211,18 +225,9 @@ class FileCatalog:
                     "it settles, or — if the writer is known dead — "
                     "re-run the compaction / lower "
                     "KLEPTO_BINPACK_LEASE_SEC to force recovery.")
-            from klepto_spark.sinks.layout import _recover_binpack
-            from klepto_spark.sinks.writers import _hadoop_fs
-            jvm, fs, tgt = _hadoop_fs(self.spark.range(0), str(root))
-            _recover_binpack(jvm, fs, tgt)
-        fingerprint = None if remnants else _fingerprint(root)
-        hit = self._handles.get(table)  # stored fingerprints are never None
-        if hit is not None and hit[0] == fingerprint:
-            return hit[1]
-        df = self._resolve(table)
-        if fingerprint is not None:
-            self._handles[table] = (fingerprint, df)
-        return df
+            tablefs.open_table(self.spark, str(self.directory), table,
+                               self.fmt)
+        return bool(remnants)
 
     def _resolve(self, table: str) -> DataFrame:
         """Read the table as it stands: file listing, schema, and the
@@ -262,12 +267,10 @@ class FileCatalog:
         # positional deletes first (they address base rows only, so they
         # commute with key-epoch resolution either way; applying them on
         # the raw scan keeps _metadata addressable)
-        pdv_log = Path(self._path(table)) / "_pdvlog"
-        if pdv_log.is_dir() and any(pdv_log.glob("e*.json")):
+        if tablefs.pending_local(self._path(table), tablefs.PDV_LOG):
             from klepto_spark.sinks.positional_dv import apply_positional
             df = apply_positional(self.spark, self._path(table), base=df)
-        dv_log = Path(self._path(table)) / "_dvlog"
-        if dv_log.is_dir() and any(dv_log.glob("e*.json")):
+        if tablefs.pending_local(self._path(table), tablefs.DV_LOG):
             from klepto_spark.sinks.deletion_vectors import read_files_dv
             df = read_files_dv(self.spark, str(self.directory), table,
                                self.fmt, base=df)
@@ -291,9 +294,9 @@ class FileCatalog:
         the floor for the same reason."""
         from klepto_spark.session import normalise_nanos_ts
         from klepto_spark.sinks.deletion_vectors import read_files_dv
+        self._settle(table)
         base = None
-        pdv_log = Path(self._path(table)) / "_pdvlog"
-        if pdv_log.is_dir() and any(pdv_log.glob("e*.json")):
+        if tablefs.pending_local(self._path(table), tablefs.PDV_LOG):
             from klepto_spark.sinks.positional_dv import apply_positional
             base = apply_positional(self.spark, self._path(table),
                                     as_of_dv_epoch=epoch)
@@ -310,7 +313,7 @@ class FileCatalog:
         equivalence contract)."""
         from pyspark.sql import functions as F
         from klepto_spark.session import normalise_nanos_ts
-        manifest = Path(self._path(table)) / "_minmax.json"
+        manifest = Path(self._path(table)) / tablefs.MANIFEST
         if (self.fmt == "parquet" and manifest.is_file()
                 and self._manifest_usable(table)):
             from klepto_spark.sinks.layout import pruned_read
@@ -341,11 +344,10 @@ class FileCatalog:
         same cost class as reading the manifest itself."""
         import json as _json
         root = Path(self._path(table))
-        for log in ("_pdvlog", "_dvlog"):
-            d = root / log
-            if d.is_dir() and any(d.glob("e*.json")):
-                return False
-        manifest = root / "_minmax.json"
+        if any(tablefs.pending_local(str(root), log)
+               for log in (tablefs.PDV_LOG, tablefs.DV_LOG)):
+            return False
+        manifest = root / tablefs.MANIFEST
         try:
             with open(manifest) as f:
                 files = [e["file"] for e in _json.load(f)["files"]]

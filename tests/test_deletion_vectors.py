@@ -11,7 +11,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from klepto_spark.sinks import deletion_vectors as dv
+from klepto_spark.sinks import deletion_vectors as dv, tablefs
 from klepto_spark.sinks.writers import BUCKET_COL, merge_files
 from klepto_spark.sources.catalog import FileCatalog
 
@@ -368,7 +368,7 @@ def test_vacuum_aborts_retirement_when_publish_rename_fails(
     Simulate the silent failure, assert the abort, then re-run clean."""
     _travel_history(spark, tmp_path)  # base + e1 + e2
     before = _view(spark, tmp_path)
-    real = dv._hadoop_fs
+    real = tablefs.hadoop_fs
 
     class _FailRename:
         def __init__(self, fs):
@@ -384,11 +384,11 @@ def test_vacuum_aborts_retirement_when_publish_rename_fails(
         jvm, fs, tgt = real(df, target)
         return jvm, _FailRename(fs), tgt
 
-    monkeypatch.setattr(dv, "_hadoop_fs", patched)
+    monkeypatch.setattr(tablefs, "hadoop_fs", patched)
     with pytest.raises(RuntimeError, match="publish did not land"):
         dv.vacuum_epochs(spark, str(tmp_path), "t", "parquet",
                          retain_epochs=1)
-    monkeypatch.setattr(dv, "_hadoop_fs", real)
+    monkeypatch.setattr(tablefs, "hadoop_fs", real)
     # nothing retired, nothing lost: the current view is intact and the
     # epoch history is still replayable above the raised floor
     assert _view(spark, tmp_path) == before

@@ -181,7 +181,7 @@ def test_compact_small_files_folds_tail_only(spark, tmp_path):
 
 def test_compact_small_files_crash_recovery_keeps_data(spark, tmp_path):
     from klepto_spark.sinks import layout as L
-    from klepto_spark.sinks.writers import _hadoop_fs
+    from klepto_spark.sinks import tablefs
     from pyspark.sql import functions as F
     import json as _json
     import os
@@ -190,11 +190,11 @@ def test_compact_small_files_crash_recovery_keeps_data(spark, tmp_path):
     for i in range(3):
         spark.range(i * 10, i * 10 + 10).select(F.col("id").alias("x")) \
             .coalesce(1).write.mode("append").parquet(tdir)
-    jvm, fs, tgt = _hadoop_fs(spark.range(0), tdir)
+    jvm, fs, tgt = tablefs.hadoop_fs(spark, tdir)
     olds = [str(s.getPath()) for s in fs.listStatus(tgt)
             if s.getPath().getName().endswith(".parquet")]
     # crash: plan written, news never landed
-    out = fs.create(L._sub_path(jvm, tgt, L._BINPACK_PLAN), True)
+    out = fs.create(tablefs.sub(jvm, tgt, tablefs.BINPACK_JOURNAL), True)
     out.write(bytearray(_json.dumps(
         {"olds": olds, "news": [f"{tdir}/bp-0-missing.parquet"]})
         .encode("utf-8")))

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from klepto_spark.sinks import positional_dv as P
+from klepto_spark.sinks import positional_dv as P, tablefs
 from klepto_spark.sources.catalog import FileCatalog
 
 
@@ -115,9 +115,7 @@ def test_crash_recovery_restores_half_published_plan(spark, tmp_path):
     P.positional_delete(spark, d, "t", predicate="k < 150")
     # simulate the crash: build staging + plan exactly like compaction,
     # then apply only the FIRST file's retire (no replacement moved in)
-    jvm, fs, tgt = __import__(
-        "klepto_spark.sinks.writers", fromlist=["_hadoop_fs"]
-    )._hadoop_fs(spark.range(0), tdir)
+    jvm, fs, tgt = tablefs.hadoop_fs(spark, tdir)
     import json
     epochs = P.committed_pdv_epochs(jvm, fs, tgt)
     pos = spark.read.parquet(*P._epoch_paths(jvm, tgt, epochs))
@@ -129,10 +127,10 @@ def test_crash_recovery_restores_half_published_plan(spark, tmp_path):
                        "retired": f"_retired.{entry_name}",
                        "staged": [], "finals": ["pdvc-0-0-missing.parquet"]}],
             "epochs": []}
-    P._write_json(fs, P._sub(jvm, tgt, P._PDV_PLAN), plan)
+    tablefs.write_json(fs, tablefs.sub(jvm, tgt, P._PDV_PLAN), plan)
     fs.rename(jvm.org.apache.hadoop.fs.Path(affected[0]),
-              P._sub(jvm, jvm.org.apache.hadoop.fs.Path(parent),
-                     f"_retired.{entry_name}"))
+              tablefs.sub(jvm, jvm.org.apache.hadoop.fs.Path(parent),
+                          f"_retired.{entry_name}"))
     # recovery (first step of any operation) must restore the original...
     assert P.compact_files_pdv(spark, d, "t") >= 1
     got = sorted(r["k"] for r in spark.read.parquet(tdir).collect())
@@ -153,9 +151,7 @@ def test_crash_before_publish_does_not_lose_fully_deleted_file(
     d = _mk_table(spark, tmp_path, n=100, files=4)
     tdir = f"{d}/t.parquet"
     P.positional_delete(spark, d, "t", predicate="k < 25")  # file 1 fully
-    jvm, fs, tgt = __import__(
-        "klepto_spark.sinks.writers", fromlist=["_hadoop_fs"]
-    )._hadoop_fs(spark.range(0), tdir)
+    jvm, fs, tgt = tablefs.hadoop_fs(spark, tdir)
     epochs = P.committed_pdv_epochs(jvm, fs, tgt)
     pos = spark.read.parquet(*P._epoch_paths(jvm, tgt, epochs))
     affected = sorted(r[0] for r in
@@ -167,7 +163,7 @@ def test_crash_before_publish_does_not_lose_fully_deleted_file(
                        "retired": f"_retired.{name}",
                        "staged": [], "finals": []}],
             "epochs": [e["id"] for e in epochs]}
-    P._write_json(fs, P._sub(jvm, tgt, P._PDV_PLAN), plan)
+    tablefs.write_json(fs, tablefs.sub(jvm, tgt, P._PDV_PLAN), plan)
     # recovery runs at the start of the next op: epochs must survive
     assert P.has_pending_pdv(spark, d, "t")
     assert P.compact_files_pdv(spark, d, "t") >= 1

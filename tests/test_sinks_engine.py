@@ -600,14 +600,14 @@ def test_partitioned_merge_csv_schema_contract_stable(spark, tmp_path):
     wedges. The sidecar persists the creating schema as the contract, so
     csv merges stay stable regardless of what inference would guess."""
     import os
-    from klepto_spark.sinks.writers import (
-        _SCHEMA_FILE, merge_files_partitioned)
+    from klepto_spark.sinks.tablefs import SCHEMA_FILE
+    from klepto_spark.sinks.writers import merge_files_partitioned
     base = spark.createDataFrame([(1, "a"), (2, "b")],
                                  "id bigint, tag string")
     merge_files_partitioned(base, str(tmp_path), "t", "csv",
                             keys=["id"], n_buckets=2)
     target = os.path.join(str(tmp_path), "t.csv")
-    assert os.path.exists(os.path.join(target, _SCHEMA_FILE))
+    assert os.path.exists(os.path.join(target, SCHEMA_FILE))
     delta = spark.createDataFrame([(2, "B"), (3, "c")],
                                   "id bigint, tag string")
     merge_files_partitioned(delta, str(tmp_path), "t", "csv",
@@ -622,13 +622,13 @@ def test_partitioned_merge_heals_pre_sidecar_layout(spark, tmp_path):
     """Layouts written before the sidecar existed fall back to the
     at-rest schema once, then a clean merge writes the contract."""
     import os
-    from klepto_spark.sinks.writers import (
-        _SCHEMA_FILE, merge_files_partitioned)
+    from klepto_spark.sinks.tablefs import SCHEMA_FILE
+    from klepto_spark.sinks.writers import merge_files_partitioned
     base = spark.range(10).selectExpr("id", "concat('v', id) AS tag")
     merge_files_partitioned(base, str(tmp_path), "t", "parquet",
                             keys=["id"], n_buckets=2)
     target = os.path.join(str(tmp_path), "t.parquet")
-    sidecar = os.path.join(target, _SCHEMA_FILE)
+    sidecar = os.path.join(target, SCHEMA_FILE)
     os.remove(sidecar)  # simulate a legacy layout
     delta = spark.createDataFrame([(3, "NEW3")], "id long, tag string")
     merge_files_partitioned(delta, str(tmp_path), "t", "parquet",
