@@ -1044,9 +1044,15 @@ def cross_corpus_pairs(old: DataFrame, new: DataFrame,
     cost follows the SMALL side, never |old| x |new|. Returned pairs
     always have the ``old``-side key in ``a`` and the ``new``-side key
     in ``b``; intra-corpus duplicates are excluded (run
-    :func:`minhash_lsh_pairs` per side for those). Requires disjoint
-    key spaces, like :func:`cross_corpus_pairs_indexed` — a key present
-    in both corpora could not be oriented.
+    :func:`minhash_lsh_pairs` per side for those).
+
+    Requires disjoint key spaces, and nothing checks it. A key present in
+    both corpora counts as a ``new``-side key, so its pairs are silently
+    dropped or mis-oriented: a pair with another ``new`` key is dropped
+    (even a real match of its ``old`` copy), and a pair with an
+    ``old``-only key comes back with the shared key in ``b`` (even when
+    the match was its ``old`` copy, an intra-``old`` pair reported as a
+    cross pair). The shared key never pairs with itself.
 
     ``per_doc_cap``: bound candidates to ~cap per doc by band agreement
     (:func:`cap_pairs_per_doc`) before orientation — the mass-near-copy
@@ -1080,7 +1086,11 @@ def cross_corpus_pairs_indexed(spark, path, train: DataFrame,
     (pytest-pinned): same touched-bucket membership (the probe semi-join
     keeps every index row whose band a train doc shares), same star cap,
     same orientation — ``a`` is the train key, ``b`` the held-out key.
-    Requires disjoint key spaces (a shared key could not be oriented).
+    Requires disjoint key spaces, and nothing checks it: a key both in
+    ``train`` and in the index is silently dropped or mis-oriented as in
+    :func:`cross_corpus_pairs` with the index as the ``new`` side (its
+    pairs with other index keys are dropped, its pairs with train-only
+    keys come back with it in ``b``, and it never pairs with itself).
 
     Scale shape: the held-out index is the SMALL side; its distinct
     bands broadcast as the probe and its keys broadcast for the

@@ -77,10 +77,13 @@ def dedup_simhash_stream(df: DataFrame, text_col: str = "text",
 
 
 class Family(NamedTuple):
-    """One at-rest family's streaming twin: ``rows(batch)``, the index rows
-    a batch commits, and its output — ``bootstrap(batch, rows)`` with no
-    prior index, else ``append(batch, rows, prior)`` over the SORTED prior
-    index paths."""
+    """One at-rest family's streaming twin: its ``name`` and the ``scheme``
+    every epoch dir of its index is stamped with (the batch writer's
+    stamp), ``rows(batch)``, the index rows a batch commits, and its
+    output — ``bootstrap(batch, rows)`` with no prior index, else
+    ``append(batch, rows, prior)`` over the SORTED prior index paths."""
+    name: str
+    scheme: dict
     rows: Callable[[DataFrame], DataFrame]
     bootstrap: Callable[[DataFrame, DataFrame], DataFrame]
     append: Callable[[DataFrame, DataFrame, list[str]], DataFrame]
@@ -105,9 +108,12 @@ def process_epoch(family: Family, batch_df: DataFrame, epoch_id: int,
            else family.bootstrap(batch_df, rows))
     # each commit replaces the epoch's own dir on retry, the index last;
     # a direct write (not partitionBy) leaves a schema-bearing file even
-    # for zero rows, so the output stays readable while every epoch is empty
+    # for zero rows, so the output stays readable while every epoch is
+    # empty. The index dir carries the family's scheme stamp, which the
+    # next probe of this epoch view checks (at its first entry).
     out.write.mode("overwrite").parquet(f"{out_path}/ep={epoch_id}")
-    rows.write.mode("overwrite").parquet(f"{index_path}/ep={epoch_id}")
+    D.write_index(rows, f"{index_path}/ep={epoch_id}", family.name,
+                  family.scheme)
 
 
 def stream_writer(stream: DataFrame, family: Family, index_path: str,
@@ -129,6 +135,7 @@ def minhash(text_col: str = "text", key_col: str = "doc_id", k: int = 5,
     index (:func:`operators.dedup.minhash_append`); the batch commits
     its (key, band) rows."""
     return Family(
+        "minhash", D._minhash_scheme(key_col, k, num_hashes, bands),
         rows=lambda batch: D.minhash_band_rows(
             batch, text_col, key_col, k, num_hashes, bands),
         bootstrap=lambda batch, _: D.minhash_lsh_pairs(
@@ -145,6 +152,7 @@ def exact(text_col: str = "text", key_col: str = "doc_id",
     fingerprint index (:func:`operators.dedup.exact_append`); the batch
     commits its (key, fp) rows."""
     return Family(
+        "exact", D._exact_scheme(key_col, prefix_words),
         rows=lambda batch: D.exact_index_rows(batch, text_col, key_col,
                                               prefix_words),
         bootstrap=lambda _, fp: (
@@ -164,6 +172,7 @@ def cdc(text_col: str = "text", key_col: str = "doc_id", divisor: int = 8,
     (:func:`operators.dedup.cdc_append`); the batch commits its (key, h)
     chunk-hash rows."""
     return Family(
+        "cdc", D._cdc_scheme(key_col, divisor, min_words),
         rows=lambda batch: D.cdc_index_rows(
             batch, text_col, key_col, divisor, min_words),
         bootstrap=lambda batch, _: D.cdc_near_dup_pairs(
@@ -180,8 +189,10 @@ def semantic(threshold: float, vec_col: str = "embedding",
     """Verified cosine pairs (>= one endpoint in the batch) of an
     embedding stream against the signature index
     (:func:`operators.dedup.semantic_append`); the batch commits its
-    (key, signature, vector) rows."""
+    (key, signature, vector) rows. With ``dim=None`` each batch resolves
+    its own width, so the scheme stamp records no dim."""
     return Family(
+        "semantic", D._semantic_scheme(key_col, bits, dim),
         rows=lambda batch: D.semantic_index_rows(
             batch, vec_col, key_col, bits, dim),
         bootstrap=lambda batch, _: S.cosine_similar_pairs(
@@ -200,6 +211,7 @@ def span(text_col: str = "text", key_col: str = "doc_id", k: int = 8,
     read, so the ep= overwrite is load-bearing: it keeps a replayed
     batch from double-counting its own windows."""
     return Family(
+        "span", T._span_scheme(k),
         rows=lambda batch: T._window_counts(
             T._window_grams(batch, text_col, key_col, k)[1]),
         bootstrap=lambda batch, _: T.dup_span_stats(
@@ -218,6 +230,7 @@ def hll(value_col: str, group_cols: list[str]) -> Family:
     idempotent: a replayed epoch could not double-count even without the
     epoch-pinned view."""
     return Family(
+        "hll", H.SCHEME,
         rows=lambda batch: H.hll_registers(batch, value_col, group_cols),
         bootstrap=lambda _, regs: H._fold_estimate(regs, group_cols),
         append=lambda batch, _, prior: H.hll_append(
@@ -244,7 +257,7 @@ def bloom(value_col: str, group_cols: list[str], m: int | None = None,
         return B.bloom_probe(prior_bits, batch, value_col, group_cols,
                              m=m, k=k)
 
-    return Family(lambda batch: B.bloom_bits(
+    return Family("bloom", B.scheme(m, k), lambda batch: B.bloom_bits(
         batch, value_col, group_cols, m, k), verdicts, verdicts)
 
 
@@ -265,6 +278,7 @@ def cms(value_col: str, group_cols: list[str], w: int | None = None,
         return C.cms_probe(counters, batch, value_col, group_cols, w=w, d=d)
 
     return Family(
+        "cms", C.scheme(w, d),
         rows=lambda batch: C.cms_counters(batch, value_col, group_cols, w, d),
         bootstrap=lambda batch, counters: probe(
             batch, C.fold_counters(counters, group_cols)),

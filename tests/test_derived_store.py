@@ -1,8 +1,10 @@
 """Managed derived-dataset store (VERDICT r05 #6): one copy per source
 state, atomic publish, superseded tags vacuumed."""
 
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from klepto_spark.sinks import derived
@@ -129,3 +131,28 @@ def test_source_tag_sees_partition_subdir_rewrite(spark, tmp_path,
     got = derived.read_or_build(spark, src, "agg", build) \
         .collect()[0]["s"]
     assert got == 119 and len(calls) == 2  # rebuilt, not stale-served
+
+
+@pytest.mark.parametrize("qid, family", [
+    ("d09_cross_dedup_indexed", "minhash"),
+    ("d10_semantic_append", "semantic"),
+    ("d11_exact_append", "exact"),
+    ("d13_cdc_append", "cdc"),
+    ("t20_span_append", "span"),
+    ("t21_hll_append", "hll"),
+    ("t23_bloom_decontaminate", "bloom"),
+])
+def test_contract_index_is_stamped_with_its_family(
+        spark, sf_dir, tmp_path, monkeypatch, qid, family):
+    """A contract query that probes an index it published in the derived
+    store stamps that index with its family's scheme, so the probe's
+    scheme check has a stamp to read."""
+    import __spark_entry__ as entry
+    from klepto_spark.operators.dedup import INDEX_META
+
+    monkeypatch.setenv("KLEPTO_DERIVED_DIR", str(tmp_path))
+    entry.queries()[qid](spark, os.path.join(os.path.dirname(sf_dir),
+                                             "sf0.01"))
+    stamps = sorted(tmp_path.rglob(INDEX_META))
+    assert len(stamps) == 1
+    assert json.loads(stamps[0].read_text())["mode"] == family

@@ -62,6 +62,18 @@ def test_rows_only_class_stays_empty():
     assert not offenders, f"stale 'Rows-only contract' prose: {offenders}"
 
 
+def test_queries_builds_no_oracle_text(monkeypatch):
+    """bench, the perfbench worker and the plan audit call queries() only,
+    so it must not build any oracle text; oracle_sql() builds it all."""
+    def boom(*args, **kwargs):
+        raise RuntimeError("oracle text built")
+
+    monkeypatch.setattr(entry_mod, "_lsh_oracle", boom)
+    assert len(entry_mod.queries()) == 131
+    with pytest.raises(RuntimeError, match="oracle text built"):
+        entry_mod.oracle_sql()
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -44,14 +44,14 @@ def test_semi_join_parent_is_broadcast_and_pruned(spark, sf_dir):
 
 
 def test_topk_compiles_to_take_ordered(spark, sf_dir):
-    df = entry.q_filter_topk(spark, sf_dir)
+    df = entry.queries()["k02_filter_topk"](spark, sf_dir)
     assert I.has_top_k(df)
 
 
 def test_anonymise_stays_in_codegen(spark, sf_dir):
     """The anonymise projection must not break whole-stage codegen — it is
     pure built-in expressions (no Python UDFs in the hot path)."""
-    df = entry.q_anonymise(spark, sf_dir)
+    df = entry.queries()["k05_anonymise"](spark, sf_dir)
     plan = I.executed_plan(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert I.codegen_span_count(df) >= 1
@@ -71,7 +71,8 @@ def test_events_rollup_pushes_nothing_to_python(spark, sf_dir):
 
 
 def test_plan_report_shape(spark, sf_dir):
-    rep = I.plan_report(entry.q_restrict_semi(spark, sf_dir))
+    rep = I.plan_report(
+        entry.queries()["k03_restrict_semi"](spark, sf_dir))
     assert rep["broadcast_join"] is True
     assert isinstance(rep["shuffles"], int)
 

@@ -749,6 +749,8 @@ def test_compact_index_epochs_probe_identical_replay_safe(spark, tmp_path):
     # epochs 0-2 folded INTO ep=0 (oldest); the layout stays pure ep=
     assert sorted(names) == ["ep=0", "ep=3"]
     assert spark.read.parquet(idx).count() == n_rows  # still ONE table
+    # the fold replaces ep=0's data files in place: its scheme stamp stays
+    assert os.path.exists(os.path.join(idx, "ep=0", D.INDEX_META))
 
     # replay of the in-flight epoch probes the identical view
     process_epoch(minhash(), probe, 3, idx, pairs_out)
@@ -1304,21 +1306,43 @@ _BATCH = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(_BATCH))
-def test_index_append_refuses_another_scheme(spark, tmp_path, name):
+#: family -> its streaming twin's constructor, taking ``_BATCH``'s other
+#: scheme as keyword arguments
+_TWIN = {
+    "minhash": SD.minhash, "exact": SD.exact, "cdc": SD.cdc,
+    "semantic": lambda **kw: SD.semantic(0.95, **kw), "span": SD.span,
+    "hll": lambda: SD.hll("user_id", ["event_type"]),
+    "bloom": lambda **kw: SD.bloom("v", [], **kw),
+    "cms": lambda **kw: SD.cms("token", [], **kw),
+}
+
+
+@pytest.mark.parametrize("name, built", [
+    *(pytest.param(n, "batch", id=n) for n in sorted(_BATCH)),
+    *(pytest.param(n, "epoch", id=f"{n}-epoch") for n in sorted(_BATCH))])
+def test_index_append_refuses_another_scheme(spark, tmp_path, name, built):
     """An index built with one scheme and probed with another would
     answer from a different hash space (and a commit would mix two
-    schemes in one index): the append refuses."""
+    schemes in one index): the append refuses. An index built by
+    process_epoch stamps each epoch dir, so a probe of its epoch view
+    (commit=False) is refused by the scheme check too."""
+    import os
+
     write, append, other = _BATCH[name]
     _, batch = _family(spark, name)
     idx = str(tmp_path / "idx")
-    if other is None:
-        write(batch(0, 20), idx)
-        D.write_index_meta(spark, idx, name, {"p": 4, "rho_bits": 48})
+    if built == "epoch":
+        SD.process_epoch(_TWIN[name](**(other or {})), batch(0, 20), 0, idx,
+                         str(tmp_path / "out"))
+        idx = [os.path.join(idx, "ep=0")]
+        assert os.path.exists(os.path.join(idx[0], D.INDEX_META))
     else:
-        write(batch(0, 20), idx, **other)
+        write(batch(0, 20), idx, **(other or {}))
+    if other is None:
+        D.write_index_meta(spark, idx[0] if built == "epoch" else idx, name,
+                           {"p": 4, "rho_bits": 48})
     with pytest.raises(ValueError, match="different scheme"):
-        append(spark, idx, batch(20, 40), True)
+        append(spark, idx, batch(20, 40), built == "batch")
 
 
 @pytest.mark.parametrize("name", sorted(_BATCH))
