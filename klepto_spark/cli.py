@@ -9,6 +9,16 @@ this package; SURVEY §3.3 marks the self-updater as not portable).
         --to parquet:///data/out [--config .klepto.toml] \\
         [--concurrency N] [--data-only] [--permissive] [--seed S] \\
         [--join-strategy semi|inner]
+    python -m klepto_spark steal-incremental --from DSN --to DSN \\
+        --state marks.json --watermark TABLE=COLUMN [...] \\
+        [--concurrency N] [--watermarked-only] [shared steal flags]
+    python -m klepto_spark steal-cdc --from DSN --to DSN \\
+        --state marks.json --cdc TABLE=MARK_COL:KEY[,KEY...] [...] \\
+        [--tombstone TABLE=SQL_EXPR] [--sync-deletes] \\
+        [--partition-buckets N] [--merge-on-read] [shared steal flags]
+
+The three steal commands share ``--from --to --config --permissive
+--seed --join-strategy``, one setup path and one JSON run report.
 """
 
 from __future__ import annotations
@@ -16,6 +26,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from dataclasses import asdict
 from pathlib import Path
 
 
@@ -30,27 +41,29 @@ def _cmd_init(args: argparse.Namespace) -> int:
     return 0
 
 
-def _cmd_steal(args: argparse.Namespace) -> int:
+def _run_steal(args: argparse.Namespace, steal_fn, **kwargs) -> int:
+    """The shared steal path: spec, session and source from the shared
+    flags, one ``steal_fn`` run, and its JSON report."""
     from klepto_spark.config import Spec, load_spec
-    from klepto_spark.engine import steal
     from klepto_spark.session import get_spark
     from klepto_spark.sources.catalog import connect
 
     spec = load_spec(args.config) if args.config else Spec()
-    spark = get_spark(app_name="klepto_spark_steal")
+    app = f"klepto_spark_{args.command}".replace("-", "_")
+    spark = get_spark(app_name=app)
     spark.sparkContext.setLogLevel("WARN")
     source = connect(spark, getattr(args, "from"))
     try:
-        report = steal(spec, source, args.to, concurrency=args.concurrency,
-                       data_only=args.data_only, strict=not args.permissive,
-                       join_strategy=args.join_strategy, seed=args.seed)
+        report = steal_fn(spec, source, args.to, strict=not args.permissive,
+                          join_strategy=args.join_strategy, seed=args.seed,
+                          **kwargs)
     except RuntimeError as exc:
         print(str(exc), file=sys.stderr)
         return 1
     # run report (reference logs total_time at cmd/steal.go:126-132)
     print(json.dumps({
-        "tables": {t.table: {"rows": t.rows, "seconds": t.seconds,
-                             "skipped": t.skipped, "error": t.error}
+        "tables": {t.table: {k: v for k, v in asdict(t).items()
+                             if k != "table"}
                    for t in report.tables},
         "total_seconds": report.seconds,
         "ok": report.ok,
@@ -58,11 +71,14 @@ def _cmd_steal(args: argparse.Namespace) -> int:
     return 0 if report.ok else 1
 
 
+def _cmd_steal(args: argparse.Namespace) -> int:
+    from klepto_spark.engine import steal
+    return _run_steal(args, steal, concurrency=args.concurrency,
+                      data_only=args.data_only)
+
+
 def _cmd_steal_incremental(args: argparse.Namespace) -> int:
-    from klepto_spark.config import Spec, load_spec
     from klepto_spark.incremental import steal_incremental
-    from klepto_spark.session import get_spark
-    from klepto_spark.sources.catalog import connect
 
     watermarks = {}
     for item in args.watermark:
@@ -73,34 +89,13 @@ def _cmd_steal_incremental(args: argparse.Namespace) -> int:
                   file=sys.stderr)
             return 2
         watermarks[table] = col
-    spec = load_spec(args.config) if args.config else Spec()
-    spark = get_spark(app_name="klepto_spark_steal_incremental")
-    spark.sparkContext.setLogLevel("WARN")
-    source = connect(spark, getattr(args, "from"))
-    try:
-        report = steal_incremental(
-            spec, source, args.to, state_path=args.state,
-            watermarks=watermarks, concurrency=args.concurrency,
-            strict=not args.permissive, join_strategy=args.join_strategy,
-            seed=args.seed, copy_others=not args.watermarked_only)
-    except RuntimeError as exc:
-        print(str(exc), file=sys.stderr)
-        return 1
-    print(json.dumps({
-        "tables": {t.table: {"rows": t.rows, "seconds": t.seconds,
-                             "skipped": t.skipped, "error": t.error}
-                   for t in report.tables},
-        "total_seconds": report.seconds,
-        "ok": report.ok,
-    }))
-    return 0 if report.ok else 1
+    return _run_steal(args, steal_incremental, state_path=args.state,
+                      watermarks=watermarks, concurrency=args.concurrency,
+                      copy_others=not args.watermarked_only)
 
 
 def _cmd_steal_cdc(args: argparse.Namespace) -> int:
-    from klepto_spark.config import Spec, load_spec
     from klepto_spark.incremental import CdcTable, steal_cdc
-    from klepto_spark.session import get_spark
-    from klepto_spark.sources.catalog import connect
 
     tables: dict[str, CdcTable] = {}
     for item in args.cdc:
@@ -128,26 +123,7 @@ def _cmd_steal_cdc(args: argparse.Namespace) -> int:
         print(f"--tombstone names tables not in --cdc: {sorted(orphaned)}",
               file=sys.stderr)
         return 2
-    spec = load_spec(args.config) if args.config else Spec()
-    spark = get_spark(app_name="klepto_spark_steal_cdc")
-    spark.sparkContext.setLogLevel("WARN")
-    source = connect(spark, getattr(args, "from"))
-    try:
-        report = steal_cdc(spec, source, args.to, state_path=args.state,
-                           tables=tables, strict=not args.permissive,
-                           join_strategy=args.join_strategy, seed=args.seed)
-    except RuntimeError as exc:
-        print(str(exc), file=sys.stderr)
-        return 1
-    print(json.dumps({
-        "tables": {t.table: {"rows": t.rows, "seconds": t.seconds,
-                             "skipped": t.skipped, "error": t.error,
-                             "deleted_rows": t.deleted_rows}
-                   for t in report.tables},
-        "total_seconds": report.seconds,
-        "ok": report.ok,
-    }))
-    return 0 if report.ok else 1
+    return _run_steal(args, steal_cdc, state_path=args.state, tables=tables)
 
 
 def _cmd_compact(args: argparse.Namespace) -> int:
@@ -406,49 +382,46 @@ def build_parser() -> argparse.ArgumentParser:
     pi.add_argument("--path", default=".klepto.toml")
     pi.set_defaults(fn=_cmd_init)
 
-    ps = sub.add_parser("steal", help="copy + anonymise source to target")
-    ps.add_argument("--from", required=True, dest="from",
-                    help="source DSN (parquet://dir, csv://dir, mysql://…)")
-    ps.add_argument("--to", required=True,
-                    help="target DSN (parquet://dir, os://stdout, …)")
-    ps.add_argument("--config", default=None, help="pipeline TOML")
+    # the flags every steal command shares (read by _run_steal)
+    common = argparse.ArgumentParser(add_help=False)
+    common.add_argument(
+        "--from", required=True, dest="from",
+        help="source DSN (parquet://dir, csv://dir, mysql://…)")
+    common.add_argument("--to", required=True,
+                        help="target DSN (parquet://dir, os://stdout, …)")
+    common.add_argument("--config", default=None, help="pipeline TOML")
+    common.add_argument("--permissive", action="store_true",
+                        help="log per-table failures instead of failing "
+                             "the run")
+    common.add_argument("--seed", default="klepto",
+                        help="anonymisation determinism seed")
+    common.add_argument("--join-strategy", choices=["semi", "inner"],
+                        default="semi")
+
+    ps = sub.add_parser("steal", parents=[common],
+                        help="copy + anonymise source to target")
     ps.add_argument("--concurrency", type=int, default=None,
                     help="concurrent tables (default: CPU count)")
     ps.add_argument("--data-only", action="store_true",
                     help="skip the structure pass")
-    ps.add_argument("--permissive", action="store_true",
-                    help="log per-table failures instead of failing the run")
-    ps.add_argument("--seed", default="klepto",
-                    help="anonymisation determinism seed")
-    ps.add_argument("--join-strategy", choices=["semi", "inner"],
-                    default="semi")
     ps.set_defaults(fn=_cmd_steal)
 
     pinc = sub.add_parser(
-        "steal-incremental",
+        "steal-incremental", parents=[common],
         help="delta copy: only rows past each table's high-water mark")
-    pinc.add_argument("--from", required=True, dest="from")
-    pinc.add_argument("--to", required=True)
     pinc.add_argument("--state", required=True,
                       help="JSON file holding per-table high-water marks")
     pinc.add_argument("--watermark", action="append", required=True,
                       metavar="TABLE=COLUMN",
                       help="monotonic watermark column (repeatable)")
-    pinc.add_argument("--config", default=None)
     pinc.add_argument("--concurrency", type=int, default=None)
-    pinc.add_argument("--permissive", action="store_true")
-    pinc.add_argument("--seed", default="klepto")
-    pinc.add_argument("--join-strategy", choices=["semi", "inner"],
-                      default="semi")
     pinc.add_argument("--watermarked-only", action="store_true",
                       help="skip full copies of non-watermarked tables")
     pinc.set_defaults(fn=_cmd_steal_incremental)
 
     pcdc = sub.add_parser(
-        "steal-cdc",
+        "steal-cdc", parents=[common],
         help="CDC copy: update-bumped watermark + keyed latest-wins merge")
-    pcdc.add_argument("--from", required=True, dest="from")
-    pcdc.add_argument("--to", required=True)
     pcdc.add_argument("--state", required=True,
                       help="JSON file holding per-table marks")
     pcdc.add_argument("--cdc", action="append", required=True,
@@ -469,11 +442,6 @@ def build_parser() -> argparse.ArgumentParser:
                       help="file sinks: O(delta) merges via deletion-"
                            "vector epochs; reads resolve latest-wins and "
                            "compaction folds epochs into the base")
-    pcdc.add_argument("--config", default=None)
-    pcdc.add_argument("--permissive", action="store_true")
-    pcdc.add_argument("--seed", default="klepto")
-    pcdc.add_argument("--join-strategy", choices=["semi", "inner"],
-                      default="semi")
     pcdc.set_defaults(fn=_cmd_steal_cdc)
 
     pc = sub.add_parser(

@@ -53,6 +53,60 @@ class RunReport:
         return all(t.error is None for t in self.tables)
 
 
+def run_tables(what: str, spec: Spec, source, sink_dsn: str,
+               tables: list[str], body, *, concurrency: int = 1,
+               structure: bool = False, strict: bool = True) -> RunReport:
+    """The run loop every steal command shares: ``body(table, res)``
+    copies one table and fills its ``TableResult``; the loop owns the
+    bounded pool, per-table timing, error capture, the skipped-row
+    metric and the run report, and raises on any failed table when
+    ``strict`` (``"<what> failed for tables: [...]"``)."""
+    from klepto_spark.sinks.sqltext import shared_output
+
+    t0 = time.time()
+    report = RunReport()
+    # per-table read tuning from the spec (JDBC parallel scans): the
+    # catalog owns the read path, the spec owns the user's intent
+    apply_overrides = getattr(source, "apply_read_overrides", None)
+    if apply_overrides is not None:
+        apply_overrides(spec)
+    if structure:
+        report.structure_sql = source.structure()
+
+    # Concurrent table jobs interleave under the FAIR scheduler, which is a
+    # static conf — set in session.py defaults, not here (runtime set throws).
+
+    def run_one(table_name: str) -> TableResult:
+        res = TableResult(table=table_name)
+        start = time.time()
+        try:
+            body(table_name, res)
+            # row-level permissive metric (X5 row granularity — reference
+            # skips unscannable rows and keeps going, engine.go:202-205)
+            counter = getattr(source, "corrupt_count", None)
+            if counter is not None and not res.skipped:
+                res.skipped_rows = counter(table_name)
+        except Exception as exc:  # noqa: BLE001 — X5 permissive mode
+            res.error = str(exc)
+            log.error("table %s failed: %s", table_name, exc)
+        finally:
+            res.seconds = round(time.time() - start, 3)
+        return res
+
+    with (shared_output(sink_dsn),
+          ThreadPoolExecutor(max_workers=max(1, concurrency)) as pool):
+        futures = {pool.submit(run_one, t): t for t in tables}
+        for fut in as_completed(futures):
+            report.tables.append(fut.result())
+
+    report.tables.sort(key=lambda r: r.table)
+    report.seconds = round(time.time() - t0, 3)
+    if strict and not report.ok:
+        failed = [t.table for t in report.tables if t.error]
+        raise RuntimeError(f"{what} failed for tables: {failed}")
+    return report
+
+
 def steal(spec: Spec, source, sink_dsn: str, *, concurrency: int | None = None,
           data_only: bool = False, strict: bool = True,
           join_strategy: str = "semi", seed: str = "klepto",
@@ -65,74 +119,37 @@ def steal(spec: Spec, source, sink_dsn: str, *, concurrency: int | None = None,
     Tables without a spec entry copy verbatim (the reference's default for
     unconfigured tables, engine.go:95-98).
     """
-    from klepto_spark.sinks.sqltext import shared_output
     from klepto_spark.sinks.writers import write_table
-
-    t0 = time.time()
-    report = RunReport()
-    # per-table read tuning from the spec (JDBC parallel scans): the
-    # catalog owns the read path, the spec owns the user's intent
-    apply_overrides = getattr(source, "apply_read_overrides", None)
-    if apply_overrides is not None:
-        apply_overrides(spec)
-    if not data_only:
-        report.structure_sql = source.structure()
 
     if concurrency is None:
         concurrency = os.cpu_count() or 4
 
-    # Concurrent table jobs interleave under the FAIR scheduler, which is a
-    # static conf — set in session.py defaults, not here (runtime set throws).
-
-    def run_one(table_name: str) -> TableResult:
-        res = TableResult(table=table_name)
-        start = time.time()
-        try:
-            tspec = spec.find_table(table_name) or TableSpec(name=table_name)
-            if tspec.ignore_data:
-                res.skipped = True
-                return res
-            df = build_table_df(tspec, source.load, spec=spec,
-                                join_strategy=join_strategy, seed=seed)
-            # row count via Observation: piggybacks on the write pass, no
-            # second job (vs a separate df.count())
-            from pyspark.sql import Observation, functions as F
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            written = write_table(df, sink_dsn, table_name, mode=mode)
-            if written is not None:
-                # sql-text sinks count rows themselves while streaming
-                # statements out; their toLocalIterator never completes
-                # the observed query execution, so obs.get would BLOCK
-                # forever (found by the pass-through e2e test)
-                res.rows = written
-            else:
-                res.rows = obs.get["rows"]
-            # row-level permissive metric (X5 row granularity — reference
-            # skips unscannable rows and keeps going, engine.go:202-205)
-            counter = getattr(source, "corrupt_count", None)
-            if counter is not None:
-                res.skipped_rows = counter(table_name)
-        except Exception as exc:  # noqa: BLE001 — X5 permissive mode
-            res.error = str(exc)
-            log.error("table %s failed: %s", table_name, exc)
-        finally:
-            res.seconds = round(time.time() - start, 3)
-        return res
+    def copy_one(table_name: str, res: TableResult) -> None:
+        tspec = spec.find_table(table_name) or TableSpec(name=table_name)
+        if tspec.ignore_data:
+            res.skipped = True
+            return
+        df = build_table_df(tspec, source.load, spec=spec,
+                            join_strategy=join_strategy, seed=seed)
+        # row count via Observation: piggybacks on the write pass, no
+        # second job (vs a separate df.count())
+        from pyspark.sql import Observation, functions as F
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        written = write_table(df, sink_dsn, table_name, mode=mode)
+        if written is not None:
+            # sql-text sinks count rows themselves while streaming
+            # statements out; their toLocalIterator never completes
+            # the observed query execution, so obs.get would BLOCK
+            # forever (found by the pass-through e2e test)
+            res.rows = written
+        else:
+            res.rows = obs.get["rows"]
 
     tables = source.tables()
     if only_tables is not None:
         wanted = set(only_tables)
         tables = [t for t in tables if t in wanted]
-    with (shared_output(sink_dsn),
-          ThreadPoolExecutor(max_workers=max(1, concurrency)) as pool):
-        futures = {pool.submit(run_one, t): t for t in tables}
-        for fut in as_completed(futures):
-            report.tables.append(fut.result())
-
-    report.tables.sort(key=lambda r: r.table)
-    report.seconds = round(time.time() - t0, 3)
-    if strict and not report.ok:
-        failed = [t.table for t in report.tables if t.error]
-        raise RuntimeError(f"steal failed for tables: {failed}")
-    return report
+    return run_tables("steal", spec, source, sink_dsn, tables, copy_one,
+                      concurrency=concurrency, structure=not data_only,
+                      strict=strict)

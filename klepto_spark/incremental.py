@@ -36,7 +36,7 @@ import tempfile
 from dataclasses import dataclass, replace
 
 from klepto_spark.config import Spec, TableSpec
-from klepto_spark.engine import RunReport, TableResult, steal
+from klepto_spark.engine import RunReport, TableResult, run_tables, steal
 from klepto_spark.operators.pipeline import build_table_df
 
 
@@ -102,11 +102,33 @@ def _to_json(value) -> dict:
     return {"kind": "string", "value": str(value)}
 
 
-def _with_range(tspec: TableSpec, pred: str) -> TableSpec:
-    match = tspec.filter.match
-    combined = f"({match}) AND {pred}" if match else pred
-    filt = replace(tspec.filter, match=combined)
-    return replace(tspec, filter=filt)
+def _window(source, table: str, col: str, stored: dict | None):
+    """Snapshot ``max(col)`` and return ``(new_max, pred)``: ``pred``
+    bounds the closed window ``stored < col <= new_max`` (the upper bound
+    alone on the first run), or is None when nothing lies past the mark.
+    The snapshot comes BEFORE the copy: rows landing mid-copy belong to
+    the next window."""
+    from pyspark.sql import functions as F
+    new_max = source.load(table).agg(F.max(col).alias("m")).first()["m"]
+    if new_max is None or (stored is not None
+                           and _to_json(new_max) == stored):
+        return new_max, None
+    upper = f"{table}.{col} <= {_literal(new_max)}"
+    if stored is None:
+        return new_max, upper
+    return new_max, f"{table}.{col} > {_from_json(stored)} AND {upper}"
+
+
+def _scoped(spec: Spec, table: str, pred: str | None = None) -> Spec:
+    """``spec`` with ``table``'s entry first (a verbatim one when it has
+    none), its filter ANDed with ``pred``."""
+    tspec = spec.find_table(table) or TableSpec(name=table)
+    if pred is not None:
+        match = tspec.filter.match
+        combined = f"({match}) AND {pred}" if match else pred
+        tspec = replace(tspec, filter=replace(tspec.filter, match=combined))
+    return replace(spec, tables=[tspec] + [t for t in spec.tables
+                                           if t.name != table])
 
 
 @dataclass
@@ -184,127 +206,89 @@ def steal_cdc(spec: Spec, source, sink_dsn: str, *,
     from klepto_spark.sinks.writers import merge_table
 
     marks = load_marks(state_path)
-    report = RunReport()
-    import time as _time
-    t0 = _time.time()
 
-    for table, cdc in sorted(tables.items()):
-        res = TableResult(table=table)
-        start = _time.time()
+    def capture(table: str, res: TableResult) -> None:
+        cdc = tables[table]
+        stored = marks.get(table)
+        new_max, pred = _window(source, table, cdc.mark_col, stored)
+        if pred is None and not cdc.sync_deletes:
+            res.rows, res.skipped = 0, stored is not None
+            return
+        # an unchanged watermark still needs a sync_deletes pass: hard
+        # deletes never bump max(mark_col)
+        run_spec = _scoped(spec, table, pred or "1=0")
+        tspec = run_spec.tables[0]
+        df = build_table_df(tspec, source.load, spec=run_spec,
+                            join_strategy=join_strategy, seed=seed)
+        masked = [c for c in [*cdc.keys, cdc.mark_col]
+                  if c in tspec.anonymise]
+        missing = [c for c in [*cdc.keys, cdc.mark_col]
+                   if c not in df.columns]
+        if masked or missing:
+            raise ValueError(
+                f"CDC columns masked={masked} missing={missing} for "
+                f"table {table!r}: merge keys and the mark column "
+                "must reach the sink unmasked — an anonymised mark "
+                "breaks version ordering and an anonymised key breaks "
+                "identity across seed changes")
+        # one version per key per window: a key updated twice between
+        # runs must merge once, with its newest state
+        w = Window.partitionBy(*cdc.keys).orderBy(F.desc(cdc.mark_col))
+        df = (df.withColumn("_cdc_rn", F.row_number().over(w))
+              .filter(F.col("_cdc_rn") == 1).drop("_cdc_rn"))
+        dels = None
+        if cdc.tombstone:
+            # soft-deleted rows ride the capture window (their
+            # mark_col bumped); route their keys to removal instead
+            # of merging the tombstoned row into the sink
+            flag = F.coalesce(F.expr(cdc.tombstone), F.lit(False))
+            dels = df.filter(flag).select(*cdc.keys)
+            df = df.filter(~flag)
+        if cdc.sync_deletes:
+            sink_keys = _sink_keys(df.sparkSession, sink_dsn, table,
+                                   cdc.keys)
+            if sink_keys is not None:
+                # live keys go through the SAME configured pipeline
+                # (filters, restriction joins — not anonymisation,
+                # keys are unmasked by contract), so a row leaving
+                # the configured subset is removed too. Keys-only on
+                # both sides: column-pruned scans, the shuffle
+                # carries keys — O(|keys|), not O(table).
+                base_run = _scoped(spec, table)
+                live = build_table_df(
+                    base_run.tables[0], source.load, spec=base_run,
+                    join_strategy=join_strategy, seed=seed,
+                    anonymise=False).select(*cdc.keys)
+                vanished = sink_keys.join(live, on=cdc.keys,
+                                          how="left_anti")
+                dels = (vanished if dels is None
+                        else dels.unionByName(vanished))
+        if dels is not None:
+            dels = dels.persist()
+            res.deleted_rows = dels.count()
+            if res.deleted_rows == 0:
+                dels.unpersist()
+                dels = None
+        if pred is None and dels is None:
+            res.rows, res.skipped = 0, True
+            return
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         try:
-            stored = marks.get(table)
-            new_max = (source.load(table)
-                       .agg(_agg_max(cdc.mark_col)).first()["m"])
-            window_open = not (new_max is None or
-                               (stored is not None
-                                and _to_json(new_max) == stored))
-            if not window_open and not cdc.sync_deletes:
-                res.rows, res.skipped = 0, stored is not None
-                continue
-            base_tspec = spec.find_table(table) or TableSpec(name=table)
-            tspec = base_tspec
-            if window_open:
-                upper = f"{table}.{cdc.mark_col} <= {_literal(new_max)}"
-                pred = (upper if stored is None else
-                        f"{table}.{cdc.mark_col} > {_from_json(stored)} "
-                        f"AND {upper}")
-            else:
-                # unchanged watermark, but sync_deletes still needs a
-                # pass: hard deletes never bump max(mark_col)
-                pred = "1=0"
-            tspec = _with_range(tspec, pred)
-            run_spec = Spec(matchers=dict(spec.matchers),
-                            tables=[tspec] + [t for t in spec.tables
-                                              if t.name != table],
-                            locale=spec.locale)
-            df = build_table_df(tspec, source.load, spec=run_spec,
-                                join_strategy=join_strategy, seed=seed)
-            masked = [c for c in [*cdc.keys, cdc.mark_col]
-                      if c in tspec.anonymise]
-            missing = [c for c in [*cdc.keys, cdc.mark_col]
-                       if c not in df.columns]
-            if masked or missing:
-                raise ValueError(
-                    f"CDC columns masked={masked} missing={missing} for "
-                    f"table {table!r}: merge keys and the mark column "
-                    "must reach the sink unmasked — an anonymised mark "
-                    "breaks version ordering and an anonymised key breaks "
-                    "identity across seed changes")
-            # one version per key per window: a key updated twice between
-            # runs must merge once, with its newest state
-            w = Window.partitionBy(*cdc.keys).orderBy(F.desc(cdc.mark_col))
-            df = (df.withColumn("_cdc_rn", F.row_number().over(w))
-                  .filter(F.col("_cdc_rn") == 1).drop("_cdc_rn"))
-            dels = None
-            if cdc.tombstone:
-                # soft-deleted rows ride the capture window (their
-                # mark_col bumped); route their keys to removal instead
-                # of merging the tombstoned row into the sink
-                flag = F.coalesce(F.expr(cdc.tombstone), F.lit(False))
-                dels = df.filter(flag).select(*cdc.keys)
-                df = df.filter(~flag)
-            if cdc.sync_deletes:
-                sink_keys = _sink_keys(df.sparkSession, sink_dsn, table,
-                                       cdc.keys)
-                if sink_keys is not None:
-                    # live keys go through the SAME configured pipeline
-                    # (filters, restriction joins — not anonymisation,
-                    # keys are unmasked by contract), so a row leaving
-                    # the configured subset is removed too. Keys-only on
-                    # both sides: column-pruned scans, the shuffle
-                    # carries keys — O(|keys|), not O(table).
-                    base_run = Spec(matchers=dict(spec.matchers),
-                                    tables=[base_tspec] +
-                                    [t for t in spec.tables
-                                     if t.name != table],
-                                    locale=spec.locale)
-                    live = build_table_df(
-                        base_tspec, source.load, spec=base_run,
-                        join_strategy=join_strategy, seed=seed,
-                        anonymise=False).select(*cdc.keys)
-                    vanished = sink_keys.join(live, on=cdc.keys,
-                                              how="left_anti")
-                    dels = (vanished if dels is None
-                            else dels.unionByName(vanished))
-            if dels is not None:
-                dels = dels.persist()
-                res.deleted_rows = dels.count()
-                if res.deleted_rows == 0:
-                    dels.unpersist()
-                    dels = None
-            if not window_open and dels is None:
-                res.rows, res.skipped = 0, True
-                continue
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            try:
-                merge_table(df, sink_dsn, table, cdc.keys, deletes=dels,
-                            partition_buckets=cdc.partition_buckets,
-                            merge_on_read=cdc.merge_on_read)
-            finally:
-                if dels is not None:
-                    dels.unpersist()
-            res.rows = obs.get["rows"]
-            if window_open:
-                marks[table] = _to_json(new_max)
-                save_marks(state_path, marks)
-        except Exception as exc:  # noqa: BLE001 — permissive mode parity
-            res.error = str(exc)
+            merge_table(df, sink_dsn, table, cdc.keys, deletes=dels,
+                        partition_buckets=cdc.partition_buckets,
+                        merge_on_read=cdc.merge_on_read)
         finally:
-            res.seconds = round(_time.time() - start, 3)
-            report.tables.append(res)
+            if dels is not None:
+                dels.unpersist()
+        res.rows = obs.get["rows"]
+        if pred is not None:
+            marks[table] = _to_json(new_max)
+            save_marks(state_path, marks)
 
-    report.tables.sort(key=lambda r: r.table)
-    report.seconds = round(_time.time() - t0, 3)
-    if strict and not report.ok:
-        failed = [t.table for t in report.tables if t.error]
-        raise RuntimeError(f"cdc steal failed for: {failed}")
-    return report
-
-
-def _agg_max(col: str):
-    from pyspark.sql import functions as F
-    return F.max(col).alias("m")
+    # serial: marks are saved after each table's merge
+    return run_tables("cdc steal", spec, source, sink_dsn, sorted(tables),
+                      capture, strict=strict)
 
 
 def _sink_keys(spark, sink_dsn: str, table: str, keys: list[str]):
@@ -330,8 +314,6 @@ def steal_incremental(spec: Spec, source, sink_dsn: str, *,
 
     ``watermarks`` maps table name -> monotonically-increasing column.
     State lives at ``state_path`` (JSON, atomically replaced)."""
-    from pyspark.sql import functions as F
-
     marks = load_marks(state_path)
     report = RunReport()
 
@@ -347,30 +329,16 @@ def steal_incremental(spec: Spec, source, sink_dsn: str, *,
 
     for table, col in sorted(watermarks.items()):
         stored = marks.get(table)
-        # snapshot the upper bound BEFORE copying: rows landing mid-copy
-        # belong to the next window
-        new_max = source.load(table).agg(F.max(col).alias("m")).first()["m"]
-        if new_max is None or (stored is not None
-                               and _to_json(new_max) == stored):
+        new_max, pred = _window(source, table, col, stored)
+        if pred is None:
             report.tables.append(TableResult(table=table, rows=0,
                                              skipped=stored is not None))
             continue
-        tspec = spec.find_table(table) or TableSpec(name=table)
-        upper = f"{table}.{col} <= {_literal(new_max)}"
-        if stored is None:
-            tspec = _with_range(tspec, upper)
-            mode = "overwrite"
-        else:
-            tspec = _with_range(
-                tspec, f"{table}.{col} > {_from_json(stored)} AND {upper}")
-            mode = "append"
-        run_spec = Spec(matchers=dict(spec.matchers),
-                        tables=[tspec] + [t for t in spec.tables
-                                          if t.name != table],
-                        locale=spec.locale)
-        part = steal(run_spec, source, sink_dsn, concurrency=concurrency,
-                     strict=strict, join_strategy=join_strategy, seed=seed,
-                     mode=mode, only_tables=[table], data_only=True)
+        part = steal(_scoped(spec, table, pred), source, sink_dsn,
+                     concurrency=concurrency, strict=strict,
+                     join_strategy=join_strategy, seed=seed,
+                     mode="overwrite" if stored is None else "append",
+                     only_tables=[table], data_only=True)
         report.tables.extend(part.tables)
         report.seconds += part.seconds
         if part.ok:
@@ -379,8 +347,6 @@ def steal_incremental(spec: Spec, source, sink_dsn: str, *,
             marks[table] = _to_json(new_max)
             save_marks(state_path, marks)
 
+    # a failed table raised inside its strict steal call above
     report.tables.sort(key=lambda r: r.table)
-    if strict and not report.ok:
-        failed = [t.table for t in report.tables if t.error]
-        raise RuntimeError(f"incremental steal failed for: {failed}")
     return report

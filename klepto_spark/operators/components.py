@@ -154,33 +154,33 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame, *,
     LSH the edges are a vanishing fraction of the corpus, so this is the
     common case at EVERY scale) and falls back to distributed
     propagation past the edge budget; labels are identical either way."""
-    if algorithm == "auto":
-        pairs = pairs.persist()  # reused by the fallback path
-        try:
-            try:
-                # local labels are bounded rows — broadcast the map join
-                comp = F.broadcast(connected_components_local(pairs))
-            except ValueError:
-                comp = connected_components(pairs)
-            comp = comp.withColumnRenamed("node", key_col)
-            return (df.select(key_col)
-                    .join(comp, key_col, "left")
-                    .select(F.col(key_col),
-                            F.coalesce(F.col("comp"),
-                                       F.col(key_col)).alias("canonical"))
-                    .withColumn("is_duplicate",
-                                F.col(key_col) != F.col("canonical")))
-        finally:
-            pairs.unpersist()
-    cc = (connected_components_star if algorithm == "star"
-          else connected_components)
-    comp = cc(pairs).withColumnRenamed("node", key_col)
+    comp = _labels(pairs, algorithm).withColumnRenamed("node", key_col)
     return (df.select(key_col)
             .join(comp, key_col, "left")
             .select(F.col(key_col),
                     F.coalesce(F.col("comp"), F.col(key_col)).alias("canonical"))
             .withColumn("is_duplicate",
                         F.col(key_col) != F.col("canonical")))
+
+
+def _labels(pairs: DataFrame, algorithm: str) -> DataFrame:
+    """(node, comp) labels of the pair graph under ``algorithm``: 'auto'
+    tries the broadcast driver-side union-find and falls back to
+    propagation past its edge budget; 'star' and 'propagation' run the
+    distributed forms."""
+    if algorithm == "auto":
+        pairs = pairs.persist()  # reused by the fallback path
+        try:
+            try:
+                # local labels are bounded rows — broadcast the map join
+                return F.broadcast(connected_components_local(pairs))
+            except ValueError:
+                return connected_components(pairs)
+        finally:
+            pairs.unpersist()
+    cc = (connected_components_star if algorithm == "star"
+          else connected_components)
+    return cc(pairs)
 
 
 #: Edges collected for the driver-side fallback are two longs + overhead —
@@ -273,20 +273,7 @@ def dedup_keep_best(df: DataFrame, pairs: DataFrame, *,
     back sorted and shuffled every row to compute an identity for the
     docs outside any cluster."""
     from pyspark.sql.window import Window
-    if algorithm == "auto":
-        pairs = pairs.persist()
-        try:
-            try:
-                comp = F.broadcast(connected_components_local(pairs))
-            except ValueError:
-                comp = connected_components(pairs)
-        finally:
-            pairs.unpersist()
-    else:
-        cc = (connected_components_star if algorithm == "star"
-              else connected_components)
-        comp = cc(pairs)
-    comp = comp.withColumnRenamed("node", key_col)
+    comp = _labels(pairs, algorithm).withColumnRenamed("node", key_col)
     scored = df.select(F.col(key_col), F.col(score_col).alias("_q"))
     member = scored.join(comp, key_col)  # inner: graph members only
     w = Window.partitionBy("comp").orderBy(F.desc("_q"), F.asc(key_col))

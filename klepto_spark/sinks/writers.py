@@ -318,7 +318,7 @@ def _fold_pending_positional(spark, directory, table, fmt, jvm, fs, tgt
 _INTEGRAL_RANK = {"tinyint": 1, "smallint": 2, "int": 3, "bigint": 4}
 
 
-def _lossless_widening(src: str, dst: str) -> bool:
+def lossless_widening(src: str, dst: str) -> bool:
     """True when every ``src`` value is exactly representable as ``dst``:
     integral -> wider integral, float -> double, and integral up to int32
     -> double (the 53-bit mantissa holds it). bigint -> double and
@@ -350,7 +350,7 @@ def align_to_contract(df: DataFrame, table_types: dict, table: str) -> DataFrame
             "merge_files to evolve the schema)")
     for f in df.schema.fields:
         want = table_types[f.name]
-        if f.dataType != want and not _lossless_widening(
+        if f.dataType != want and not lossless_widening(
                 f.dataType.simpleString(), want.simpleString()):
             raise ValueError(
                 f"delta column {f.name!r} is {f.dataType.simpleString()} "

@@ -22,6 +22,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from klepto_spark.sinks import tablefs
+from klepto_spark.sinks.writers import lossless_widening
 from klepto_spark.sources.dsn import DSN, DSNError, file_path, jdbc_url, route
 
 
@@ -66,6 +67,18 @@ def _fingerprint(root: Path) -> tuple | None:
     if now - newest / 1e9 < _RACY_WINDOW_S:
         return None
     return tuple(sorted(files))
+
+
+def _joined_type(a, b):
+    """The first of ``a``, ``b`` and double that both types widen to
+    losslessly (the sink's ``lossless_widening`` rule), or None."""
+    from pyspark.sql.types import DoubleType
+    for t in (a, b, DoubleType()):
+        if all(x == t or lossless_widening(x.simpleString(),
+                                           t.simpleString())
+               for x in (a, b)):
+            return t
+    return None
 
 
 class FileCatalog:
@@ -395,9 +408,6 @@ class FileCatalog:
         ).collect()[0]
         return int(row["skipped"] or 0)
 
-    _NUM_RANK = {"tinyint": 1, "smallint": 2, "int": 3, "bigint": 4,
-                 "float": 5, "double": 6}
-
     def _widened_schema(self, table: str):
         """Union of every parquet file's schema with LOSSLESS numeric
         widening: integral chain promotes to the widest integral,
@@ -406,7 +416,7 @@ class FileCatalog:
         raises — doubles round bigints above 2^53 (exactly the nano-
         epoch / 64-bit-id hazard), and silent coercion would corrupt.
         Non-numeric conflicts raise for the same reason."""
-        from pyspark.sql.types import DoubleType, StructField, StructType
+        from pyspark.sql.types import StructField, StructType
         root = Path(self._path(table))
         files = ([root] if root.is_file() else
                  sorted(p for p in root.rglob("*.parquet")
@@ -427,18 +437,12 @@ class FileCatalog:
                 cur = merged[fld.name]
                 a, b = cur.dataType, fld.dataType
                 if a != b:
-                    ra = self._NUM_RANK.get(a.simpleString())
-                    rb = self._NUM_RANK.get(b.simpleString())
-                    mixed = (ra is not None and rb is not None
-                             and (ra <= 4) != (rb <= 4))
-                    if ra is None or rb is None or (
-                            mixed and min(ra, rb) == 4):
+                    wide = _joined_type(a, b)
+                    if wide is None:
                         raise ValueError(
                             f"{table!r}.{fld.name}: cannot losslessly "
                             f"widen {a.simpleString()} vs "
                             f"{b.simpleString()}")
-                    wide = (DoubleType() if mixed
-                            else (a if ra >= rb else b))
                     merged[fld.name] = StructField(fld.name, wide, True)
                 elif fld.nullable and not cur.nullable:
                     merged[fld.name] = StructField(fld.name, a, True)

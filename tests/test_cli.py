@@ -33,6 +33,12 @@ def test_steal_cli_end_to_end(spark, sf_dir, tmp_path, capsys):
     assert report["ok"] and report["tables"]["customer"]["rows"] > 0
     got = spark.read.parquet(str(tmp_path / "out" / "customer.parquet"))
     assert got.count() == report["tables"]["customer"]["rows"]
+    # the report carries every per-table result field
+    from dataclasses import fields
+
+    from klepto_spark.engine import TableResult
+    assert set(report["tables"]["customer"]) == {
+        f.name for f in fields(TableResult)} - {"table"}
 
 
 def test_steal_cli_bad_config(tmp_path, capsys):
@@ -46,6 +52,21 @@ def test_steal_cli_bad_config(tmp_path, capsys):
     with pytest.raises(ValueError, match="NotAFaker"):
         main(["steal", "--from", "parquet:///nowhere", "--to",
               "parquet:///tmp/x", "--config", str(cfg)])
+
+
+@pytest.mark.parametrize("command", [
+    ["steal"],
+    ["steal-incremental", "--state", "s.json", "--watermark", "t=id"],
+    ["steal-cdc", "--state", "s.json", "--cdc", "t=ver:id"]])
+def test_steal_commands_share_their_flags(command):
+    from klepto_spark.cli import build_parser
+    args = build_parser().parse_args(
+        [*command, "--from", "parquet:///a", "--to", "parquet:///b",
+         "--config", "c.toml", "--permissive", "--seed", "s",
+         "--join-strategy", "inner"])
+    assert (getattr(args, "from"), args.to, args.config, args.permissive,
+            args.seed, args.join_strategy) == (
+        "parquet:///a", "parquet:///b", "c.toml", True, "s", "inner")
 
 
 def test_steal_incremental_cli_roundtrip(spark, tmp_path, capsys):

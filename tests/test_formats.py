@@ -1,5 +1,7 @@
 """CSV/JSON source + sink round-trips through the DSN-routed paths."""
 
+import pytest
+
 from klepto_spark.sinks.writers import write_table
 from klepto_spark.sources.catalog import connect
 
@@ -56,6 +58,38 @@ def test_merge_schema_widens_drifted_parquet(spark, tmp_path):
      .write.mode("append").parquet(f"{src}/t.parquet"))
     with _pytest.raises(Exception, match="widen|merge"):
         FileCatalog(spark, src, merge_schema=True).load("t").collect()
+
+
+#: the widened type of each numeric pair (row joined with column), "-"
+#: where no type holds both losslessly
+_NUMERIC = ["tinyint", "smallint", "int", "bigint", "float", "double"]
+_JOINED = """
+tinyint   tinyint  smallint int    bigint double double
+smallint  smallint smallint int    bigint double double
+int       int      int      int    bigint double double
+bigint    bigint   bigint   bigint bigint -      -
+float     double   double   double -      float  double
+double    double   double   double -      double double
+"""
+
+
+@pytest.mark.parametrize("row", _JOINED.strip().splitlines(),
+                         ids=lambda r: r.split()[0])
+def test_schema_widening_joins_numeric_pairs_losslessly(row):
+    """The file catalog's schema widening and the keyed-merge alignment
+    share one lossless-widening rule: a pair joins to the first of
+    (a, b, double) both widen to, and bigint + fractional has none
+    (doubles round bigints above 2^53)."""
+    from pyspark.sql import types as T
+
+    from klepto_spark.sources.catalog import _joined_type
+    by_name = {"tinyint": T.ByteType(), "smallint": T.ShortType(),
+               "int": T.IntegerType(), "bigint": T.LongType(),
+               "float": T.FloatType(), "double": T.DoubleType()}
+    a, *want = row.split()
+    for b, expect in zip(_NUMERIC, want, strict=True):
+        got = _joined_type(by_name[a], by_name[b])
+        assert (got.simpleString() if got else "-") == expect, (a, b)
 
 
 def test_orc_roundtrip_and_dsn(spark, sf_dir, tmp_path):

@@ -304,3 +304,24 @@ def test_cdc_partitioned_merge_layout(spark, tmp_path):
     got = spark.read.parquet(target)
     assert got.count() == 40
     assert got.filter("id = 3").first()["name"] == "UPDATED"
+
+
+def test_cdc_applies_the_spec_read_overrides(spark, tmp_path):
+    """steal_cdc hands the spec to the source's read tuning, as steal
+    does, so a JDBC table's PartitionColumn / ReadPartitions /
+    StrideMode steers its capture scans too."""
+    calls = []
+
+    class Recording(FileCatalog):
+        def apply_read_overrides(self, spec):
+            calls.append(spec)
+
+    _write_cdc(spark, tmp_path, [(1, 1, "a", 1.0), (2, 1, "b", 2.0)])
+    spec = Spec(tables=[TableSpec(name="t", partition_column="id",
+                                  read_partitions=2)])
+    rep = steal_cdc(spec, Recording(spark, str(tmp_path / "src")),
+                    f"parquet://{tmp_path}/out",
+                    state_path=str(tmp_path / "m.json"),
+                    tables={"t": CdcTable(mark_col="ver", keys=["id"])})
+    assert rep.ok and {t.table: t for t in rep.tables}["t"].rows == 2
+    assert calls == [spec]

@@ -187,6 +187,15 @@ def test_row_level_permissive_skips_and_counts(spark, tmp_path):
     t = {r.table: r for r in report.tables}["t"]
     assert t.rows == 3 and t.skipped_rows == 1
 
+    # ...and so does the CDC steal over the same catalog
+    from klepto_spark.incremental import CdcTable, steal_cdc
+    report = steal_cdc(Spec(), perm, f"parquet://{tmp_path}/cdc",
+                       state_path=str(tmp_path / "marks.json"),
+                       tables={"t": CdcTable(mark_col="id", keys=["id"])})
+    assert report.ok
+    t = {r.table: r for r in report.tables}["t"]
+    assert t.rows == 3 and t.skipped_rows == 1
+
 
 def test_write_files_staging_swap(spark, tmp_path):
     """File sinks publish through a staging-dir swap (the JDBC
