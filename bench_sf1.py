@@ -30,6 +30,7 @@ import time
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from bench import _sample
 from klepto_spark.session import get_spark
 
 HEAVY = ["d02_dedup_minhash_lsh", "d05_dedup_clusters",
@@ -487,11 +488,14 @@ def main() -> None:
 
     qs = entry_mod.queries()
 
-    def _median(samples: list) -> float:
-        samples = sorted(samples)
-        n = len(samples)
-        return round(samples[n // 2] if n % 2
-                     else (samples[n // 2 - 1] + samples[n // 2]) / 2, 3)
+    def _med(fn, sf_dir) -> float:
+        # SYMMETRIC untimed warmup per (query, scale): without it the
+        # sf0.1 pass eats the plan's codegen compile while the sf1 pass
+        # starts pre-warmed — the same warmth-asymmetry class the
+        # same-session rule exists to kill, inverted (review finding,
+        # round 11)
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return _sample(spark, sf_dir, fn, runs)[1]["median"]
 
     # Both scales are measured in THIS session, interleaved per query
     # (sf0.1 first — it doubles as the JVM/codegen warm-up for the sf1
@@ -505,20 +509,7 @@ def main() -> None:
     base01: dict[str, float] = {}
     for name in HEAVY:
         for sf_dir, sink in ((SRC, base01), (out_dir, medians)):
-            # SYMMETRIC untimed warmup per (query, scale): without it
-            # the sf0.1 pass eats the plan's codegen compile while the
-            # sf1 pass starts pre-warmed — the same warmth-asymmetry
-            # class the same-session rule exists to kill, inverted
-            # (review finding, round 11)
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            samples = []
-            for _ in range(max(1, runs)):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite").save()
-                samples.append(time.perf_counter() - t0)
-            sink[name] = _median(samples)
+            sink[name] = _med(qs[name], sf_dir)
         print(f"{name}: sf1 median={medians[name]}s "
               f"sf0.1 median={base01[name]}s", file=sys.stderr)
 
@@ -537,19 +528,8 @@ def main() -> None:
             docs, D.minhash_lsh_pairs(docs, per_doc_cap=D04_CAP),
             threshold=0.5)
 
-    def _med(fn, sf_dir, n_runs):
-        fn(spark, sf_dir).write.format("noop").mode(  # untimed warmup
-            "overwrite").save()
-        samples = []
-        for _ in range(max(1, n_runs)):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        return _median(samples)
-
-    d04c_sf01 = _med(_d04_capped, SRC, runs)
-    d04c_sf1 = _med(_d04_capped, out_dir, runs)
+    d04c_sf01 = _med(_d04_capped, SRC)
+    d04c_sf1 = _med(_d04_capped, out_dir)
     medians[f"d04_capped_c{D04_CAP}"] = d04c_sf1
     base01[f"d04_capped_c{D04_CAP}"] = d04c_sf01
     print(f"d04_capped_c{D04_CAP}: sf0.1={d04c_sf01}s sf1={d04c_sf1}s",

@@ -14,86 +14,47 @@ from __future__ import annotations
 import sys
 
 
-def _strip_cached_subtrees(plan: str) -> str:
-    """Drop the stored plan under every InMemoryRelation: it's the
-    DISPLAY of how the cache was built, not work this query re-executes
-    (a cache hit scans the materialised relation).
-
-    Two skip mechanisms, because cached builds render two ways:
-
-    - a plain cached plan indents strictly under its InMemoryRelation
-      line — the indent rule covers it;
-    - a cached ADAPTIVE plan renders ``== Final Plan ==`` /
-      ``== Initial Plan ==`` sections whose headers sit at a SHALLOWER
-      indent than the InMemoryRelation line itself (measured on d15's
-      plan: IMR at indent 84, its headers at 54), escaping the indent
-      rule and leaking every cached exchange into the count — the
-      round-14 audit briefly reported 46 shuffles for an 11-shuffle
-      query. The top-level string passed here is a finalised physical
-      plan and never contains those headers itself, so every header
-      opens a cache-display section: track them as a stack, dropping
-      lines until the text dedents back past the innermost header."""
-    out: list[str] = []
-    imr_skip: int | None = None
-    sections: list[int] = []   # indents of open == ... Plan == headers
-    for line in plan.splitlines():
-        indent = len(line) - len(line.lstrip(" +-:*"))
-        if "== Final Plan ==" in line or "== Initial Plan ==" in line \
-                or "== Current Plan ==" in line:
-            while sections and sections[-1] >= indent:
-                sections.pop()
-            sections.append(indent)
-            continue
-        if sections:
-            if indent > sections[-1]:
-                continue
-            while sections and sections[-1] >= indent:
-                sections.pop()
-            if sections:
-                continue
-        if imr_skip is not None:
-            if indent > imr_skip:
-                continue
-            imr_skip = None
-        if "InMemoryRelation" in line:
-            imr_skip = indent
-        out.append(line)
-    return "\n".join(out)
-
-
 #: Arrow-vectorised Python eval operators (the repo bans row-at-a-time)
 _PY_EVAL_NODES = {"ArrowEvalPythonExec", "BatchEvalPythonExec",
                   "MapInPandasExec", "FlatMapGroupsInPandasExec",
                   "FlatMapGroupsInPandasWithStateExec", "MapInArrowExec"}
 
 
+def plan_nodes(ep):
+    """The executed plan's operators, found by WALKING the JVM SparkPlan
+    tree instead of regexing its string render. The string path broke on
+    round 14's d15: a cached ADAPTIVE subplan renders ``== Final/Initial
+    Plan ==`` sections at a SHALLOWER indent than its InMemoryRelation
+    line, so indent-based stripping leaked cached exchanges into the
+    counts (46 reported vs 2 real). The tree has no such ambiguity:
+    descend through adaptive wrappers and query stages via their
+    ``plan`` members (stages hide their subtree from ``children()``),
+    and stop at InMemoryTableScan (the cached build is display, not
+    re-executed work — the suite's long-standing convention, e.g. d02
+    reports its post-cache plan)."""
+    name = ep.getClass().getSimpleName()
+    if name == "InMemoryTableScanExec":
+        return
+    if name == "AdaptiveSparkPlanExec":
+        yield from plan_nodes(ep.finalPhysicalPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from plan_nodes(ep.plan())
+        return
+    yield name, ep
+    ch = ep.children()
+    for i in range(ch.size()):
+        yield from plan_nodes(ch.apply(i))
+
+
 def audit_tree(ep) -> dict:
-    """Count plan properties by WALKING the JVM SparkPlan tree instead
-    of regexing its string render. The string path broke on round 14's
-    d15: a cached ADAPTIVE subplan renders ``== Final/Initial Plan ==``
-    sections at a SHALLOWER indent than its InMemoryRelation line, so
-    indent-based stripping leaked cached exchanges into the counts
-    (46 reported vs 2 real). The tree has no such ambiguity: descend
-    through adaptive wrappers and query stages via their ``plan``
-    members (stages hide their subtree from ``children()``), stop at
-    InMemoryTableScan (the cached build is display, not re-executed
-    work — the suite's long-standing convention, e.g. d02 reports its
-    post-cache plan), and never count ReusedExchange (a leaf pointing
-    at an exchange already counted where it runs)."""
+    """Count plan properties over :func:`plan_nodes`; never count
+    ReusedExchange (a leaf pointing at an exchange already counted where
+    it runs)."""
     out = {"shuffles": 0, "broadcasts": 0, "python_eval": 0, "topk": 0,
            "codegen_spans": 0, "pushed_filters": False,
            "partition_filters": False}
-
-    def walk(node):
-        name = node.getClass().getSimpleName()
-        if name == "InMemoryTableScanExec":
-            return
-        if name == "AdaptiveSparkPlanExec":
-            walk(node.finalPhysicalPlan())
-            return
-        if name.endswith("QueryStageExec"):
-            walk(node.plan())
-            return
+    for name, node in plan_nodes(ep):
         if name == "ShuffleExchangeExec":
             out["shuffles"] += 1
         elif name in ("BroadcastHashJoinExec",
@@ -115,11 +76,6 @@ def audit_tree(ep) -> dict:
                 opt = md.get(key)
                 if opt.isDefined() and opt.get().strip("[] "):
                     out[field] = True
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-
-    walk(ep)
     return out
 
 

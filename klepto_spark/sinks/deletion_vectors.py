@@ -448,24 +448,14 @@ def vacuum_epochs(spark: SparkSession, directory: str, table: str,
     # retirement loop or the folded epochs' upserts vanish from the
     # current view (ADVICE r06 medium). The abort decision is made from
     # the POST-recovery state below, not the rename return values.
-    news = publish_staged(
-        jvm, fs, tgt, target, f"vac-{fold[-1]['id']}", olds,
-        f"vacuum_epochs: journal for table {table!r} disappeared "
-        "mid-publish (a concurrent recovery rolled the fold back); "
-        "this fold's files were removed, the pre-fold base stands "
-        "and the folded epochs were NOT retired — re-run "
-        "vacuum_epochs")
-    news_paths = [jvm.org.apache.hadoop.fs.Path(n) for n in news]
-    # Decide from the POST-recovery state, not the rename return values
-    # (ADVICE r07): a rename can report False because the destination
-    # already exists (a prior attempt landed it), in which case recovery
-    # takes the all-news-present branch, retires the olds, and the fold
-    # IS live — retiring the epochs below is then correct, and claiming
-    # "pre-fold base kept" would misstate the table to the operator.
-    if not all(fs.exists(p) for p in news_paths):
-        raise RuntimeError(
-            f"vacuum_epochs: publish did not land for table {table!r} "
-            "(rename failed); recovery kept the pre-fold base and the "
-            "folded epochs were NOT retired — re-run vacuum_epochs")
+    # publish_staged decides from the POST-recovery state, not the
+    # rename return values (ADVICE r07): a rename can report False
+    # because the destination already exists (a prior attempt landed
+    # it), in which case recovery takes the all-news-present branch,
+    # retires the olds, and the fold IS live — retiring the epochs below
+    # is then correct.
+    publish_staged(jvm, fs, tgt, olds, f"vac-{fold[-1]['id']}",
+                   "vacuum_epochs",
+                   note=", and the folded epochs were NOT retired")
     _retire(jvm, fs, tgt, fold, contract)
     return len(fold)

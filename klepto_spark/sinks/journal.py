@@ -9,11 +9,12 @@ others — VERDICT r08 #3):
 * merge-on-read vacuum (``sinks/deletion_vectors.py``),
 * streaming dedup-index epoch folds (``streaming/dedup.py``).
 
-The journal is a JSON sidecar read and written through
-:mod:`klepto_spark.sinks.tablefs`, which also names the bin-pack journal
-and stage of a file-sink table and settles them
-(:func:`klepto_spark.sinks.tablefs.settle`) whenever a mutation opens the
-table.
+All three publish through :func:`klepto_spark.sinks.tablefs.publish_staged`
+and converge through :func:`klepto_spark.sinks.tablefs.recover_publish`,
+each with its own journal and stage names; the journal is a JSON sidecar
+read and written through :mod:`klepto_spark.sinks.tablefs`, which
+settles a file-sink table's bin-pack publish whenever a mutation opens
+the table.
 
 Protocol: stage the replacement files, write a ``{olds, news}`` journal,
 rename the news into place, and only then delete the olds — olds retire

@@ -31,9 +31,10 @@ a fixed quantile grid (not raw values), so skewed distributions still
 spread evenly across files.
 
 The table's sidecar names, the pending-epoch test, the directory swap
-:func:`optimize_table` publishes with, and the bin-pack journal's settle
-all live in :mod:`klepto_spark.sinks.tablefs`; both mutations here open
-the table through its ``open_table``.
+:func:`optimize_table` publishes with, the staged publish of
+:func:`compact_small_files` and the crash settle all live in
+:mod:`klepto_spark.sinks.tablefs`; both mutations here open the table
+through its ``open_table``.
 """
 
 from __future__ import annotations
@@ -46,7 +47,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from klepto_spark.sinks.tablefs import (
     BINPACK_STAGE, DV_LOG, MANIFEST, PDV_LOG, drop, is_bucket_layout,
-    open_table, pending, publish_staged, sub, swap_dir, table_path)
+    open_table, pending, publish_staged, sub, swap_dir, swap_stage,
+    table_path)
 from klepto_spark.sinks.tablefs import invalidate_manifest  # noqa: F401
 
 _GRID_BITS = 16  # 65536 quantile cells per z-column
@@ -215,12 +217,12 @@ def optimize_table(spark: SparkSession, directory: str, table: str,
                    sort_by: Sequence[str] | None = None,
                    n_files: int = 32) -> int:
     """OPTIMIZE for a catalog table: rewrite it clustered (z-order or
-    sort) with the min/max manifest, published by atomic directory swap
-    (the file-sink staging discipline — readers see old or new, never
-    half). Parquet-only (the manifest reads parquet footers). Refuses
-    tables with pending merge-on-read or positional epochs: compact
-    first, clustering rewrites every file and would strand their state.
-    Returns the number of files written."""
+    sort) with the min/max manifest, published like every whole-table
+    rewrite (:func:`~klepto_spark.sinks.tablefs.swap_dir`). Parquet-only
+    (the manifest reads parquet footers). Refuses tables with pending
+    merge-on-read or positional epochs: compact first, clustering
+    rewrites every file and would strand their state. Returns the number
+    of files written."""
     if fmt != "parquet":
         raise ValueError("optimize_table requires parquet (footer manifest)")
     if (zorder_by is None) == (sort_by is None):
@@ -239,16 +241,15 @@ def optimize_table(spark: SparkSession, directory: str, table: str,
             "optimize would flatten the key-routed directories the merge "
             "depends on — the two layouts are alternatives, not "
             "composable")
-    staging = jvm.org.apache.hadoop.fs.Path(target + "._optstage")
-    old = jvm.org.apache.hadoop.fs.Path(target + "._optold")
-    drop(fs, staging, old)
+    staging = swap_stage(jvm, tgt)
+    drop(fs, staging)
     df = spark.read.parquet(target)
     if zorder_by is not None:
         n = write_zordered(df, str(staging), list(zorder_by),
                            n_files=n_files)
     else:
         n = write_sorted(df, str(staging), list(sort_by), n_files=n_files)
-    swap_dir(fs, tgt, staging, old, target)
+    swap_dir(jvm, fs, tgt, staging, target)
     return n
 
 
@@ -296,10 +297,5 @@ def compact_small_files(spark: SparkSession, directory: str, table: str,
         jvm.org.apache.hadoop.fs.Path(p)).getLen() for p in small)
     n_out = max(1, int(total_bytes // (target_mb * 1024 * 1024)) + 1)
     merged.repartition(n_out).write.mode("overwrite").parquet(str(stage))
-    publish_staged(
-        jvm, fs, tgt, target, "bp", small,
-        f"compact_small_files: journal for {table!r} disappeared "
-        "mid-publish (a concurrent recovery rolled the plan back); "
-        "this pack's files were removed and the pre-pack layout "
-        "stands — re-run compact_small_files")
+    publish_staged(jvm, fs, tgt, small, "bp", "compact_small_files")
     return len(small)

@@ -44,9 +44,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from klepto_spark.sinks.tablefs import (
-    DV_LOG, DV_META, PDV_LOG, drop, epoch_log, epoch_name, hadoop_fs,
-    invalidate_manifest, open_table, pending, read_json, sub, table_path,
-    write_json)
+    DV_LOG, DV_META, PDV_LOG, PDV_RETIRED, drop, epoch_log, epoch_name,
+    hadoop_fs, invalidate_manifest, open_table, pending, read_json, sub,
+    table_path, write_json)
 
 _PDV_DIR = "_pdv"
 _PDV_STAGE = "_pdvstage"
@@ -334,7 +334,7 @@ def compact_files_pdv(spark: SparkSession, directory: str, table: str,
                 finals.append(f"pdvc-{fid}-{k}-{name}")
                 k += 1
         plan_files.append({"dir": str(parent), "name": name,
-                           "retired": f"_retired.{name}",
+                           "retired": f"{PDV_RETIRED}{name}",
                            "staged": staged, "finals": finals})
     # floor bump BEFORE the publish renames: a crash after the bump but
     # before publish only over-refuses history (safe); the reverse order

@@ -11,8 +11,10 @@ per-table transactional atomicity (one txn per table, dumper.go:74-99) is
 the STAGING-SWAP: all partitions load a staging table in parallel, then a
 single transaction publishes it (rename for overwrite, INSERT..SELECT for
 append) — readers never observe a half-loaded table and the bulk write
-stays parallel (SURVEY §7 hard-part 3). ``atomic=False`` writes directly
-(partition-level commits become visible as they land).
+stays parallel (SURVEY §7 hard-part 3). ``write_jdbc(atomic=False)``
+writes directly (partition-level commits become visible as they land).
+File sinks always publish through :mod:`klepto_spark.sinks.tablefs`: a
+staged directory swap, or, for an append, a move of the staged files.
 """
 
 from __future__ import annotations
@@ -22,9 +24,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from klepto_spark.sinks.tablefs import (
-    BUCKET_COL, LAYOUT_FILE, PDV_LOG, drop, hadoop_fs, is_bucket_layout,
-    open_table, pending, read_contract, read_layout, swap_dir, table_path,
-    write_contract, write_layout)
+    BUCKET_COL, LAYOUT_FILE, PDV_LOG, drop, is_bucket_layout, open_table,
+    pending, read_contract, read_layout, sub, swap_dir, swap_stage,
+    table_path, write_contract, write_layout)
 from klepto_spark.sources.dsn import DSN, DSNError, file_path, jdbc_url, route
 
 
@@ -100,43 +102,33 @@ def pg_fk_defs_sql(table: str) -> str:
 
 
 STAGING_SUFFIX = "_klepto_staging"
-_OLD_SUFFIX = "_klepto_old"
 
 
 def write_files(df: DataFrame, directory: str, table: str, fmt: str,
-                mode: str = "overwrite", atomic: bool = True) -> None:
+                mode: str = "overwrite") -> None:
     """File sink with the same publish discipline as the JDBC sink: the
-    job writes a ``_klepto_staging`` directory in full parallel, and only
-    a successful job renames it into place — a failed or killed write
-    never leaves the target half-replaced (the JDBC staging-table swap,
-    applied to directories). Directory rename is atomic on HDFS and posix
-    filesystems; on object stores without atomic rename, pair this with a
-    rename-committing layer or keep ``atomic=False`` + versioned paths.
+    job writes the table's stage in full parallel, and only a successful
+    job publishes it through :func:`~klepto_spark.sinks.tablefs.swap_dir`
+    — a failed or killed write never leaves the target half-replaced (the
+    JDBC staging-table swap, applied to directories). Directory rename is
+    atomic on HDFS and posix filesystems; on object stores without atomic
+    rename, pair this with a rename-committing layer.
 
     ``mode='append'`` stages the new files the same way, then moves the
     staged data files into the live directory under collision-free names:
     readers never observe a partially-written FILE, and nothing moves
     unless the whole job succeeded."""
     target = table_path(directory, table, fmt)
-
-    def _save(path: str, m: str) -> None:
-        writer = df.write.format(fmt).mode(m)
+    jvm, fs, tgt = open_table(df.sparkSession, directory, table, fmt)
+    staging = swap_stage(jvm, tgt)
+    drop(fs, staging)
+    try:
+        writer = df.write.format(fmt).mode("overwrite")
         if fmt == "csv":
             writer = writer.option("header", "true")
-        writer.save(path)
-
-    if not atomic:
-        _save(target, mode)
-        return
-
-    jvm, fs, tgt = hadoop_fs(df.sparkSession, target)
-    staging = jvm.org.apache.hadoop.fs.Path(target + STAGING_SUFFIX)
-    old = jvm.org.apache.hadoop.fs.Path(target + _OLD_SUFFIX)
-    drop(fs, staging, old)
-    try:
-        _save(str(staging), "overwrite")
+        writer.save(str(staging))
         if mode == "overwrite" or not fs.exists(tgt):
-            swap_dir(fs, tgt, staging, old, target)
+            swap_dir(jvm, fs, tgt, staging, target)
         else:  # append into a live directory, file-at-a-time
             import uuid
             run_id = uuid.uuid4().hex[:12]
@@ -144,11 +136,10 @@ def write_files(df: DataFrame, directory: str, table: str, fmt: str,
                 name = status.getPath().getName()
                 if name.startswith(("_", ".")):
                     continue  # _SUCCESS / hidden commit metadata
-                dest = jvm.org.apache.hadoop.fs.Path(
-                    tgt, f"part-{run_id}-{name.removeprefix('part-')}")
+                dest = sub(jvm, tgt,
+                           f"part-{run_id}-{name.removeprefix('part-')}")
                 if not fs.rename(status.getPath(), dest):
                     raise IOError(f"cannot append {name} into {target}")
-            fs.delete(staging, True)
     finally:
         drop(fs, staging)
 
@@ -288,7 +279,7 @@ def merge_files(df: DataFrame, directory: str, table: str, fmt: str,
         merged = kept.unionByName(df)
     # the staged write reads the live directory lazily BEFORE the rename
     # publishes, so read-rewrite-swap is safe in one pass
-    write_files(merged, directory, table, fmt, mode="overwrite", atomic=True)
+    write_files(merged, directory, table, fmt, mode="overwrite")
 
 
 def table_reader(spark, fmt: str, contract=None):
@@ -380,33 +371,36 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
     :func:`merge_files` documents).
 
     Atomicity is PER BUCKET (each bucket directory is either fully old
-    or fully new): the publish renames the live bucket aside to an
-    underscore-prefixed retirement dir (invisible to Spark's file
-    listing), renames the staged bucket in, then drops the retired one —
-    a failed rename rolls the old bucket back, and leftover retirement
-    dirs from a crash are restored at the start of the next merge, so
-    re-running converges. For all-or-nothing semantics over every
+    or fully new; :func:`~klepto_spark.sinks.tablefs.swap_dir`), and the
+    next mutation's ``open_table`` settles a bucket a crash left retired,
+    so re-running converges. For all-or-nothing semantics over every
     bucket, fall back to :func:`merge_files`."""
     from pyspark.sql import functions as F
     spark = df.sparkSession
     target = table_path(directory, table, fmt)
     jvm, fs, tgt = open_table(spark, directory, table, fmt)
-    _recover_retired_buckets(jvm, fs, tgt)
     if fs.exists(tgt):
         _fold_pending_positional(spark, directory, table, fmt, jvm, fs, tgt)
 
-    def _write(out: DataFrame, path: str) -> None:
+    staging = swap_stage(jvm, tgt)
+
+    def _stage(out: DataFrame) -> None:
+        drop(fs, staging)
         writer = out.write.format(fmt).mode("overwrite").partitionBy(BUCKET_COL)
         if fmt == "csv":
             writer = writer.option("header", "true")
-        writer.save(path)
+        writer.save(str(staging))
 
     if not fs.exists(tgt):
         delta = df.withColumn(BUCKET_COL, bucket_expr(keys, n_buckets))
         if deletes is not None:
             delta = delta.join(deletes.select(*keys).distinct(), on=keys,
                                how="left_anti")
-        _write(delta, target)
+        try:
+            _stage(delta)
+            swap_dir(jvm, fs, tgt, staging, target)
+        finally:
+            drop(fs, staging)
         write_contract(jvm, fs, tgt, df.schema)
         write_layout(jvm, fs, tgt, n_buckets, keys)
         return
@@ -462,64 +456,21 @@ def merge_files_partitioned(df: DataFrame, directory: str, table: str,
     kept = current.join(gone.distinct(), on=keys, how="left_anti")
     merged = kept.unionByName(delta.select(*kept.columns))
 
-    staging = jvm.org.apache.hadoop.fs.Path(target + STAGING_SUFFIX)
-    drop(fs, staging)
     try:
-        _write(merged, str(staging))
+        _stage(merged)
         for b in sorted(touched):
-            src_dir = jvm.org.apache.hadoop.fs.Path(
-                str(staging), f"{BUCKET_COL}={b}")
-            dst_dir = jvm.org.apache.hadoop.fs.Path(
-                str(tgt), f"{BUCKET_COL}={b}")
-            old_dir = jvm.org.apache.hadoop.fs.Path(
-                str(tgt), _retired_bucket(b))
-            drop(fs, old_dir)
-            had_old = fs.exists(dst_dir)
-            if had_old and not fs.rename(dst_dir, old_dir):
-                raise IOError(f"cannot retire bucket {b} of {target}")
-            if fs.exists(src_dir):  # bucket may be delete-only -> absent
-                if not fs.rename(src_dir, dst_dir):
-                    if had_old:  # roll the previous bucket back
-                        fs.rename(old_dir, dst_dir)
-                    raise IOError(f"cannot publish bucket {b} of {target}")
-            if had_old:
-                fs.delete(old_dir, True)
+            bucket = f"{BUCKET_COL}={b}"
+            staged = sub(jvm, staging, bucket)
+            # a delete-only bucket has no staged directory
+            swap_dir(jvm, fs, sub(jvm, tgt, bucket),
+                     staged if fs.exists(staged) else None,
+                     f"bucket {b} of {target}")
     finally:
         drop(fs, staging)
     if contract is None:  # heal a pre-sidecar layout after a clean merge
         write_contract(jvm, fs, tgt, delta.schema)
     if layout is None:  # record routing params for the default-path delegate
         write_layout(jvm, fs, tgt, n_buckets, keys)
-
-
-_RETIRED_PREFIX = "_retired."
-
-
-def _retired_bucket(b) -> str:
-    # underscore prefix: Spark's listing ignores the directory; the name
-    # must NOT contain '=' or partition discovery would parse it as a
-    # conflicting partition column
-    return f"{_RETIRED_PREFIX}{b}"
-
-
-def _recover_retired_buckets(jvm, fs, tgt) -> None:
-    """Crash recovery: a rename sequence interrupted between 'retire old'
-    and 'publish new' leaves the bucket only in its retirement dir —
-    restore it so the subsequent merge sees the pre-crash data; if the
-    publish DID land, the leftover retirement dir is just deleted."""
-    if not fs.exists(tgt):
-        return
-    for status in fs.listStatus(tgt):
-        name = status.getPath().getName()
-        if not name.startswith(_RETIRED_PREFIX):
-            continue
-        bucket = name[len(_RETIRED_PREFIX):]
-        live = jvm.org.apache.hadoop.fs.Path(
-            str(tgt), f"{BUCKET_COL}={bucket}")
-        if fs.exists(live):
-            fs.delete(status.getPath(), True)
-        elif not fs.rename(status.getPath(), live):
-            raise IOError(f"cannot recover retired bucket {name}")
 
 
 def merge_jdbc(df: DataFrame, dsn: DSN, table: str, keys: list[str],

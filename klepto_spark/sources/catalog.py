@@ -149,7 +149,12 @@ class FileCatalog:
                            "false")
 
     def tables(self) -> list[str]:
-        return sorted(p.stem for p in self.directory.glob(f"*.{self.fmt}"))
+        """The tables in the directory, counting one a crash left only
+        under its retired swap name (the next load settles it)."""
+        return sorted({p.stem for p in self.directory.glob(f"*.{self.fmt}")}
+                      | {Path(live).stem
+                         for live in tablefs.retired_local(self.directory)
+                         if live.endswith(f".{self.fmt}")})
 
     def columns(self, table: str) -> list[str]:
         return self.load(table).columns
@@ -199,48 +204,63 @@ class FileCatalog:
         return df
 
     def _settle(self, table: str) -> bool:
-        """Settle a crashed bin-pack publish before a read, and return
-        whether bin-pack remnants were present.
+        """Settle a crashed bin-pack publish or directory swap before a
+        read, and return whether remnants were present.
 
         A crash mid bin-pack publish leaves transient duplicates (news
-        moved in before olds deleted). The read path replays or rolls back
-        the journaled plan (``tablefs.open_table``, the writers' settle)
-        so every catalog read sees a settled file set. The checks are
-        driver-side existence tests; the JVM hop is paid only when a
+        moved in before olds deleted); a crash mid swap can leave the
+        table, or one of its buckets, only under its retired name. The
+        read path settles either (``tablefs.open_table``, the writers'
+        settle) so every catalog read sees a settled file set. The checks
+        are driver-side existence tests; the JVM hop is paid only when a
         remnant is actually present.
 
-        LEASE GATE (ADVICE r05): recovery deletes staged/new files, a
-        destructive mutation, and a reader racing a LIVE publish in
-        another process must not mistake it for a crash. A journal
-        younger than the lease raises instead of recovering (retry once
-        the writer settles, or run ``compact_small_files``/the
-        writer-side recovery explicitly); older remnants recover. The
-        writer's publish window is seconds, so a fresh journal almost
-        always means a publish in flight. The lease applies ONLY when the
-        journal exists: before ``_binpack.json`` lands nothing has been
-        published and recovery merely drops the stage, so blocking reads
-        on a bare stage remnant would buy no safety (ADVICE r06). A live
-        writer whose pre-journal stage is dropped fails its stage write
-        and retries; the table never regresses."""
+        LEASE GATE (ADVICE r05): recovery is a destructive mutation, and a
+        reader racing a LIVE publish in another process must not mistake
+        it for a crash. A bin-pack journal, or a swap stage beside a
+        retired copy, younger than the lease raises instead of settling
+        (retry once the writer settles, or run the writer-side recovery
+        explicitly); older remnants settle. The writer's publish window is
+        seconds, so a fresh one almost always means a publish in flight.
+        The swap is timed by its stage, whose mtime moves with every
+        rename out of it; a retired directory keeps its own mtime. The
+        bin-pack lease applies ONLY when the journal exists: before
+        ``_binpack.json`` lands nothing has been published and recovery
+        merely drops the stage, so blocking reads on a bare stage remnant
+        would buy no safety (ADVICE r06). A live writer whose pre-journal
+        stage is dropped fails its stage write and retries; the table
+        never regresses."""
         root = Path(self._path(table))
         journal = root / tablefs.BINPACK_JOURNAL
-        remnants = [p for p in (journal, root / tablefs.BINPACK_STAGE)
-                    if p.exists()]
-        if remnants:
-            lease = float(os.environ.get(
-                "KLEPTO_BINPACK_LEASE_SEC", "60"))
-            age = time.time() - max(p.stat().st_mtime for p in remnants)
-            if age < lease and journal.exists():
+        binpack = [p for p in (journal, root / tablefs.BINPACK_STAGE)
+                   if p.exists()]
+        sibling = root.with_name(
+            tablefs.swap_name(root.name, tablefs.SWAP_RETIRED))
+        retired = [sibling] if sibling.exists() else []
+        retired += tablefs.retired_local(root).values()
+        if not binpack and not retired:
+            return False
+        lease = float(os.environ.get("KLEPTO_BINPACK_LEASE_SEC", "60"))
+        stage = root.with_name(tablefs.swap_name(root.name,
+                                                 tablefs.SWAP_STAGE))
+        for held, marks, what in (
+                (journal.exists(), binpack, "a bin-pack publish journal"),
+                (retired and stage.exists(), [stage], "a swap stage")):
+            if not held:
+                continue
+            try:
+                age = time.time() - max(p.stat().st_mtime for p in marks)
+            except FileNotFoundError:  # the writer finished meanwhile
+                continue
+            if age < lease:
                 raise RuntimeError(
-                    f"table {table!r} has a bin-pack publish journal "
-                    f"{age:.0f}s old (lease {lease:.0f}s): a compaction "
-                    "may be publishing in another process. Retry after "
-                    "it settles, or — if the writer is known dead — "
-                    "re-run the compaction / lower "
-                    "KLEPTO_BINPACK_LEASE_SEC to force recovery.")
-            tablefs.open_table(self.spark, str(self.directory), table,
-                               self.fmt)
-        return bool(remnants)
+                    f"table {table!r} has {what} {age:.0f}s old (lease "
+                    f"{lease:.0f}s): a writer may be publishing in "
+                    "another process. Retry after it settles, or — if "
+                    "the writer is known dead — re-run the mutation / "
+                    "lower KLEPTO_BINPACK_LEASE_SEC to force recovery.")
+        tablefs.open_table(self.spark, str(self.directory), table, self.fmt)
+        return True
 
     def _resolve(self, table: str) -> DataFrame:
         """Read the table as it stands: file listing, schema, and the

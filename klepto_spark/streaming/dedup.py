@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, functions as F
 from klepto_spark.operators import (bloom_portable as B, cms_portable as C,
                                     dedup as D, hll_portable as H,
                                     similarity as S, text as T)
+from klepto_spark.sinks.tablefs import (drop, hadoop_fs, publish_staged,
+                                        recover_publish, sub)
 
 FP_COL = "_fp"
 
@@ -292,11 +294,11 @@ def cms(value_col: str, group_cols: list[str], w: int | None = None,
 # ep=<batch> directory per micro-batch FOREVER -- a year of 1-minute
 # batches is ~500k small parquet dirs every probe must list and read.
 # compact_index_epochs folds committed epochs below a caller-supplied
-# horizon into flat base files, journaled and lease-gated exactly like
-# the table-store binpack (sources/catalog.py compact_small_files,
-# sinks/deletion_vectors.py vacuum_epochs): a crash at ANY point leaves
-# a journal that the next fold -- or the next probe, via the stale-
-# journal check in _prior_index_paths -- converges forward or back.
+# horizon into the oldest one's dir through the table-store bin-pack's
+# journaled publish (sinks/tablefs.py publish_staged), lease-gated: a
+# crash at ANY point leaves a journal that the next fold -- or the next
+# probe, via the stale-journal check in _prior_index_paths -- converges
+# forward or back.
 # ---------------------------------------------------------------------------
 
 _FOLD_JOURNAL = "_epochfold.json"
@@ -310,21 +312,6 @@ def _fold_lease() -> float:
                                  FOLD_LEASE_SEC))
 
 
-def _recover_fold(jvm, fs, root) -> None:
-    """Converge a crashed fold. The journal lists old entries (flat base
-    files + folded ep dirs) and the new base file names; olds are only
-    deleted AFTER every new file landed, so the journal state decides:
-    all news present -> roll forward (delete remaining olds); any news
-    missing -> roll back (delete partial news, olds intact). Either way
-    the journal and stage clear, and probe results are unchanged.
-    Shared protocol: :mod:`klepto_spark.sinks.journal`; journal entries
-    are names relative to the index root."""
-    from klepto_spark.sinks.journal import recover
-    P = jvm.org.apache.hadoop.fs.Path
-    recover(jvm, fs, root, _FOLD_JOURNAL, _FOLD_STAGE,
-            to_path=lambda s: P(root, s))
-
-
 def _prior_index_paths(spark, index_path: str, epoch_id: int) -> list[str]:
     """The sorted index view epoch ``epoch_id`` probes: every flat base
     entry plus strictly EARLIER ep= dirs. Pinning ep < epoch_id makes a
@@ -333,17 +320,14 @@ def _prior_index_paths(spark, index_path: str, epoch_id: int) -> list[str]:
     STALE fold journal (crashed fold) is converged first so the listing
     never mixes a partial fold's news with the olds they replace; a
     YOUNG journal is a live concurrent fold, left alone (olds serve)."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    root = P(index_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm, fs, root = hadoop_fs(spark, index_path)
     if not fs.exists(root):
         return []
-    jp = P(root, _FOLD_JOURNAL)
+    jp = sub(jvm, root, _FOLD_JOURNAL)
     if fs.exists(jp):
         age = _time.time() - fs.getFileStatus(jp).getModificationTime() / 1e3
         if age >= _fold_lease():
-            _recover_fold(jvm, fs, root)
+            recover_publish(jvm, fs, root, _FOLD_JOURNAL, _FOLD_STAGE)
     return sorted(path for path, ep in _entries(fs, root).values()
                   if ep is None or ep < epoch_id)
 
@@ -393,13 +377,10 @@ def compact_index_epochs(spark, index_path: str,
     landed) before folding. Olds retire only after every new file is in
     place, so a crash at any point leaves duplicates at worst, never a
     missing epoch."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    root = P(index_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    jvm, fs, root = hadoop_fs(spark, index_path)
     if not fs.exists(root):
         return 0
-    jp = P(root, _FOLD_JOURNAL)
+    jp = sub(jvm, root, _FOLD_JOURNAL)
     if fs.exists(jp):
         age = _time.time() - fs.getFileStatus(jp).getModificationTime() / 1e3
         if age < _fold_lease():
@@ -408,7 +389,7 @@ def compact_index_epochs(spark, index_path: str,
                 f"(journal {age:.0f}s old < lease {_fold_lease():.0f}s); "
                 "retry after the lease, or raise "
                 "KLEPTO_EPOCHFOLD_LEASE_SEC if this journal is yours")
-        _recover_fold(jvm, fs, root)
+        recover_publish(jvm, fs, root, _FOLD_JOURNAL, _FOLD_STAGE)
     # adopted flat base / _meta entries are not this fold's business
     folded = {ep: name for name, (_, ep) in _entries(fs, root).items()
               if ep is not None and ep < max_epoch_exclusive}
@@ -416,56 +397,30 @@ def compact_index_epochs(spark, index_path: str,
         return 0  # nothing to merge
     dest = folded[min(folded)]
     union = spark.read.parquet(
-        *[str(P(root, folded[e])) for e in sorted(folded)])
-    stage = P(root, _FOLD_STAGE)
-    if fs.exists(stage):
-        fs.delete(stage, True)
+        *[str(sub(jvm, root, folded[e])) for e in sorted(folded)])
+    stage = sub(jvm, root, _FOLD_STAGE)
+    drop(fs, stage)
     # coalesce (no shuffle): each output task drains many small inputs;
     # the cap bounds the folded dir's file count independent of how
     # many epochs went in
     union.coalesce(min(len(folded), 32)).write.mode("overwrite").parquet(
         str(stage))
-    staged = [st.getPath() for st in fs.listStatus(stage)
-              if st.getPath().getName().endswith(".parquet")]
     # olds: every folded dir EXCEPT the destination, plus the
     # destination's own pre-fold data files (the fold files replace
     # them in place); news land inside the destination dir
-    dest_files = [f"{dest}/{st.getPath().getName()}"
-                  for st in fs.listStatus(P(root, dest))
-                  if st.getPath().getName().endswith(".parquet")]
     olds = [folded[e] for e in sorted(folded) if folded[e] != dest]
-    olds += dest_files
-    news = [f"{dest}/fold-{max_epoch_exclusive}-{i}-{p.getName()}"
-            for i, p in enumerate(staged)]
-    from klepto_spark.sinks.journal import publish_renames, write_plan
-    write_plan(fs, jp, olds, news)
+    olds += [f"{dest}/{st.getPath().getName()}"
+             for st in fs.listStatus(sub(jvm, root, dest))
+             if st.getPath().getName().endswith(".parquet")]
     # Lease-expiry race guard: if the rename phase outlives the journal
-    # lease (object-store copies, GC pause), a concurrent probe's
-    # _recover_fold may converge the root while this loop keeps
-    # renaming. The shared helper re-checks the journal after each
-    # rename and reads the OLDS to decide which way the peer went:
-    # roll-forward (olds gone) means the fold is already published and
-    # the news must stand; roll-back (olds intact) means this fold's
-    # landed files are orphans to remove before raising (ADVICE r08
-    # high: deleting news after a peer's roll-forward destroyed both
-    # copies).
-    outcome = publish_renames(
-        jvm, fs, root, _FOLD_JOURNAL, lambda s: P(root, s),
-        staged, news, olds,
-        lost_journal_msg=(
-            f"compact_index_epochs: journal at {index_path!r} "
-            "disappeared mid-publish (a concurrent recovery rolled the "
-            "fold back after the lease expired); this fold's files were "
-            "removed and the pre-fold layout stands — raise "
-            "KLEPTO_EPOCHFOLD_LEASE_SEC above the worst-case publish "
-            "time and re-run"))
-    if outcome == "renamed":
-        # converge from the post-rename state: all news present -> the
-        # olds retire and the journal clears; anything less rolls back
-        _recover_fold(jvm, fs, root)
-    if not all(fs.exists(P(root, n)) for n in news):
-        raise RuntimeError(
-            f"compact_index_epochs: publish did not land at "
-            f"{index_path!r} (rename failed); the pre-fold layout was "
-            "kept — re-run compact_index_epochs")
+    # lease (object-store copies, GC pause), a concurrent probe may
+    # converge the root while the publish keeps renaming; the publish
+    # re-checks the journal after each rename and reads the OLDS to
+    # decide which way the peer went (ADVICE r08 high).
+    publish_staged(
+        jvm, fs, root, olds, f"fold-{max_epoch_exclusive}",
+        "compact_index_epochs", dest=dest, journal=_FOLD_JOURNAL,
+        stage=_FOLD_STAGE,
+        note=" (raise KLEPTO_EPOCHFOLD_LEASE_SEC above the worst-case "
+             "publish time if a concurrent recovery took it)")
     return len(folded)

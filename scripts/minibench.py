@@ -17,6 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from bench import _sample  # noqa: E402
 from klepto_spark.operators import dedup  # noqa: E402
 from klepto_spark.session import get_spark  # noqa: E402
 
@@ -44,16 +45,8 @@ def main() -> None:
                 prev = cur
                 break
             prev = cur
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        samples.sort()
-        n = len(samples)
-        med = (samples[n // 2] if n % 2
-               else (samples[n // 2 - 1] + samples[n // 2]) / 2)
-        out[name] = {"best": round(samples[0], 3), "median": round(med, 3)}
+        best, stats = _sample(spark, sf_dir, fn, runs)
+        out[name] = {"best": best, "median": stats["median"]}
         dedup.release_caches()
         print(f"{name}: best={out[name]['best']} median={out[name]['median']}",
               file=sys.stderr)

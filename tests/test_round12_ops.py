@@ -99,14 +99,15 @@ def test_a29_a31_scan_lineitem_once(spark, sf_dir):
     second lineitem scan: the inner aggregate persists and both
     consumers read the cache (the a26 one-scan pattern)."""
     import __spark_entry__ as entry_mod
-    from klepto_spark.plans.audit import _strip_cached_subtrees
+    from klepto_spark.plans.audit import plan_nodes
     for name in ["a29_top_revenue_supplier", "a31_concentrated_suppliers"]:
         df = entry_mod.queries()[name](spark, sf_dir)
-        df.count()  # materialise the cache so the display shows reuse
-        plan = _strip_cached_subtrees(
-            df._jdf.queryExecution().executedPlan().toString())
-        n = sum(1 for ln in plan.splitlines()
-                if "FileScan" in ln and "lineitem" in ln)
+        df.count()  # materialise the cache so the plan shows reuse
+        # the walk stops at InMemoryTableScanExec: a cache hit is not a scan
+        n = sum(1 for kind, node in plan_nodes(
+                    df._jdf.queryExecution().executedPlan())
+                if kind == "FileSourceScanExec"
+                and "lineitem" in node.metadata().get("Location").get())
         assert n <= 1, (name, n)
 
 

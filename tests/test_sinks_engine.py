@@ -2,6 +2,7 @@
 (reference surfaces: SURVEY §2.1 S6-S12, §2.10 X1-X5, §2.8)."""
 
 import io
+import os
 
 import pytest
 
@@ -555,30 +556,127 @@ def test_merge_partitioned_equivalent_to_plain(spark, tmp_path, seed):
     assert got == want
 
 
-def test_partitioned_merge_recovers_retired_buckets(spark, tmp_path):
-    """A crash between 'retire old bucket' and 'publish new bucket'
-    leaves the data only in the _retired_ dir (invisible to readers);
-    the next merge restores it before doing anything — no data loss."""
-    import os
+def _crash_mid_swap(spark, target, live, legacy=False):
+    """Hand-build the state a swap killed between its two renames leaves:
+    ``live`` (the table dir or one bucket of it) only under its retired
+    name, and a half-written stage beside the table. ``legacy`` retires a
+    bucket ``_kp=<b>`` as ``_retired.<b>``, the name earlier releases
+    used, whose stage had another name. Returns the retired path and the
+    stage (None for ``legacy``)."""
     import shutil
-    from klepto_spark.sinks.writers import (
-        BUCKET_COL, bucket_expr, merge_files_partitioned)
-    base = spark.range(0, 40).selectExpr("id", "concat('v', id) AS tag")
-    merge_files_partitioned(base, str(tmp_path), "t", "parquet",
-                            keys=["id"], n_buckets=4)
-    target = os.path.join(str(tmp_path), "t.parquet")
-    # simulate the crash window for bucket 2: retired, never republished
-    live = os.path.join(target, f"{BUCKET_COL}=2")
-    retired = os.path.join(target, "_retired.2")
+    from klepto_spark.sinks import tablefs
+    head, name = os.path.split(live)
+    if legacy:
+        retired = os.path.join(head, tablefs.PDV_RETIRED + name.split("=")[1])
+        shutil.move(live, retired)
+        return retired, None
+    retired = os.path.join(head, tablefs.swap_name(name, tablefs.SWAP_RETIRED))
     shutil.move(live, retired)
-    assert spark.read.parquet(target).count() < 40  # bucket invisible
+    stage = os.path.join(os.path.dirname(target), tablefs.swap_name(
+        os.path.basename(target), tablefs.SWAP_STAGE))
+    spark.range(1000).selectExpr("id", "'junk' AS tag").write.parquet(
+        f"{stage}/{name}" if live != target else stage)
+    return retired, stage
+
+
+def _swap_names_left(top):
+    from klepto_spark.sinks import tablefs
+    return sorted(n for _, dirs, files in os.walk(top) for n in dirs + files
+                  if n.endswith((tablefs.SWAP_RETIRED, tablefs.SWAP_STAGE))
+                  or n.startswith(tablefs.PDV_RETIRED))
+
+
+_SWAP_CRASH = {  # case -> (layout, the mutation run after the crash)
+    "bucket": ("bucket", "merge_files_partitioned"),
+    "bucket-legacy": ("bucket", "merge_files_partitioned"),
+    "append": ("table", "write_files"),
+    "merge": ("table", "merge_files"),
+    "optimize": ("table", "optimize_table"),
+}
+
+
+def _table_with_crash_target(spark, d, layout, n):
+    """Write an ``n``-row table ``t`` (bucketed or whole) and return the
+    table dir and the dir the crash retires (bucket 2, or the table)."""
+    from klepto_spark.sinks.writers import (
+        BUCKET_COL, merge_files_partitioned, write_files)
+    target = os.path.join(d, "t.parquet")
+    base = spark.range(0, n).selectExpr("id", "concat('v', id) AS tag")
+    if layout == "bucket":
+        merge_files_partitioned(base, d, "t", "parquet", keys=["id"],
+                                n_buckets=4)
+        return target, os.path.join(target, f"{BUCKET_COL}=2")
+    write_files(base, d, "t", "parquet")
+    return target, target
+
+
+@pytest.mark.parametrize("case", sorted(_SWAP_CRASH))
+def test_crashed_swap_settles(spark, tmp_path, case):
+    """A crash between 'retire the live dir' and 'publish the stage'
+    leaves the data only in its retired dir (invisible to readers); the
+    next mutation settles it before doing anything — no data loss, and
+    no retired or stage dir left. For the bucket cases that is bucket 2;
+    for the others the whole table."""
+    from klepto_spark.sinks.layout import optimize_table
+    from klepto_spark.sinks.writers import (
+        merge_files, merge_files_partitioned, write_files)
+    layout, op = _SWAP_CRASH[case]
+    d = str(tmp_path)
+    n = 40 if layout == "bucket" else 100
+    target, live = _table_with_crash_target(spark, d, layout, n)
+    retired, _ = _crash_mid_swap(spark, target, live,
+                                 legacy=case == "bucket-legacy")
+    if layout == "bucket":
+        assert spark.read.parquet(target).count() < n  # bucket invisible
+    else:
+        assert not os.path.exists(target)
+
     delta = spark.createDataFrame([(0, "NEW0")], "id long, tag string")
-    merge_files_partitioned(delta, str(tmp_path), "t", "parquet",
-                            keys=["id"], n_buckets=4)
+    if op == "merge_files_partitioned":
+        merge_files_partitioned(delta, d, "t", "parquet", keys=["id"],
+                                n_buckets=4)
+    elif op == "merge_files":
+        merge_files(delta, d, "t", "parquet", keys=["id"])
+    elif op == "write_files":
+        write_files(delta, d, "t", "parquet", mode="append")
+    else:
+        optimize_table(spark, d, "t", sort_by=["id"], n_files=2)
+
     got = spark.read.parquet(target)
-    assert got.count() == 40  # recovered + merged
-    assert got.filter("id = 0").first()["tag"] == "NEW0"
+    want = n + (op == "write_files")  # an append adds its row
+    assert got.count() == want  # recovered + merged
+    if op != "optimize_table":
+        assert {r["tag"] for r in got.filter("id = 0").collect()} >= {"NEW0"}
+    if op in ("merge_files", "merge_files_partitioned"):
+        assert got.filter("id = 0").first()["tag"] == "NEW0"
     assert not os.path.exists(retired)
+    assert _swap_names_left(d) == []
+
+
+@pytest.mark.parametrize("case", ["bucket", "bucket-legacy", "table"])
+def test_catalog_reads_through_a_crashed_swap(spark, tmp_path, case):
+    """During the crash window the catalog still lists the table. While
+    the stage is younger than the lease the swap may be live in another
+    process, so a load refuses and leaves it alone; past the lease a load
+    settles the swap and returns the pre-crash rows."""
+    import time
+    d = str(tmp_path)
+    target, live = _table_with_crash_target(
+        spark, d, case.split("-")[0], 40)
+    before = sorted(map(tuple, spark.read.parquet(target).collect()))
+    retired, stage = _crash_mid_swap(spark, target, live,
+                                     legacy=case == "bucket-legacy")
+    cat = FileCatalog(spark, d)
+    assert cat.tables() == ["t"]
+    if stage is not None:
+        with pytest.raises(RuntimeError, match="swap stage"):
+            cat.load("t")
+        assert os.path.isdir(retired) and os.path.isdir(stage)
+        assert not os.path.exists(live)
+        stale = time.time() - 120
+        os.utime(stage, (stale, stale))
+    assert sorted(map(tuple, cat.load("t").collect())) == before
+    assert _swap_names_left(d) == []
 
 
 def test_partitioned_merge_refuses_lossy_type_drift(spark, tmp_path):

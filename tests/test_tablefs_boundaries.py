@@ -1,12 +1,13 @@
 """The at-rest layout of a file-sink table must live in one module.
 
 ``klepto_spark/sinks/tablefs.py`` owns the table's sidecar and log names,
-the JSON sidecar read and write, and the bin-pack settle. A module that
-reads a sidecar with its own ``IOUtils`` call, spells a log or journal
-name itself, or reaches into another sink module's private helpers starts
-a copy that can drift from the others (as the bin-pack settle did, which
-only three of eight mutations ran). This reads the sources without
-importing them.
+the JSON sidecar read and write, the directory swap and the crash settle.
+A module that reads a sidecar with its own ``IOUtils`` call, spells a
+log, journal, stage or retired name itself, or reaches into another sink
+module's private helpers starts a copy that can drift from the others (as
+the bin-pack settle did, which only three of eight mutations ran, and the
+swap did, whose bucket copy alone recovered a crash). This reads the
+sources without importing them.
 """
 
 import ast
@@ -16,6 +17,10 @@ REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "klepto_spark"
 TABLEFS = PACKAGE / "sinks" / "tablefs.py"
 LAYOUT_NAMES = {"_dvlog", "_pdvlog", "_binpack.json", "_bpstage"}
+#: the swap's stage and retired suffixes, positional compaction's retired
+#: prefix, and the names the swap's earlier per-module copies spelled
+SWAP_NAMES = {".stage", ".retired", "_retired.", "_klepto_old",
+              "._optstage", "._optold"}
 
 
 def _sources():
@@ -36,7 +41,8 @@ def test_only_tablefs_spells_the_log_and_journal_names():
     offenders = {}
     for p in _sources():
         spelled = {n.value for n in ast.walk(ast.parse(p.read_text()))
-                   if isinstance(n, ast.Constant) and n.value in LAYOUT_NAMES}
+                   if isinstance(n, ast.Constant)
+                   and n.value in LAYOUT_NAMES | SWAP_NAMES}
         if spelled:
             offenders[str(p.relative_to(REPO))] = sorted(spelled)
     assert offenders == {}
